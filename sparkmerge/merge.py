@@ -270,7 +270,7 @@ def merge_partitioned(
     scanned scope, mirroring how ``@targetFilter`` scopes the reference's
     pre-count (:141-150).
     """
-    from sparkmerge.ptable import MAX_PARTITION_VALUES, canon_col
+    from sparkmerge.ptable import MAX_PARTITION_VALUES, canon_col, value_set
 
     if audit and audit_path is None:
         audit_path = default_audit_path(target)
@@ -290,21 +290,16 @@ def merge_partitioned(
         # that produced the manifest keys — Python str() disagrees with
         # Spark's rendering for booleans ('True' vs 'true') and some
         # float/double values, which would silently prune every real
-        # partition.  The limit bounds driver memory: partition VALUES (not
-        # rows) cross the driver, and a table with >MAX_PARTITION_VALUES
-        # distinct partitions is mis-partitioned — fail fast.
-        src_rows = (
-            source_df.select(canon_col(pcol).alias("p"))
-            .distinct()
-            .limit(MAX_PARTITION_VALUES + 1)
-            .collect()
-        )
-        if len(src_rows) > MAX_PARTITION_VALUES:
+        # partition.  One aggregation job; value_set bounds driver memory:
+        # partition VALUES (not rows) cross the driver, and a table with
+        # >MAX_PARTITION_VALUES distinct partitions is mis-partitioned — fail fast.
+        src_vals = source_df.agg(value_set(canon_col(pcol))).first()[0]
+        if len(src_vals) > MAX_PARTITION_VALUES:
             raise MergeValidationError(
                 f"prune_scan: source has >{MAX_PARTITION_VALUES} distinct "
                 f"{pcol!r} values; partition by a coarser key."
             )
-        in_scope = target.read_partitions(spark, [r["p"] for r in src_rows])
+        in_scope = target.read_partitions(spark, src_vals)
     else:
         in_scope = target.read(spark)
 
@@ -329,37 +324,30 @@ def merge_partitioned(
             audit_ddl=_audit_schema_ddl(plan),
         )
 
-    # The changeset feeds ≥3 jobs (changed-partition discovery, snapshot
-    # write, counts/audit); persist so badKey's arbitrary pairing — and the
-    # join itself — happen once.
+    # The changeset feeds two jobs (the aggregation below, the snapshot
+    # write) plus the audit write; persist so badKey's arbitrary pairing —
+    # and the join itself — happen once.
     cs.df.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        non_keep = cs.df.filter(F.col("_action") != ACTION_KEEP)
-        # Changed partitions under their OLD value (updates/deletes in place)
+        # ONE job returns all the commit needs: the threshold counts and the
+        # changed partitions under their OLD value (updates/deletes in place)
         # and NEW value (inserts, or updates that move a row across
         # partitions).  `_old`/`_new` struct nullity distinguishes "no row on
-        # that side" from "partition value is NULL".
-        old_vals = non_keep.filter(F.col("_old").isNotNull()).select(
-            canon_col(f"_old.{pcol}").alias("p")
-        )
-        new_vals = non_keep.filter(F.col("_new").isNotNull()).select(
-            canon_col(f"_new.{pcol}").alias("p")
-        )
-        changed_rows_p = (
-            old_vals.union(new_vals).distinct().limit(MAX_PARTITION_VALUES + 1).collect()
-        )
-        if len(changed_rows_p) > MAX_PARTITION_VALUES:
+        # that side" from "partition value is NULL".  Each set is sliced to
+        # MAX+1 values, so the union exceeds MAX exactly when the true one does.
+        non_keep = F.col("_action") != ACTION_KEEP
+        changed, before, old_vals, new_vals = cs.df.agg(
+            F.count(F.when(non_keep, 1)),
+            F.count(F.col("_old")),
+            *(value_set(F.when(non_keep & F.col(side).isNotNull(),
+                               canon_col(f"{side}.{pcol}"))) for side in ("_old", "_new")),
+        ).first()
+        changed_vals = set(old_vals) | set(new_vals)
+        if len(changed_vals) > MAX_PARTITION_VALUES:
             raise MergeValidationError(
                 f"Changeset touches >{MAX_PARTITION_VALUES} distinct partitions "
                 f"of {pcol!r}; partition by a coarser key."
             )
-        changed_vals = {r["p"] for r in changed_rows_p}
-
-        row = cs.df.agg(
-            F.count(F.when(F.col("_action") != ACTION_KEEP, 1)).alias("changed"),
-            F.count(F.col("_old")).alias("before"),
-        ).first()
-        changed, before = int(row["changed"]), int(row["before"])
 
         new_state = cs.apply_changes()
         if not changed_vals:

@@ -88,6 +88,11 @@ def canon_col(name: str) -> Column:
     return F.coalesce(F.col(name).cast("string"), F.lit(HIVE_NULL))
 
 
+def value_set(c: Column) -> Column:
+    """Aggregate: distinct non-NULL values of ``c``, at most MAX_PARTITION_VALUES+1."""
+    return F.slice(F.collect_set(c), 1, MAX_PARTITION_VALUES + 1)
+
+
 class PartitionedSnapshotTable(SnapshotTable):
     """A ``SnapshotTable`` whose versions are partition manifests.
 
@@ -170,15 +175,16 @@ class PartitionedSnapshotTable(SnapshotTable):
         """Read the committed snapshot, pruned to the given canonical
         partition values (None → all).  Each manifest entry is a leaf
         directory, so the scan's file listing IS the pruning — partitions
-        outside ``values`` are never even enumerated."""
-        parts = self.partitions(version)
+        outside ``values`` are never even enumerated.  The manifest's schema
+        is the read schema, so the scan infers nothing: a read is ONE job."""
+        m = self.manifest(version)
+        schema, parts = StructType.fromJson(m["schema"]), m["partitions"]
         if values is not None:
             parts = {k: d for k, d in parts.items() if k in set(values)}
         if not parts:
-            return spark.createDataFrame(
-                [], StructType.fromJson(self.manifest(version)["schema"])
-            )
-        return spark.read.parquet(*(os.path.join(self.path, d) for d in parts.values()))
+            return spark.createDataFrame([], schema)
+        paths = (os.path.join(self.path, d) for d in parts.values())
+        return spark.read.schema(schema).parquet(*paths)
 
     # ---- stage / commit / abort ----
 
@@ -192,12 +198,18 @@ class PartitionedSnapshotTable(SnapshotTable):
         """Stage version N+1: write ONLY the changed partitions' new data
         (one ``partitionBy`` job), carry every other partition forward by
         reference.  A changed partition that comes back empty (all rows
-        deleted) is dropped from the manifest.  Invisible until commit."""
+        deleted) is dropped from the manifest.  Invisible until commit.
+        A frame whose types differ from the manifest's (the read schema) is
+        cast by name to them, so a wider source type cannot make the committed
+        version unreadable; a value that does not fit raises under ANSI."""
         m = self.manifest()
-        pcol = m["partition_by"]
+        pcol, schema = m["partition_by"], StructType.fromJson(m["schema"])
         v = self.current_version() + 1
         written: dict[str, str] = {}
         if changed_values:
+            want = [(f.name, f.dataType) for f in schema]
+            if [(f.name, f.dataType) for f in changed_df.schema] != want:
+                changed_df = changed_df.select(*(F.col(n).cast(t).alias(n) for n, t in want))
             written = self._write_partitions(changed_df, v, pcol)
             unexpected = set(written) - set(changed_values)
             if unexpected:
@@ -210,7 +222,7 @@ class PartitionedSnapshotTable(SnapshotTable):
                 parts[val] = written[val]
             else:
                 parts.pop(val, None)  # partition emptied by the merge
-        self._write_manifest(v, pcol, StructType.fromJson(m["schema"]), parts)
+        self._write_manifest(v, pcol, schema, parts)
         return v
 
     def commit(self, version: int) -> None:

@@ -14,6 +14,7 @@ The load-bearing claims under test:
 import os
 
 import pytest
+from pyspark.errors import ArithmeticException
 from pyspark.sql import functions as F
 
 from sparkmerge.errors import MergeError, MergeThresholdExceeded, MergeValidationError
@@ -429,3 +430,88 @@ def test_incremental_ingest_loop(spark, tmp_path):
         assert not os.path.exists(str(tmp_path / "t" / "files" / f"v{v + 1}"))  # ...metadata-only
     assert same_rows(t.read(spark), expected)
     assert same_rows(t.read(spark, version=1), orders)
+
+
+def _ints_table(spark, path):
+    """Three partitions A/B/C of ``k int, p string, v int``."""
+    rows = [(k, p, k * 10) for k, p in [(1, "A"), (2, "A"), (3, "B"), (4, "C")]]
+    df = spark.createDataFrame(rows, "k int, p string, v int")
+    return PartitionedSnapshotTable.create(spark, path, df, "p"), df
+
+
+def test_staged_files_match_manifest_schema(spark, tmp_path):
+    """A source wider than the table (``v bigint`` into ``v int``) is cast
+    to the manifest's types before staging, so the committed version stays
+    readable; a value that does not fit fails the merge before commit."""
+    t, df = _ints_table(spark, str(tmp_path / "t"))
+    wide = df.withColumn("v", F.col("v").cast("bigint") + 1)
+    merge_partitioned(spark, t, wide.filter("p = 'A'"), ["k", "p"], prune_scan=True)
+    got = t.read(spark)
+    assert dict(got.dtypes)["v"] == "int"
+    assert sorted(r["v"] for r in got.collect()) == [11, 21, 30, 40]
+
+    huge = wide.filter("k = 3").withColumn("v", F.lit(2**40))
+    with pytest.raises(ArithmeticException, match="CAST_OVERFLOW"):
+        merge_partitioned(spark, t, huge, ["k", "p"], prune_scan=True)
+    assert t.current_version() == 2 and not os.path.exists(str(tmp_path / "t" / "v=3.json"))
+    assert sorted(r["v"] for r in t.read(spark).collect()) == [11, 21, 30, 40]
+
+
+def _jobs(spark, tag, fn):
+    """Number of Spark jobs ``fn()`` runs (counted by job group)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+def test_job_counts_per_call(spark, orders, tmp_path):
+    """A read opens with the manifest's schema (no footer-inference job),
+    and a pruned merge finds its changed partitions in one aggregation."""
+    t = PartitionedSnapshotTable.create(spark, str(tmp_path / "t"), orders, "o_orderstatus")
+
+    def noop(df):
+        df.write.format("noop").mode("overwrite").save()
+
+    assert _jobs(spark, "ptable-read", lambda: noop(t.read(spark))) == 1
+    assert _jobs(spark, "ptable-read-parts", lambda: noop(t.read_partitions(spark, ["O"]))) == 1
+
+    keys = ["o_orderkey", "o_orderstatus"]
+    src = orders.filter("o_orderstatus = 'O'").filter(F.col("o_orderkey") % 3 == 0)
+
+    def merge(bump):
+        delta = src.withColumn("o_totalprice", F.col("o_totalprice") + bump)
+        merge_partitioned(spark, t, delta, keys, prune_scan=True, strategy="auto")
+
+    merge(1.0)  # warm-up
+    # 14 jobs before the source probe and the changed-partition discovery
+    # became one aggregation each (two `limit` cascades and a count job)
+    assert _jobs(spark, "ptable-merge", lambda: merge(2.0)) == 10
+
+
+def test_changed_partition_discovery(spark, tmp_path, monkeypatch):
+    """An update that moves a row from A to B rewrites both partitions and
+    carries C forward; a changed set above the ceiling stages nothing."""
+    import sparkmerge.ptable as ptable_mod
+
+    t, df = _ints_table(spark, str(tmp_path / "t"))
+    moved = df.withColumn("p", F.when(F.col("k") == 1, "B").otherwise(F.col("p")))
+    v1 = t.partitions()
+
+    monkeypatch.setattr(ptable_mod, "MAX_PARTITION_VALUES", 1)
+    with pytest.raises(MergeValidationError, match="touches >1 distinct partitions"):
+        merge_partitioned(spark, t, moved, "k")
+    assert t.current_version() == 1
+    assert not os.path.exists(str(tmp_path / "t" / "v=2.json"))
+    assert not os.path.exists(str(tmp_path / "t" / "files" / "v2"))
+
+    monkeypatch.undo()
+    res = merge_partitioned(spark, t, moved, "k")
+    assert res.changed_rows == 1
+    v2 = t.partitions()
+    assert v2["C"] == v1["C"]
+    assert v2["A"] != v1["A"] and v2["B"] != v1["B"]
+    assert same_rows(t.read(spark), moved)
