@@ -270,7 +270,7 @@ def merge_partitioned(
     scanned scope, mirroring how ``@targetFilter`` scopes the reference's
     pre-count (:141-150).
     """
-    from sparkmerge.ptable import MAX_PARTITION_VALUES, canon_col, value_set
+    from sparkmerge.ptable import MAX_PARTITION_VALUES, canon_col
 
     if audit and audit_path is None:
         audit_path = default_audit_path(target)
@@ -290,10 +290,20 @@ def merge_partitioned(
         # that produced the manifest keys — Python str() disagrees with
         # Spark's rendering for booleans ('True' vs 'true') and some
         # float/double values, which would silently prune every real
-        # partition.  One aggregation job; value_set bounds driver memory:
-        # partition VALUES (not rows) cross the driver, and a table with
-        # >MAX_PARTITION_VALUES distinct partitions is mis-partitioned — fail fast.
-        src_vals = source_df.agg(value_set(canon_col(pcol))).first()[0]
+        # partition.  The limit bounds memory: partition VALUES (not rows)
+        # cross the driver, and a table with >MAX_PARTITION_VALUES distinct
+        # partitions is mis-partitioned — fail fast.  Under the aggregate it
+        # is one job (a root limit would run Spark's executeTake cascade);
+        # coalesce(1) merges the distinct in the task that applies the limit,
+        # so it costs no extra stage.
+        src_vals = (
+            source_df.select(canon_col(pcol).alias("p"))
+            .distinct()
+            .coalesce(1)
+            .limit(MAX_PARTITION_VALUES + 1)
+            .agg(F.collect_list("p"))
+            .first()[0]
+        )
         if len(src_vals) > MAX_PARTITION_VALUES:
             raise MergeValidationError(
                 f"prune_scan: source has >{MAX_PARTITION_VALUES} distinct "
@@ -333,16 +343,27 @@ def merge_partitioned(
         # changed partitions under their OLD value (updates/deletes in place)
         # and NEW value (inserts, or updates that move a row across
         # partitions).  `_old`/`_new` struct nullity distinguishes "no row on
-        # that side" from "partition value is NULL".  Each set is sliced to
-        # MAX+1 values, so the union exceeds MAX exactly when the true one does.
+        # that side" from "partition value is NULL".  A row adds an entry per
+        # side keyed by its changed partition (NULL: none), the first with its
+        # counts; the groups are the changed partitions plus NULL, so the limit
+        # bounds memory as above and drops a group only past the ceiling.
         non_keep = F.col("_action") != ACTION_KEEP
-        changed, before, old_vals, new_vals = cs.df.agg(
-            F.count(F.when(non_keep, 1)),
-            F.count(F.col("_old")),
-            *(value_set(F.when(non_keep & F.col(side).isNotNull(),
-                               canon_col(f"{side}.{pcol}"))) for side in ("_old", "_new")),
-        ).first()
-        changed_vals = set(old_vals) | set(new_vals)
+        entries = [
+            F.struct(F.when(non_keep & F.col(side).isNotNull(), canon_col(f"{side}.{pcol}"))
+                     .alias("p"), c.cast("long").alias("c"), b.cast("long").alias("b"))
+            for side, c, b in [("_old", non_keep, F.col("_old").isNotNull()),
+                               ("_new", F.lit(0), F.lit(0))]
+        ]
+        changed, before, vals = (
+            cs.df.select(F.inline(F.array(*entries)))
+            .groupBy("p").agg(F.sum("c").alias("c"), F.sum("b").alias("b"))
+            .coalesce(1)
+            .limit(MAX_PARTITION_VALUES + 2)
+            .agg(F.sum("c"), F.sum("b"), F.collect_list("p"))
+            .first()
+        )
+        # the sums are NULL when the changeset has no rows
+        changed, before, changed_vals = changed or 0, before or 0, set(vals)
         if len(changed_vals) > MAX_PARTITION_VALUES:
             raise MergeValidationError(
                 f"Changeset touches >{MAX_PARTITION_VALUES} distinct partitions "

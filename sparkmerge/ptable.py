@@ -63,7 +63,7 @@ from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import DataType, StructType
 
 from sparkmerge.errors import MergeConflictError, MergeError
 from sparkmerge.table import SnapshotTable
@@ -88,9 +88,16 @@ def canon_col(name: str) -> Column:
     return F.coalesce(F.col(name).cast("string"), F.lit(HIVE_NULL))
 
 
-def value_set(c: Column) -> Column:
-    """Aggregate: distinct non-NULL values of ``c``, at most MAX_PARTITION_VALUES+1."""
-    return F.slice(F.collect_set(c), 1, MAX_PARTITION_VALUES + 1)
+def _cast_strict(name: str, have: str | None, to: DataType) -> Column:
+    """Column ``name`` (of type ``have``) cast to ``to``; a non-NULL value the
+    cast makes NULL (overflow, bad string) raises whatever the ANSI mode.
+    A column already of type ``to`` passes through: the guard would not fold."""
+    c = F.col(name)
+    if have == to.simpleString():
+        return c
+    msg = F.lit(f"column {name!r}: a value does not fit the table's type {to.simpleString()}")
+    return F.when(c.isNotNull() & c.try_cast(to).isNull(), F.raise_error(msg)).otherwise(
+        c.cast(to)).alias(name)
 
 
 class PartitionedSnapshotTable(SnapshotTable):
@@ -198,18 +205,17 @@ class PartitionedSnapshotTable(SnapshotTable):
         """Stage version N+1: write ONLY the changed partitions' new data
         (one ``partitionBy`` job), carry every other partition forward by
         reference.  A changed partition that comes back empty (all rows
-        deleted) is dropped from the manifest.  Invisible until commit.
-        A frame whose types differ from the manifest's (the read schema) is
-        cast by name to them, so a wider source type cannot make the committed
-        version unreadable; a value that does not fit raises under ANSI."""
+        deleted) is dropped from the manifest.  Invisible until commit.  The
+        frame is cast by name to the manifest's schema (the read schema), so
+        a wider source type cannot make the committed version unreadable."""
         m = self.manifest()
         pcol, schema = m["partition_by"], StructType.fromJson(m["schema"])
         v = self.current_version() + 1
         written: dict[str, str] = {}
         if changed_values:
-            want = [(f.name, f.dataType) for f in schema]
-            if [(f.name, f.dataType) for f in changed_df.schema] != want:
-                changed_df = changed_df.select(*(F.col(n).cast(t).alias(n) for n, t in want))
+            have = dict(changed_df.dtypes)
+            changed_df = changed_df.select(
+                *(_cast_strict(f.name, have.get(f.name), f.dataType) for f in schema))
             written = self._write_partitions(changed_df, v, pcol)
             unexpected = set(written) - set(changed_values)
             if unexpected:

@@ -14,7 +14,7 @@ The load-bearing claims under test:
 import os
 
 import pytest
-from pyspark.errors import ArithmeticException
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 from sparkmerge.errors import MergeError, MergeThresholdExceeded, MergeValidationError
@@ -442,7 +442,8 @@ def _ints_table(spark, path):
 def test_staged_files_match_manifest_schema(spark, tmp_path):
     """A source wider than the table (``v bigint`` into ``v int``) is cast
     to the manifest's types before staging, so the committed version stays
-    readable; a value that does not fit fails the merge before commit."""
+    readable; a value that does not fit fails the merge before commit, with
+    ANSI mode on or off (a lenient cast would commit a wrapped integer)."""
     t, df = _ints_table(spark, str(tmp_path / "t"))
     wide = df.withColumn("v", F.col("v").cast("bigint") + 1)
     merge_partitioned(spark, t, wide.filter("p = 'A'"), ["k", "p"], prune_scan=True)
@@ -451,9 +452,16 @@ def test_staged_files_match_manifest_schema(spark, tmp_path):
     assert sorted(r["v"] for r in got.collect()) == [11, 21, 30, 40]
 
     huge = wide.filter("k = 3").withColumn("v", F.lit(2**40))
-    with pytest.raises(ArithmeticException, match="CAST_OVERFLOW"):
-        merge_partitioned(spark, t, huge, ["k", "p"], prune_scan=True)
-    assert t.current_version() == 2 and not os.path.exists(str(tmp_path / "t" / "v=3.json"))
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for mode in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", mode)
+            with pytest.raises(SparkRuntimeException, match="'v': a value does not fit"):
+                merge_partitioned(spark, t, huge, ["k", "p"], prune_scan=True)
+            assert t.current_version() == 2
+            assert not os.path.exists(str(tmp_path / "t" / "v=3.json"))
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
     assert sorted(r["v"] for r in t.read(spark).collect()) == [11, 21, 30, 40]
 
 
@@ -501,12 +509,15 @@ def test_changed_partition_discovery(spark, tmp_path, monkeypatch):
     moved = df.withColumn("p", F.when(F.col("k") == 1, "B").otherwise(F.col("p")))
     v1 = t.partitions()
 
+    # A and B change; then A, B and C, more groups than the limit keeps
+    touch_all = moved.withColumn("v", F.when(F.col("k") == 4, 41).otherwise(F.col("v")))
     monkeypatch.setattr(ptable_mod, "MAX_PARTITION_VALUES", 1)
-    with pytest.raises(MergeValidationError, match="touches >1 distinct partitions"):
-        merge_partitioned(spark, t, moved, "k")
-    assert t.current_version() == 1
-    assert not os.path.exists(str(tmp_path / "t" / "v=2.json"))
-    assert not os.path.exists(str(tmp_path / "t" / "files" / "v2"))
+    for src in (moved, touch_all):
+        with pytest.raises(MergeValidationError, match="touches >1 distinct partitions"):
+            merge_partitioned(spark, t, src, "k")
+        assert t.current_version() == 1
+        assert not os.path.exists(str(tmp_path / "t" / "v=2.json"))
+        assert not os.path.exists(str(tmp_path / "t" / "files" / "v2"))
 
     monkeypatch.undo()
     res = merge_partitioned(spark, t, moved, "k")
