@@ -215,7 +215,7 @@ def main() -> None:
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from sparkmerge.queries import registry
-    from sparkmerge.session import get_spark
+    from sparkmerge.session import get_spark, host_cpus
 
     input_bytes = sum(
         os.path.getsize(os.path.join(sf_dir, f))
@@ -265,7 +265,7 @@ def main() -> None:
         return sorted(times)[n // 2]  # median (codegen/JIT settles after run 1)
 
     con = duckdb.connect()
-    con.execute(f"PRAGMA threads={os.environ.get('SPARK_GRAFT_CPUS', '32')}")
+    con.execute(f"PRAGMA threads={host_cpus()}")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
@@ -455,6 +455,8 @@ def _sf1_leg(spark, reg) -> dict:
     """
     import subprocess
 
+    from sparkmerge.session import host_cpus
+
     sf1_dir = "/tmp/sparkmerge_sf1"
     if not os.path.isdir(sf1_dir):
         subprocess.run(
@@ -469,7 +471,7 @@ def _sf1_leg(spark, reg) -> dict:
     budget = float(os.environ.get("SPARK_GRAFT_SF1_BUDGET", "540"))
     t_start = time.perf_counter()
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = str(host_cpus())
     saved = {
         k: spark.conf.get(k)
         for k in (

@@ -1,9 +1,10 @@
 """SparkSession builder with scale-oriented defaults.
 
-Tuned for the driver's local[32] container but with settings that carry to a
-real cluster: AQE on (runtime partition coalescing + skew-join splitting —
-matters for badkey_rank windows over skewed keys), shuffle partitions sized to
-the parallelism, Arrow enabled for the few pandas_udf paths (MinHash).
+Sized to the host it runs on (``host_cpus``, ``driver_memory``), with
+settings that carry to a real cluster: AQE on (runtime partition coalescing +
+skew-join splitting — matters for badkey_rank windows over skewed keys),
+shuffle partitions sized to the parallelism, Arrow enabled for the few
+pandas_udf paths (MinHash).
 """
 
 from __future__ import annotations
@@ -20,6 +21,22 @@ from pyspark.sql import SparkSession
 # throttles the box — measured at sf1 ≈ 177 MiB, where the lean profile pinned
 # exactly 8 of 32 cores on the set-similarity joins.
 _SMALL_INPUT_BYTES = 64 * 1024**2
+
+
+def host_cpus() -> int:
+    """Local parallelism: ``SPARK_GRAFT_CPUS``, else the CPUs this process
+    may run on (its affinity mask, which a container's cpuset narrows)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def driver_memory() -> str:
+    """Driver heap: ``SPARK_GRAFT_DRIVER_MEM``, else half the physical RAM,
+    capped at 16g.  The local JVM's heap must leave room for its own
+    off-heap memory, the Python workers and the OS page cache; a heap sized
+    past physical RAM meets the kernel OOM killer instead of a Java OOM."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    half_mib = min(16 * 1024, ram // 2 // 1024**2)
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{half_mib}m"
 
 
 def get_spark(
@@ -41,7 +58,7 @@ def get_spark(
     in one task's memory — measured 2× end-to-end at sf0.1 (BASELINE.md).
     The default (no hint) keeps the scale posture: AQE on.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = host_cpus()
     small = input_bytes is not None and input_bytes < _SMALL_INPUT_BYTES
     if shuffle_partitions is None:
         shuffle_partitions = 8 if small else cpus
@@ -65,16 +82,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # keep catalog-table data (bucketed tables) out of the repo cwd
         .config("spark.sql.warehouse.dir", "/tmp/sparkmerge_warehouse")
-        # r13: default 8g → 16g.  The basket build peaks 5.5-6.7 GB on both
-        # variants (OPTIMIZATION_r13.md #1), and an 8g ceiling left so
-        # little margin that the r13 session-6 bench cut lost a task to a
-        # heap OOM in the sf10 tail (orders_basket_lift, first tail op
-        # after the two lsh levers) while the identical run passed minutes
-        # later — a coin-flip failure mode, not a perf knob.  The sandbox
-        # has 128 GiB; sizing the one local JVM to its host is the guide
-        # §5/§9 posture ("size to your workers"), stays env-overridable,
-        # and changes no plan (broadcast/split thresholds are separate).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # The basket build peaks 5.5-6.7 GB at sf10 (OPTIMIZATION_r13.md #1):
+        # an 8g heap lost a task to a heap OOM there, so a large host gets
+        # 16g.  A small host gets half its RAM (see driver_memory).
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         # Broadcast threshold: under the lean profile every table in a
         # <64 MiB corpus is dimension-sized, so broadcasting everything is
@@ -89,7 +100,7 @@ def get_spark(
         )
         # Split size governs scan parallelism.  The local corpus is ~MBs per
         # table, so the 128 MB default would put every file on one task; 4 MB
-        # (1 MB under the lean profile) gives the 32 cores work.  A real
+        # (1 MB under the lean profile) gives every core work.  A real
         # cluster reading 100 TB overrides this back up via the env var (row
         # groups there are >=128 MB anyway).
         .config(

@@ -3,6 +3,9 @@ reference edge case (FIXTURES.md §D)."""
 
 from __future__ import annotations
 
+import datetime
+from decimal import Decimal
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -463,3 +466,110 @@ class TestBroadcastStrategy:
         final, audit_rows, changed = results["broadcast"]
         assert changed == 2  # one UPDATE in scope + one INSERT
         assert (6, "flip", 6.0) in final  # out-of-scope row untouched
+
+
+# A mixed-type row of 16 columns: the images are built per action as whole
+# rows, so every action's branch is checked field by field against a
+# pure-Python expectation.  ``note`` is target-only (NULL on INSERT).
+_WIDE_SCHEMA = (
+    "k int, k2 string, i int, b bigint, sh smallint, f float, d double, "
+    "dec decimal(10,2), s string, s2 string, flag boolean, dt date, "
+    "ts timestamp, i2 int, d2 double, note string"
+)
+_WIDE_COLS = [c.split()[0] for c in _WIDE_SCHEMA.split(", ")]
+_WIDE_KEY = ["k", "k2"]
+
+
+def _wide_row(k, i, *, s="x", flag=True, note="n"):
+    return (
+        k, f"k{k}", i, i * 10, i % 7, i / 4, i / 8, Decimal(i) / 4, s, f"{s}{i}",
+        flag, datetime.date(2020, 1, 1 + i % 28),
+        datetime.datetime(2021, 2, 3, i % 24, 30), i + 1, i * 1.5, note,
+    )
+
+
+def _expected_images(target, source, delete, soft, patch):
+    """(action, old, new) per key, straight from the merge semantics."""
+    src_cols = _WIDE_COLS[:-1]
+    t = {r[:2]: dict(zip(_WIDE_COLS, r)) for r in target}
+    s = {r[:2]: dict(zip(src_cols, r)) for r in source}
+    out = {}
+    for key in set(t) | set(s):
+        old, src = t.get(key), s.get(key)
+        if old is None:
+            out[key] = ("INSERT", None, {c: src.get(c) for c in _WIDE_COLS})
+        elif src is None:
+            if delete == "YES":
+                out[key] = ("DELETE", old, None)
+            elif soft:
+                out[key] = ("SOFT_DELETE", old, {**old, **soft(old)})
+            else:
+                out[key] = ("KEEP", old, old)
+        else:
+            moved = [
+                c for c in src_cols[2:]
+                if src[c] != old[c] and not (patch and src[c] is None)
+            ]
+            if not moved:
+                out[key] = ("KEEP", old, old)
+                continue
+            new = {
+                c: old[c] if c not in src or (patch and src[c] is None) else src[c]
+                for c in _WIDE_COLS
+            }
+            out[key] = ("UPDATE", old, new)
+    return out
+
+
+@pytest.mark.parametrize(
+    "delete,update_mode",
+    [("YES", "overwrite"), ("NO", "overwrite"),
+     ("set flag = false, i = i + 100, note = 'gone'", "overwrite"),
+     ("YES", "patch")],
+)
+def test_wide_row_images_per_action(spark, delete, update_mode):
+    patch = update_mode == "patch"
+    target = [_wide_row(k, k) for k in range(1, 6)]
+    if patch:
+        # NULL holes keep the target value; all-NULL and equal-where-set
+        # rows stay KEEP
+        holes = list(_wide_row(1, 1)[:-1])
+        holes[2:] = [None] * (len(holes) - 2)
+        partial = list(_wide_row(2, 2)[:-1])
+        partial[2], partial[8], partial[11], partial[13] = 99, "y", None, None
+        same = list(_wide_row(3, 3)[:-1])
+        same[3], same[9], same[12] = None, None, None
+        source = [
+            tuple(holes), tuple(partial), tuple(same),
+            _wide_row(6, 6)[:-1], _wide_row(7, 9, s=None, flag=None)[:-1],
+        ]
+    else:
+        changed_one = _wide_row(2, 2)[:-1]
+        changed_one = changed_one[:8] + ("y",) + changed_one[9:]
+        to_nulls = tuple(v if j < 2 else None for j, v in enumerate(_wide_row(3, 3)[:-1]))
+        source = [
+            _wide_row(1, 1)[:-1], changed_one, to_nulls,
+            _wide_row(6, 6)[:-1], _wide_row(7, 9, s=None, flag=None)[:-1],
+        ]
+    soft = (
+        (lambda old: {"flag": False, "i": old["i"] + 100, "note": "gone"})
+        if delete.startswith("set") else None
+    )
+    t = spark.createDataFrame(target, _WIDE_SCHEMA)
+    s = spark.createDataFrame(source, _WIDE_SCHEMA.rsplit(", ", 1)[0])
+    cs = build_changeset(t, s, _WIDE_KEY, delete=delete, update_mode=update_mode)
+    got = {
+        (r["k"], r["k2"]): (
+            r["_action"],
+            r["_old"].asDict() if r["_old"] is not None else None,
+            r["_new"].asDict() if r["_new"] is not None else None,
+        )
+        for r in cs.df.collect()
+    }
+    want = _expected_images(target, source, delete, soft, patch)
+    assert got == want
+    actions = {a for a, _, _ in want.values()}
+    assert actions == (
+        {"INSERT", "UPDATE", "KEEP"}
+        | ({"DELETE"} if delete == "YES" else {"SOFT_DELETE"} if soft else set())
+    )

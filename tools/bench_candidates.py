@@ -38,7 +38,7 @@ def main() -> None:
     ops = sys.argv[2:]
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from sparkmerge.queries import registry
-    from sparkmerge.session import get_spark
+    from sparkmerge.session import get_spark, host_cpus
 
     total = sum(
         os.path.getsize(f"{sf_dir}/{t}.parquet") for t in TABLES
@@ -47,7 +47,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     reg = registry()
     con = duckdb.connect()
-    con.execute(f"PRAGMA threads={os.environ.get('SPARK_GRAFT_CPUS', '32')}")
+    con.execute(f"PRAGMA threads={host_cpus()}")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"

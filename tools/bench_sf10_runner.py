@@ -40,7 +40,7 @@ def main() -> None:
     import bench  # SF10_OPS / SF10_BREADTH / SF10_ORACLE_SKIP / TABLES are the contract
 
     from sparkmerge.queries import registry, table_path
-    from sparkmerge.session import get_spark
+    from sparkmerge.session import get_spark, host_cpus
 
     sf10_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sparkmerge_sf10"
     # Per-BLOCK budgets, each measured from its own block start (r9 verdict
@@ -51,7 +51,7 @@ def main() -> None:
     breadth_budget = float(os.environ.get("SPARK_GRAFT_SF10_BREADTH_BUDGET", "360"))
     levers_budget = float(os.environ.get("SPARK_GRAFT_SF10_LEVERS_BUDGET", "300"))
     tail_budget = float(os.environ.get("SPARK_GRAFT_SF10_TAIL_BUDGET", "1800"))
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = host_cpus()
 
     spark = get_spark("bench-sf10")  # scale profile: AQE on, compression on
     spark.sparkContext.setLogLevel("ERROR")

@@ -50,9 +50,11 @@ def main() -> None:
     if factor > 26:
         raise SystemExit("factor > 26 would reuse alphabet rotations (see documents)")
     os.makedirs(dst, exist_ok=True)
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from sparkmerge.session import host_cpus
 
     con = duckdb.connect()
-    con.execute(f"PRAGMA threads={os.environ.get('SPARK_GRAFT_CPUS', '32')}")
+    con.execute(f"PRAGMA threads={host_cpus()}")
     con.execute(f"CREATE TABLE reps AS SELECT unnest(range({factor})) AS i")
 
     def copy(table: str, select_sql: str) -> None:

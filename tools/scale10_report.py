@@ -112,7 +112,7 @@ def _adaptive(run) -> float:
 def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from sparkmerge.queries import registry, table_path
-    from sparkmerge.session import get_spark
+    from sparkmerge.session import get_spark, host_cpus
 
     for d, src, factor in ((SF1, "/root/testdata/sf0.1", 10), (SF10, SF1, 10)):
         # completeness check, not isdir: gen_scale makedirs before writing,
@@ -132,7 +132,7 @@ def main() -> None:
         table_path(SF10, t)
 
     con = duckdb.connect()
-    con.execute(f"PRAGMA threads={os.environ.get('SPARK_GRAFT_CPUS', '32')}")
+    con.execute(f"PRAGMA threads={host_cpus()}")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF10}/{t}.parquet')"

@@ -222,7 +222,7 @@ TABLES = [
 def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from sparkmerge.queries import registry
-    from sparkmerge.session import get_spark
+    from sparkmerge.session import get_spark, host_cpus
 
     # Incremental mode: `python tools/scaling_report.py op1 op2 ...`
     # measures ONLY the named ops and seeds everything else from the last
@@ -263,7 +263,7 @@ def main() -> None:
     spark = get_spark("sparkmerge-scaling", input_bytes=17 * 1024 * 1024)
     spark.sparkContext.setLogLevel("ERROR")
     reg = registry()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = str(host_cpus())
 
     # absorb one-time session costs (JVM classloading, codegen compiler,
     # parquet reader init) BEFORE the first measured op — without this the
@@ -293,7 +293,7 @@ def main() -> None:
             "spark.sql.autoBroadcastJoinThreshold", str((10 if big else 64) * 1024 * 1024)
         )
         con = duckdb.connect()
-        con.execute(f"PRAGMA threads={os.environ.get('SPARK_GRAFT_CPUS', '32')}")
+        con.execute(f"PRAGMA threads={cpus}")
         for t in TABLES:
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
