@@ -12,8 +12,9 @@ This package re-expresses that as idiomatic Spark dataflow:
   (replaces the ``#columnList`` catalog IR, sp_SimpleMerge.sql:151-201)
 - ``changeset``            — ONE full-outer join producing a typed changeset
   (replaces the generated MERGE text, sp_SimpleMerge.sql:202-412)
-- ``table.SnapshotTable``  — versioned-parquet snapshots with an atomic
-  pointer swap (replaces begin/commit/rollback, sp_SimpleMerge.sql:470-479)
+- ``table.SnapshotTable``  — versioned-parquet snapshots committed by
+  put-if-absent version records (replaces begin/commit/rollback,
+  sp_SimpleMerge.sql:470-479)
 - ``ptable.PartitionedSnapshotTable`` — manifest-based partitioned snapshots:
   merges rewrite only touched partitions, the rest carry forward by
   reference (the 100 TB layout, SURVEY.md §7.2)

@@ -530,8 +530,7 @@ def scd2_foreachbatch_stream(
         hist = table.read(spark)
         load_ts = F.lit(batch_load_ts[int(batch_id)]).cast("timestamp")
         new_hist = scd2_merge(hist, batch_df, key, load_ts=load_ts)
-        v = table.stage(new_hist)
-        table.commit(v)
+        table.commit(table.stage(new_hist))
 
     q = (
         spark.readStream.schema(src_schema)

@@ -13,8 +13,9 @@ Parameter surface mirrors ``sp_SimpleMerge`` (sp_SimpleMerge.sql:57-67):
     @debug        → debug (dry-run report, :66)
 
 Lifecycle (SURVEY.md §3.1): validate → plan → changeset (lazy) → [debug
-report | stage snapshot → threshold guard → commit/abort → audit append →
-stamp lastUpdate].
+report | stage snapshot → threshold guard → commit/abort → stamp lastUpdate
+→ audit append].  ``simple_merge`` and ``merge_partitioned`` share the
+bracketed tail (``_commit``).
 
 Efficiency: the threshold guard needs (a) the pre-merge in-scope target count
 (:141-150) and (b) the number of changed rows (:472-473).  Both ride as
@@ -31,6 +32,7 @@ import io
 import re
 from dataclasses import dataclass
 from datetime import datetime, timezone
+from typing import Callable
 
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -45,7 +47,7 @@ from sparkmerge.changeset import (
 )
 from sparkmerge.errors import MergeThresholdExceeded, MergeValidationError
 from sparkmerge.plan import MergePlan, split_csv
-from sparkmerge.table import SnapshotTable
+from sparkmerge.table import SnapshotTable, Staged
 
 
 @dataclass(frozen=True)
@@ -227,6 +229,64 @@ def diff_versions(
     ).df
 
 
+def _report(cs: Changeset, merge_sql: str, thr: float | None, in_scope: DataFrame) -> MergeReport:
+    """The debug dry run of either merge: zero side effects."""
+    return MergeReport(
+        merge_sql=merge_sql,
+        physical_plan=_captured_explain(cs.df),
+        threshold=thr,
+        target_rows=in_scope.count(),
+        audit_ddl=_audit_schema_ddl(cs.plan),
+    )
+
+
+def _commit(
+    target: SnapshotTable,
+    base: int,
+    cs: Changeset,
+    stage: Callable[[], Staged],
+    counts: Callable[[], tuple[int, int]],
+    thr: float | None,
+    audit_path: str | None,
+) -> MergeResult:
+    """The tail both merges share: stage → threshold guard → commit → stamp
+    lastUpdate → audit append (sp_SimpleMerge.sql:470-491).
+
+    ``stage()`` writes the new version; ``counts()`` then returns (changed
+    rows, pre-merge in-scope rows).  It commits only on ``base``, the version
+    the merge read.  Any failure before the commit lands removes the
+    writer's staged files."""
+    staged = stage()
+    try:
+        changed, before = counts()
+        variance = None
+        if thr is not None:
+            variance = (changed / before * 100.0) if before > 0 else 0.0
+            # empty-target bypass: proceed when the target had no rows (:476)
+            if before > 0 and variance > thr:
+                raise MergeThresholdExceeded(variance, thr, changed, before)
+        version = target._commit_on(base, staged)
+    except BaseException:
+        target.abort(staged)
+        raise
+    # ODBC-canonical style timestamp, like convert(varchar, sysdatetime(), 121)
+    # (:488) — but only on successful commit (SURVEY.md §7.4 quirk fix).
+    now = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M:%S.%f")[:-3]
+    target.set_property("lastUpdate", now)
+    audit_rows = None
+    if audit_path is not None:
+        cs.audit().write.mode("append").parquet(audit_path)
+        audit_rows = changed
+    return MergeResult(
+        committed=True,
+        version=version,
+        changed_rows=changed,
+        target_rows_before=before,
+        variance_pct=variance,
+        audit_rows=audit_rows,
+    )
+
+
 def merge_partitioned(
     spark: SparkSession,
     target: "PartitionedSnapshotTable",
@@ -275,7 +335,8 @@ def merge_partitioned(
     if audit and audit_path is None:
         audit_path = default_audit_path(target)
     thr = _parse_threshold(threshold)
-    pcol = target.partition_by
+    m = target.manifest()
+    pcol, base = m["partition_by"], m["version"]
     keys = split_csv(join_columns) if isinstance(join_columns, str) else list(join_columns)
 
     if prune_scan:
@@ -309,30 +370,24 @@ def merge_partitioned(
                 f"prune_scan: source has >{MAX_PARTITION_VALUES} distinct "
                 f"{pcol!r} values; partition by a coarser key."
             )
-        in_scope = target.read_partitions(spark, src_vals)
+        in_scope = target.read_partitions(spark, src_vals, version=base)
     else:
-        in_scope = target.read(spark)
+        in_scope = target.read(spark, version=base)
 
     cs = build_changeset(in_scope, source_df, join_columns, delete=delete,
                          bad_key=bad_key, bad_key_order=bad_key_order,
                          strategy=strategy, update_mode=update_mode)
 
     if debug:
-        # dry run, zero side effects — like simple_merge(debug=True), plus
-        # the scan-pruning detail in the SQL comment header
-        plan = cs.plan
+        # like simple_merge(debug=True), plus the scan-pruning detail in the
+        # SQL comment header
         scope_note = (
             f"-- scan-pruned to source partitions of `{pcol}`"
             if prune_scan
             else f"-- full scan; write-pruned by `{pcol}`"
         )
-        return MergeReport(
-            merge_sql=scope_note + "\n" + render_merge_sql(plan, delete=delete),
-            physical_plan=_captured_explain(cs.df),
-            threshold=thr,
-            target_rows=in_scope.count(),
-            audit_ddl=_audit_schema_ddl(plan),
-        )
+        return _report(cs, scope_note + "\n" + render_merge_sql(cs.plan, delete=delete),
+                       thr, in_scope)
 
     # The changeset feeds two jobs (the aggregation below, the snapshot
     # write) plus the audit write; persist so badKey's arbitrary pairing —
@@ -387,31 +442,8 @@ def merge_partitioned(
                 canon_col(pcol) == F.col("_changed_part"),
                 "left_semi",
             )
-        staged = target.stage_merge(changed_state, changed_vals)
-
-        variance = None
-        if thr is not None:
-            variance = (changed / before * 100.0) if before > 0 else 0.0
-            if before > 0 and variance > thr:
-                target.abort(staged)
-                raise MergeThresholdExceeded(variance, thr, changed, before)
-
-        target.commit(staged)
-        now = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M:%S.%f")[:-3]
-        target.set_property("lastUpdate", now)
-
-        audit_rows = None
-        if audit_path is not None:
-            cs.audit().write.mode("append").parquet(audit_path)
-            audit_rows = changed
-        return MergeResult(
-            committed=True,
-            version=staged,
-            changed_rows=changed,
-            target_rows_before=before,
-            variance_pct=variance,
-            audit_rows=audit_rows,
-        )
+        return _commit(target, base, cs, lambda: target.stage_merge(changed_state, changed_vals),
+                       lambda: (changed, before), thr, audit_path)
     finally:
         cs.df.unpersist()
 
@@ -460,97 +492,54 @@ def simple_merge(
         # reduce the multi-version feed to latest-per-key BEFORE the plan is
         # built (the ranking columns are dropped from the reduced source)
         source_df = latest_per_key(source_df, join_columns, source_latest_by)
-    target_df = target.read(spark)
+    base = target.current_version()
+    target_df = target.read(spark, version=base)
     if schema_evolution:
         target_df = evolve_target_schema(target_df, source_df.schema)
     in_scope, out_scope = _scope_split(target_df, target_filter)
-
-    plan = MergePlan.build(in_scope.schema, source_df.schema, join_columns)
-
+    cs = build_changeset(in_scope, source_df, join_columns, delete=delete,
+                         bad_key=bad_key, bad_key_order=bad_key_order,
+                         strategy=strategy, update_mode=update_mode)
     if debug:
-        cs = build_changeset(in_scope, source_df, join_columns, delete=delete,
-                             bad_key=bad_key, bad_key_order=bad_key_order, plan=plan,
-                             strategy=strategy, update_mode=update_mode)
-        return MergeReport(
-            merge_sql=render_merge_sql(plan, delete=delete, target_filter=target_filter),
-            physical_plan=_captured_explain(cs.df),
-            threshold=thr,
-            target_rows=in_scope.count(),
-            audit_ddl=_audit_schema_ddl(plan),
-        )
+        sql = render_merge_sql(cs.plan, delete=delete, target_filter=target_filter)
+        return _report(cs, sql, thr, in_scope)
 
     # Observe the merge stats on the changeset — they materialize during the
     # ONE job that writes the staged snapshot.  Every in-scope target row
     # appears exactly once in the changeset (with a non-null _old image, also
     # under badKey), so count(_old) IS the reference's pre-merge count
     # (sp_SimpleMerge.sql:141-150) at zero extra cost.
-    cs = build_changeset(in_scope, source_df, join_columns, delete=delete,
-                         bad_key=bad_key, bad_key_order=bad_key_order, plan=plan,
-                         strategy=strategy, update_mode=update_mode)
-    cs_obs = Observation("sparkmerge_changeset")
-    observed = cs.df.observe(
-        cs_obs,
+    stats = [
         F.count(F.when(F.col("_action") != ACTION_KEEP, 1)).alias("changed"),
         F.count(F.col("_old")).alias("before"),
-    )
-    cs = Changeset(df=observed, plan=cs.plan, delete_mode=cs.delete_mode)
+    ]
+    cs_obs = Observation("sparkmerge_changeset")
+    cs = Changeset(df=cs.df.observe(cs_obs, *stats), plan=cs.plan, delete_mode=cs.delete_mode)
 
-    want_audit = audit_path is not None
+    def counts() -> tuple[int, int]:
+        try:
+            metrics = cs_obs.get
+            return int(metrics["changed"]), int(metrics["before"])
+        except Exception:
+            # Catalyst can prune the CollectMetrics node entirely when a side
+            # of the join is a provably-empty relation (PropagateEmptyRelation)
+            # — fall back to one explicit aggregation job.
+            row = cs.df.agg(*stats).first()
+            return int(row["changed"]), int(row["before"])
+
     # Persist when a second pass could observe the changeset: the audit read,
     # or the Observation-fallback aggregation under nondeterministic badKey
     # pairing (monotonically_increasing_id is only stable within a
     # materialization — a re-executed agg could count a different pairing
     # than the one that was staged).
-    pin_changeset = want_audit or (bad_key and not bad_key_order)
+    pin_changeset = audit_path is not None or (bad_key and not bad_key_order)
     if pin_changeset:
         cs.df.persist(StorageLevel.MEMORY_AND_DISK)
-
     try:
         new_state = cs.apply_changes()
         if out_scope is not None:
             new_state = new_state.unionByName(out_scope)
-
-        staged = target.stage(new_state)
-        try:
-            metrics = cs_obs.get
-            changed, before = int(metrics["changed"]), int(metrics["before"])
-        except Exception:
-            # Catalyst can prune the CollectMetrics node entirely when a side
-            # of the join is a provably-empty relation (PropagateEmptyRelation)
-            # — fall back to one explicit aggregation job.
-            row = cs.df.agg(
-                F.count(F.when(F.col("_action") != ACTION_KEEP, 1)).alias("changed"),
-                F.count(F.col("_old")).alias("before"),
-            ).first()
-            changed, before = int(row["changed"]), int(row["before"])
-
-        variance = None
-        if thr is not None:
-            variance = (changed / before * 100.0) if before > 0 else 0.0
-            # empty-target bypass: proceed when the target had no rows (:476)
-            if before > 0 and variance > thr:
-                target.abort(staged)
-                raise MergeThresholdExceeded(variance, thr, changed, before)
-
-        target.commit(staged)
-        # ODBC-canonical style timestamp, like convert(varchar, sysdatetime(), 121)
-        # (:488) — but only on successful commit (SURVEY.md §7.4 quirk fix).
-        now = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M:%S.%f")[:-3]
-        target.set_property("lastUpdate", now)
-
-        audit_rows = None
-        if want_audit:
-            audit_df = cs.audit()
-            audit_df.write.mode("append").parquet(audit_path)
-            audit_rows = changed
-        return MergeResult(
-            committed=True,
-            version=staged,
-            changed_rows=changed,
-            target_rows_before=before,
-            variance_pct=variance,
-            audit_rows=audit_rows,
-        )
+        return _commit(target, base, cs, lambda: target.stage(new_state), counts, thr, audit_path)
     finally:
         if pin_changeset:
             cs.df.unpersist()

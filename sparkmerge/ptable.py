@@ -11,26 +11,26 @@ partitions should rewrite 1% of the data, not 100%.
 Layout::
 
     table_dir/
-      files/v<N>/__part=<val>/part-*.parquet   immutable partition data,
-                                               written once by version N
-      v=<N>.json                               version manifest
-      _CURRENT                                 committed version pointer
-      _props.json                              table properties
+      files/<token>/__part=<val>/part-*.parquet   immutable partition data,
+                                                  written by one writer
+      v=<N>.json                                  version record = manifest
+      _props.json                                 table properties
 
 A version manifest maps each partition value to the directory holding its
-data — which may live under ANY earlier version's ``files/v<M>/`` dir::
+data — which may live under ANY earlier writer's ``files/<token>/`` dir::
 
     {"version": 3, "partition_by": "o_orderstatus", "schema": {...},
-     "partitions": {"O": "files/v3/__part=O",      <- rewritten by v3
-                    "F": "files/v1/__part=F",      <- carried forward from v1
-                    "P": "files/v1/__part=P"}}
+     "partitions": {"O": "files/9c1e.../__part=O",   <- rewritten by v3
+                    "F": "files/41d7.../__part=F",   <- carried forward from v1
+                    "P": "files/41d7.../__part=P"}}
 
-Commit protocol is unchanged from ``SnapshotTable``: stage (write changed
-partitions + manifest, invisible to readers), then atomically swap
-``_CURRENT``.  Abort deletes the staged files and manifest; the pointer —
-and therefore every reader — never observes aborted data.  Carried-forward
-partitions are referenced, never copied: an idempotent merge (empty
-changeset) commits a new version by writing one manifest file and zero data.
+The commit protocol is ``SnapshotTable``'s (table.py), with the manifest as
+the version record: stage writes the changed partitions into the writer's
+own ``files/<token>/`` (invisible: no manifest names it), commit links the
+manifest to ``v=<base+1>.json`` if no writer did first, abort removes the
+token directory.  Carried-forward partitions are referenced, never copied:
+an idempotent merge (empty changeset) commits a new version by writing one
+manifest file and zero data.
 
 Physical encoding: changed partitions are written in ONE Spark job via
 ``partitionBy`` on a duplicated string column ``__part`` (so the real
@@ -41,9 +41,8 @@ directory names are whatever Spark's path-escaping produced, decoded back
 with ``urllib.parse.unquote`` when the manifest is built from the staged
 listing — the manifest never *predicts* an escape.
 
-On an object store the directory moves disappear (paths are just keys), and
-the ``_CURRENT`` swap becomes a conditional PUT or a metastore update —
-the manifest design itself is the same one Iceberg/Delta use for this.
+On an object store the record link becomes a conditional PUT (``If-None-Match``)
+— the manifest design itself is the same one Iceberg/Delta use for this.
 
 Multi-column partitioning: partition by a single DERIVED column, e.g.
 ``df.withColumn("part_key", F.concat_ws("|", "ds", "lang"))`` — the derived
@@ -55,18 +54,16 @@ partition specs and loses nothing at the manifest level.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
-import tempfile
 from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, StructType
 
-from sparkmerge.errors import MergeConflictError, MergeError
-from sparkmerge.table import SnapshotTable
+from sparkmerge.errors import MergeError
+from sparkmerge.table import SnapshotTable, Staged
 
 HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 _PART = "__part"
@@ -101,34 +98,27 @@ def _cast_strict(name: str, have: str | None, to: DataType) -> Column:
 
 
 class PartitionedSnapshotTable(SnapshotTable):
-    """A ``SnapshotTable`` whose versions are partition manifests.
+    """A ``SnapshotTable`` whose version records are partition manifests.
 
-    Inherits the pointer (`_CURRENT`) and properties machinery; replaces the
-    data layout with per-partition directories + per-version manifests.
+    Shares the commit protocol (put-if-absent records, per-writer staging
+    directories, abort, vacuum) and the properties machinery; replaces the
+    data layout with per-partition directories.
     """
+
+    # the shared protocol, bound in this class body too so that per-class
+    # wrappers (tracing, profiling) see it under this class
+    commit = SnapshotTable.commit
+    vacuum = SnapshotTable.vacuum
 
     # ---- manifest bookkeeping ----
 
-    def _manifest_path(self, version: int) -> str:
-        return os.path.join(self.path, f"v={version}.json")
-
     def manifest(self, version: int | None = None) -> dict:
-        v = self.current_version() if version is None else version
-        if v == 0:
-            raise MergeError(f"No committed snapshot at {self.path!r}")
-        if version is not None and version > self.current_version():
-            # A staged-but-uncommitted manifest (e.g. an orphan from a crash
-            # between stage and commit) must never be readable: time-travel
-            # readers would observe data that was never committed.
-            raise MergeError(
-                f"Version {version} at {self.path!r} is staged but not committed"
-            )
-        with open(self._manifest_path(v), encoding="utf-8") as f:
-            return json.load(f)
+        """The manifest (version record) of a retained ``version``, default
+        the current one."""
+        return self._record(version)
 
-    @property
-    def partition_by(self) -> str:
-        return self.manifest()["partition_by"]
+    def _data_dirs(self, record: dict) -> list[str]:
+        return list(record["partitions"].values())
 
     def schema(self) -> StructType:
         return StructType.fromJson(self.manifest()["schema"])
@@ -149,28 +139,16 @@ class PartitionedSnapshotTable(SnapshotTable):
         if table.exists():
             raise MergeError(f"Table already exists at {path!r}")
         os.makedirs(path, exist_ok=True)
-        parts = table._write_partitions(df, 1, partition_by)
-        table._write_manifest(1, partition_by, df.schema, parts)
-        table._swap_pointer(1)
+        data, parts = table._write_partitions(df, partition_by)
+        schema = StructType([f for f in df.schema.fields if f.name != _PART])
+        table.commit(Staged(0, data, {"partition_by": partition_by,
+                                      "schema": schema.jsonValue(), "partitions": parts}))
         return table
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """Read the committed snapshot, or a specific retained ``version``
         (time travel: old manifests stay readable until vacuumed)."""
         return self.read_partitions(spark, None, version=version)
-
-    def versions(self) -> list[int]:
-        """Retained COMMITTED version numbers, ascending.  Staged-but-
-        uncommitted manifests (crash orphans) are excluded — they were never
-        visible to any reader."""
-        cur = self.current_version()
-        return sorted(
-            v
-            for f in os.listdir(self.path)
-            if f.startswith("v=") and f.endswith(".json")
-            for v in (int(f[2:-5]),)
-            if v <= cur
-        )
 
     def read_partitions(
         self,
@@ -193,32 +171,33 @@ class PartitionedSnapshotTable(SnapshotTable):
         paths = (os.path.join(self.path, d) for d in parts.values())
         return spark.read.schema(schema).parquet(*paths)
 
-    # ---- stage / commit / abort ----
+    # ---- stage ----
 
-    def stage(self, df: DataFrame) -> int:
+    def stage(self, df: DataFrame) -> Staged:
         """Full-snapshot staging is the plain-table protocol; a partitioned
         table stages through :meth:`stage_merge` so untouched partitions are
         carried forward instead of rewritten."""
         raise MergeError("PartitionedSnapshotTable stages via stage_merge()")
 
-    def stage_merge(self, changed_df: DataFrame, changed_values: set[str]) -> int:
-        """Stage version N+1: write ONLY the changed partitions' new data
-        (one ``partitionBy`` job), carry every other partition forward by
-        reference.  A changed partition that comes back empty (all rows
-        deleted) is dropped from the manifest.  Invisible until commit.  The
-        frame is cast by name to the manifest's schema (the read schema), so
-        a wider source type cannot make the committed version unreadable."""
+    def stage_merge(self, changed_df: DataFrame, changed_values: set[str]) -> Staged:
+        """Stage a version on the current one: write ONLY the changed
+        partitions' new data (one ``partitionBy`` job into this writer's own
+        directory), carry every other partition forward by reference.  A
+        changed partition that comes back empty (all rows deleted) is dropped
+        from the manifest.  Invisible until commit.  The frame is cast by
+        name to the manifest's schema (the read schema), so a wider source
+        type cannot make the committed version unreadable."""
         m = self.manifest()
         pcol, schema = m["partition_by"], StructType.fromJson(m["schema"])
-        v = self.current_version() + 1
-        written: dict[str, str] = {}
+        data, written = None, {}
         if changed_values:
             have = dict(changed_df.dtypes)
             changed_df = changed_df.select(
                 *(_cast_strict(f.name, have.get(f.name), f.dataType) for f in schema))
-            written = self._write_partitions(changed_df, v, pcol)
+            data, written = self._write_partitions(changed_df, pcol)
             unexpected = set(written) - set(changed_values)
             if unexpected:
+                shutil.rmtree(os.path.join(self.path, data))
                 raise MergeError(
                     f"Staged data contains partitions not marked changed: {sorted(unexpected)!r}"
                 )
@@ -228,58 +207,21 @@ class PartitionedSnapshotTable(SnapshotTable):
                 parts[val] = written[val]
             else:
                 parts.pop(val, None)  # partition emptied by the merge
-        self._write_manifest(v, pcol, schema, parts)
-        return v
+        return Staged(m["version"], data, {"partition_by": pcol, "schema": m["schema"],
+                                           "partitions": parts})
 
-    def commit(self, version: int) -> None:
-        """Publish a staged manifest; same optimistic-concurrency contract as
-        :meth:`SnapshotTable.commit` (conflict ⇒ MergeConflictError)."""
-        if not os.path.exists(self._manifest_path(version)):
-            raise MergeError(f"Version {version} was never staged at {self.path!r}")
-        current = self.current_version()
-        if current != version - 1:
-            raise MergeConflictError(expected=version - 1, found=current)
-        self._swap_pointer(version)
-
-    def abort(self, version: int) -> None:
-        staged = os.path.join(self.path, "files", f"v{version}")
-        if os.path.isdir(staged):
-            shutil.rmtree(staged)
-        manifest = self._manifest_path(version)
-        if os.path.exists(manifest):
-            os.remove(manifest)
-
-    # ---- internals ----
-
-    def _write_partitions(self, df: DataFrame, version: int, pcol: str) -> dict[str, str]:
-        """One job: write ``df`` under ``files/v<version>/__part=<val>/``,
-        returning {canonical value: relative dir} from the actual listing."""
-        rel = os.path.join("files", f"v{version}")
-        out = os.path.join(self.path, rel)
-        df.withColumn(_PART, canon_col(pcol)).write.mode("overwrite").partitionBy(
-            _PART
-        ).parquet(out)
+    def _write_partitions(self, df: DataFrame, pcol: str) -> tuple[str, dict[str, str]]:
+        """One job: write ``df`` under ``files/<token>/__part=<val>/``,
+        returning the token directory and {canonical value: relative dir}
+        from the actual listing."""
+        data = self._write(df.withColumn(_PART, canon_col(pcol)).write.partitionBy(_PART).parquet)
+        out = os.path.join(self.path, data)
         found: dict[str, str] = {}
         prefix = f"{_PART}="
         for entry in os.listdir(out):
             if entry.startswith(prefix) and os.path.isdir(os.path.join(out, entry)):
-                found[unquote(entry[len(prefix):])] = os.path.join(rel, entry)
-        return found
-
-    def _write_manifest(
-        self, version: int, pcol: str, schema: StructType, parts: dict[str, str]
-    ) -> None:
-        clean = StructType([f for f in schema.fields if f.name != _PART])
-        doc = {
-            "version": version,
-            "partition_by": pcol,
-            "schema": clean.jsonValue(),
-            "partitions": parts,
-        }
-        fd, tmp = tempfile.mkstemp(dir=self.path, prefix="._manifest.")
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump(doc, f, indent=1, sort_keys=True)
-        os.replace(tmp, self._manifest_path(version))
+                found[unquote(entry[len(prefix):])] = os.path.join(data, entry)
+        return data, found
 
     # ---- maintenance ----
 
@@ -294,38 +236,14 @@ class PartitionedSnapshotTable(SnapshotTable):
         ``repartition(n, partition_col)`` hashes every value's rows into one
         task, so each partition directory receives exactly one file.
         Compaction is a data-identical merge commit — MVCC readers of older
-        versions are unaffected, and the commit conflict check serializes it
-        against concurrent merges."""
-        parts = self.partitions()
+        versions are unaffected, and it commits only on the version it read,
+        so a concurrent merge makes it fail, never lose that merge."""
+        m = self.manifest()
+        parts, base = m["partitions"], m["version"]
         chosen = set(parts) if values is None else {v for v in values if v in parts}
         if not chosen:
-            return self.current_version()
-        pcol = self.partition_by
-        data = self.read_partitions(spark, sorted(chosen)).repartition(
-            len(chosen), F.col(pcol)
+            return base
+        data = self.read_partitions(spark, sorted(chosen), version=base).repartition(
+            len(chosen), F.col(m["partition_by"])
         )
-        staged = self.stage_merge(data, chosen)
-        self.commit(staged)
-        return staged
-
-    def vacuum(self, keep: int = 2) -> list[int]:
-        """Drop manifests (and any data dirs no surviving manifest
-        references) for all but the newest ``keep`` committed versions."""
-        cur = self.current_version()
-        # committed versions only: a staged orphan must neither count toward
-        # `keep` nor be touched (it may belong to an in-flight committer)
-        versions = self.versions()
-        removable = [v for v in versions if v != cur][: max(0, len(versions) - keep)]
-        kept = [v for v in versions if v not in removable]
-        live_dirs = {d for v in kept for d in self.manifest(v)["partitions"].values()}
-        for v in removable:
-            os.remove(self._manifest_path(v))
-            vdir_rel = os.path.join("files", f"v{v}")
-            vdir = os.path.join(self.path, vdir_rel)
-            if os.path.isdir(vdir):
-                for entry in os.listdir(vdir):
-                    if os.path.join(vdir_rel, entry) not in live_dirs:
-                        shutil.rmtree(os.path.join(vdir, entry), ignore_errors=True)
-                if not any(e.startswith(_PART) for e in os.listdir(vdir)):
-                    shutil.rmtree(vdir, ignore_errors=True)
-        return removable
+        return self._commit_on(base, self.stage_merge(data, chosen))

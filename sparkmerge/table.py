@@ -1,4 +1,5 @@
-"""SnapshotTable — versioned parquet snapshots with an atomic pointer swap.
+"""SnapshotTable — versioned parquet snapshots committed by put-if-absent
+version records.
 
 Replaces the reference's ``begin transaction / commit / rollback``
 (sp_SimpleMerge.sql:470-479) and the ``lastUpdate`` extended property
@@ -6,40 +7,74 @@ Replaces the reference's ``begin transaction / commit / rollback``
 SURVEY.md §7.0):
 
     table_dir/
-      v=1/part-*.parquet     immutable snapshot versions
-      v=2/...
-      _CURRENT               text file holding the committed version number
-      _props.json            table properties (lastUpdate, ...)
+      files/<token>/part-*.parquet   one writer's data, immutable once written
+      v=1.json                       version records: data directory + schema
+      v=2.json
+      _props.json                    table properties (lastUpdate, ...)
 
-Commit protocol: write ``v=N+1`` fully, then atomically replace ``_CURRENT``
-(os.replace of a temp file — atomic on POSIX).  Abort = remove ``v=N+1`` and
-never touch the pointer, which is exactly the reference's rollback semantics
-(:478-479); readers resolving ``_CURRENT`` at open get MVCC snapshot reads
-for free.
+Commit protocol, shared with ``PartitionedSnapshotTable`` (ptable.py):
 
-100 TB notes: on object stores the pointer swap becomes a conditional PUT
-(S3 If-None-Match / GCS generation precondition) or a metastore update; the
-data-writing side is unchanged.  For partitioned targets, only partitions
-whose key range intersects the changeset need rewriting — untouched
-partitions can be carried forward by reference in a manifest instead of
-copied (SURVEY.md §7.2); this implementation rewrites the full snapshot,
-which is correct at any scale and optimal only for unpartitioned targets.
+- **stage**: each writer writes into its own ``files/<token>/``.  No record
+  names it, so no reader can see it, and staging reserves no version number:
+  the handle keeps the base version (current at staging) and the directory.
+- **commit**: check that the base is still current, write the complete
+  record to a temp file and ``os.link`` it to ``v=<base+1>.json``.  The link
+  fails if that name exists — a put-if-absent — so of two writers on one
+  base exactly one wins; the other gets ``MergeConflictError`` and its
+  staged files are removed.
+- The committed version is the largest ``N`` among the ``v=N.json`` records;
+  readers resolve it at open, so every read is an MVCC snapshot read.
+- **abort** (the ROLLBACK at :478-479) removes only the writer's own
+  ``files/<token>``.  **vacuum** drops old records, then the data
+  directories no kept record names; it never touches a staging directory no
+  record names, since one may belong to a writer that is still running.
+
+This is Delta Lake's log protocol (Armbrust et al., VLDB 2020).  On an object
+store the link becomes a conditional PUT (S3 ``If-None-Match: *``, GCS
+``ifGenerationMatch=0``); the data-writing side is unchanged.  Each version
+here is a full snapshot; ``PartitionedSnapshotTable`` rewrites only the
+partitions a merge touches and carries the rest forward by reference.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
+import secrets
 import shutil
 import tempfile
 from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from sparkmerge.errors import MergeConflictError, MergeError
 
-_CURRENT = "_CURRENT"
 _PROPS = "_props.json"
+_RECORD = re.compile(r"v=(\d+)\.json")
+
+
+def _token_dir(rel: str) -> str:
+    """``files/<token>`` of a data directory named relative to the table."""
+    return os.sep.join(rel.split(os.sep)[:2])
+
+
+@dataclass(frozen=True)
+class Staged:
+    """A staged, uncommitted version: the committed version it was staged on,
+    its private data directory (relative to the table; None when it wrote no
+    data), and the record :meth:`SnapshotTable.commit` publishes."""
+
+    base: int
+    data_dir: str | None
+    record: dict
+
+    @property
+    def version(self) -> int:
+        """The version this handle commits as."""
+        return self.base + 1
 
 
 @dataclass
@@ -49,21 +84,38 @@ class SnapshotTable:
 
     path: str
 
-    # ---- version bookkeeping ----
+    # ---- version records ----
 
-    def _version_dir(self, version: int) -> str:
-        return os.path.join(self.path, f"v={version}")
+    def _record_path(self, version: int) -> str:
+        return os.path.join(self.path, f"v={version}.json")
+
+    def versions(self) -> list[int]:
+        """Retained committed version numbers, ascending: one per record."""
+        if not os.path.isdir(self.path):
+            return []
+        return sorted(int(m[1]) for m in map(_RECORD.fullmatch, os.listdir(self.path)) if m)
 
     def current_version(self) -> int:
         """0 = table exists but has no committed snapshot yet."""
-        ptr = os.path.join(self.path, _CURRENT)
-        if not os.path.exists(ptr):
-            return 0
-        with open(ptr, encoding="utf-8") as f:
-            return int(f.read().strip())
+        return max(self.versions(), default=0)
 
     def exists(self) -> bool:
-        return os.path.exists(os.path.join(self.path, _CURRENT))
+        return self.current_version() > 0
+
+    def _record(self, version: int | None = None) -> dict:
+        """The record of a retained ``version`` (default: the current one)."""
+        v = self.current_version() if version is None else version
+        if v == 0:
+            raise MergeError(f"No committed snapshot at {self.path!r}")
+        try:
+            with open(self._record_path(v), encoding="utf-8") as f:
+                return json.load(f)
+        except FileNotFoundError:
+            raise MergeError(f"Version {v} not committed or vacuumed at {self.path!r}") from None
+
+    def _data_dirs(self, record: dict) -> list[str]:
+        """The data directories (relative to the table) a record names."""
+        return [record["data"]]
 
     # ---- read / write ----
 
@@ -74,78 +126,76 @@ class SnapshotTable:
         if table.exists():
             raise MergeError(f"Table already exists at {path!r}")
         os.makedirs(path, exist_ok=True)
-        df.write.mode("overwrite").parquet(table._version_dir(1))
-        table._swap_pointer(1)
+        table.commit(table.stage(df))
         return table
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        """Read the committed snapshot (resolves _CURRENT at call time), or a
-        specific retained ``version`` — time travel over the MVCC history
-        (any version not yet vacuumed stays readable)."""
-        v = self.current_version() if version is None else version
-        if v == 0:
-            raise MergeError(f"No committed snapshot at {self.path!r}")
-        if version is not None and version > self.current_version():
-            # staged-but-uncommitted data (crash orphans) must never be
-            # observable through the read API
-            raise MergeError(
-                f"Version {version} at {self.path!r} is staged but not committed"
-            )
-        if not os.path.isdir(self._version_dir(v)):
-            raise MergeError(f"Version {v} not found at {self.path!r} (vacuumed?)")
-        return spark.read.parquet(self._version_dir(v))
+        """Read the committed snapshot (resolved at call time), or a specific
+        retained ``version`` — time travel over the MVCC history (any version
+        not yet vacuumed stays readable).  The record's schema is the read
+        schema, so the scan infers nothing: a read is ONE job."""
+        rec = self._record(version)
+        path = os.path.join(self.path, rec["data"])
+        return spark.read.schema(StructType.fromJson(rec["schema"])).parquet(path)
 
-    def versions(self) -> list[int]:
-        """Retained COMMITTED version numbers, ascending.  Staged-but-
-        uncommitted directories (crash orphans) are excluded — they were
-        never visible to any reader."""
-        cur = self.current_version()
-        return sorted(
-            v
-            for d in os.listdir(self.path)
-            if d.startswith("v=") and os.path.isdir(os.path.join(self.path, d))
-            for v in (int(d.split("=", 1)[1]),)
-            if v <= cur
-        )
+    def _write(self, write: Callable[[str], None]) -> str:
+        """Run ``write(out)`` into a new private directory ``files/<token>``
+        and return it relative to the table.  A write that fails leaves
+        nothing behind."""
+        rel = os.path.join("files", secrets.token_hex(8))
+        out = os.path.join(self.path, rel)
+        try:
+            write(out)
+        except BaseException:
+            shutil.rmtree(out, ignore_errors=True)
+            raise
+        return rel
 
-    def stage(self, df: DataFrame) -> int:
-        """Write the next version's data WITHOUT committing it; returns the
-        staged version number.  This is 'run the merge inside the
-        transaction' — visible to no reader until commit."""
-        v = self.current_version() + 1
-        df.write.mode("overwrite").parquet(self._version_dir(v))
-        return v
+    def stage(self, df: DataFrame) -> Staged:
+        """Write a new snapshot WITHOUT committing it — 'run the merge inside
+        the transaction'.  No record names the data, so no reader sees it."""
+        base = self.current_version()
+        data = self._write(df.write.parquet)
+        return Staged(base, data, {"data": data, "schema": df.schema.jsonValue()})
 
-    def commit(self, version: int) -> None:
-        """Atomically publish a staged version (the COMMIT at
-        sp_SimpleMerge.sql:477).
+    def commit(self, staged: Staged) -> int:
+        """Publish ``staged`` as version ``base + 1`` (the COMMIT at
+        sp_SimpleMerge.sql:477); returns that version.
 
-        Optimistic concurrency: the staged version was derived from snapshot
-        ``version - 1``; if the pointer has moved since (a concurrent writer
-        committed), publishing would silently drop that writer's changes —
-        refuse with :class:`MergeConflictError` instead.  On an object store
-        the read-check-swap window closes with a conditional PUT
-        (If-Match on the pointer object); locally it is a detection, not a
-        lock — adequate for single-writer-per-table orchestration."""
-        if not os.path.isdir(self._version_dir(version)):
-            raise MergeError(f"Version {version} was never staged at {self.path!r}")
+        Optimistic concurrency: if another writer committed after ``base``,
+        publishing would silently drop its changes.  The record is linked
+        into place only if no record of that version exists, so exactly one
+        writer per base wins; the loser gets :class:`MergeConflictError` and
+        its staged files are removed (a stale handle can never commit)."""
         current = self.current_version()
-        if current != version - 1:
-            raise MergeConflictError(expected=version - 1, found=current)
-        self._swap_pointer(version)
+        if current == staged.base:
+            fd, tmp = tempfile.mkstemp(dir=self.path, prefix="._v.")
+            with os.fdopen(fd, "w", encoding="utf-8") as f:
+                json.dump({**staged.record, "version": staged.version}, f,
+                          sort_keys=True, separators=(",", ":"))
+            try:
+                os.link(tmp, self._record_path(staged.version))  # put-if-absent
+                return staged.version
+            except FileExistsError:  # another writer linked this version first
+                current = self.current_version()
+            finally:
+                os.unlink(tmp)
+        self.abort(staged)
+        raise MergeConflictError(expected=staged.base, found=current)
 
-    def abort(self, version: int) -> None:
-        """Discard a staged version (the ROLLBACK at sp_SimpleMerge.sql:478-479).
-        The pointer is untouched, so readers never observe the aborted data."""
-        staged = self._version_dir(version)
-        if os.path.isdir(staged):
-            shutil.rmtree(staged)
+    def _commit_on(self, base: int, staged: Staged) -> int:
+        """Commit ``staged`` if it was staged on ``base``, the version its data
+        was read at; on any other base it would drop the commits since."""
+        if staged.base != base:
+            self.abort(staged)
+            raise MergeConflictError(expected=base, found=staged.base)
+        return self.commit(staged)
 
-    def _swap_pointer(self, version: int) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.path, prefix="._CURRENT.")
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write(str(version))
-        os.replace(tmp, os.path.join(self.path, _CURRENT))  # atomic on POSIX
+    def abort(self, staged: Staged) -> None:
+        """Discard a staged version (the ROLLBACK at sp_SimpleMerge.sql:478-479):
+        remove this writer's own data directory, which no reader ever saw."""
+        if staged.data_dir is not None:
+            shutil.rmtree(os.path.join(self.path, staged.data_dir), ignore_errors=True)
 
     # ---- table properties (extended-property analog) ----
 
@@ -182,27 +232,31 @@ class SnapshotTable:
         still see the old schema."""
         from pyspark.sql import functions as F
 
-        existing = set(self.read(spark).columns)
-        clash = existing.intersection(columns)
+        base = self.current_version()
+        df = self.read(spark, version=base)
+        clash = set(df.columns).intersection(columns)
         if clash:
             raise MergeError(f"Columns already exist: {sorted(clash)!r}")
-        df = self.read(spark)
         for name, ddl in columns.items():
             df = df.withColumn(name, F.lit(None).cast(ddl))
-        staged = self.stage(df)
-        self.commit(staged)
-        return staged
+        return self._commit_on(base, self.stage(df))
 
     # ---- maintenance ----
 
     def vacuum(self, keep: int = 2) -> list[int]:
-        """Drop all but the newest ``keep`` committed versions (never the
-        current one).  Returns removed version numbers."""
-        cur = self.current_version()
-        # committed versions only: staged orphans neither count toward `keep`
-        # nor get removed (one may belong to an in-flight committer)
+        """Drop the records of all but the newest ``keep`` versions (never
+        the current one), then every data directory no kept record names.
+        Returns the removed version numbers.  A staging directory no record
+        names is never touched: it may belong to a writer still running."""
         versions = self.versions()
-        removable = [v for v in versions if v != cur][: max(0, len(versions) - keep)]
+        removable = versions[:-1][: max(0, len(versions) - keep)]
+        named = {v: self._data_dirs(self._record(v)) for v in versions}
+        live = {d for v in versions[len(removable):] for d in named[v]}
+        dead = {d for v in removable for d in named[v]} - live
         for v in removable:
-            shutil.rmtree(self._version_dir(v))
+            os.remove(self._record_path(v))
+        # a partitioned writer's token directory goes once none of it lives
+        dead |= {_token_dir(d) for d in dead} - {_token_dir(d) for d in live}
+        for d in dead:
+            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
         return removable

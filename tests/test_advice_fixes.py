@@ -8,8 +8,8 @@ Each test pins one reported defect:
    partition values instead of collecting an unbounded driver-side set.
 3. Soft-delete SET splitting must not split on commas inside single-quoted
    string literals.
-4. versions()/read(version=...) must never expose staged-but-uncommitted
-   (crash-orphan) versions.
+4. versions()/read()/vacuum() must never expose or touch staged but
+   uncommitted (crash-orphan) data.
 5. Streaming helpers raise when awaitTermination times out instead of
    returning a partially-populated sink.
 """
@@ -87,23 +87,28 @@ def test_orphan_staged_version_invisible(spark, tmp_path):
     orders = spark.read.parquet(f"{SF}/orders.parquet").limit(100)
     t = SnapshotTable.create(spark, str(tmp_path / "t"), orders)
     staged = t.stage(orders.withColumn("o_totalprice", F.lit(0.0)))
-    # crash between stage() and commit(): pointer still at 1
-    assert t.versions() == [1]
-    with pytest.raises(MergeError, match="staged but not committed"):
-        t.read(spark, version=staged)
+    # crash between stage() and commit(): version 1 is still current
+    assert t.versions() == [1] and t.current_version() == 1
+    with pytest.raises(MergeError, match="not committed"):
+        t.read(spark, version=staged.version)
+    assert t.read(spark).filter(F.col("o_totalprice") == 0.0).count() == 0
     # vacuum must not count or touch the orphan
     assert t.vacuum(keep=1) == []
-    assert os.path.isdir(os.path.join(str(tmp_path / "t"), f"v={staged}"))
+    assert os.path.isdir(os.path.join(t.path, staged.data_dir))
     t.commit(staged)
     assert t.versions() == [1, 2]
 
     p = PartitionedSnapshotTable.create(
         spark, str(tmp_path / "p"), orders, "o_orderstatus"
     )
-    pv = p.stage_merge(orders.limit(0), set())  # metadata-only staged manifest
+    pv = p.stage_merge(orders.filter("o_orderstatus = 'O'").withColumn(
+        "o_totalprice", F.lit(0.0)), {"O"})
     assert p.versions() == [1]
-    with pytest.raises(MergeError, match="staged but not committed"):
-        p.read(spark, version=pv)
+    with pytest.raises(MergeError, match="not committed"):
+        p.read(spark, version=pv.version)
+    assert p.read(spark).filter(F.col("o_totalprice") == 0.0).count() == 0
+    assert p.vacuum(keep=1) == []
+    assert os.path.isdir(os.path.join(p.path, pv.data_dir))
 
 
 def test_await_or_raise_times_out():

@@ -50,6 +50,16 @@ def same_rows(a, b):
     return a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
+def data_dirs(t):
+    """The writer directories under ``files/``, whatever their names."""
+    return set(os.listdir(os.path.join(t.path, "files")))
+
+
+def named_dirs(t):
+    """The writer directories some retained manifest names."""
+    return {d.split(os.sep)[1] for v in t.versions() for d in t.partitions(v).values()}
+
+
 def test_create_read_roundtrip(spark, orders, tmp_path):
     t = PartitionedSnapshotTable.create(spark, str(tmp_path / "t"), orders, "o_orderstatus")
     assert same_rows(t.read(spark), orders)
@@ -77,7 +87,8 @@ def test_untouched_partitions_carried_by_reference(spark, orders, tmp_path):
     merge_partitioned(spark, t, src, ["o_orderkey", "o_orderstatus"], prune_scan=True)
     v2_parts = t.partitions()
     assert v2_parts["F"] == v1_parts["F"] and v2_parts["P"] == v1_parts["P"]
-    assert v2_parts["O"] != v1_parts["O"] and v2_parts["O"].startswith(os.path.join("files", "v2"))
+    assert v2_parts["O"] != v1_parts["O"]
+    assert os.path.dirname(v2_parts["O"]) != os.path.dirname(v1_parts["F"])  # a new writer dir
     # scan-pruned semantics: 'F'/'P' rows byte-identical, 'O' converged to src
     final = t.read(spark)
     assert same_rows(final.filter("o_orderstatus <> 'O'"),
@@ -87,11 +98,12 @@ def test_untouched_partitions_carried_by_reference(spark, orders, tmp_path):
 
 def test_idempotent_merge_is_metadata_only(spark, orders, tmp_path):
     t = PartitionedSnapshotTable.create(spark, str(tmp_path / "t"), orders, "o_orderstatus")
+    dirs = data_dirs(t)
     res = merge_partitioned(spark, t, orders, "o_orderkey")
     assert res.changed_rows == 0 and res.committed and t.current_version() == 2
     # nothing rewritten: every manifest entry still points at v1 data
-    assert all(d.startswith(os.path.join("files", "v1")) for d in t.partitions().values())
-    assert not os.path.exists(str(tmp_path / "t" / "files" / "v2"))
+    assert t.partitions() == t.partitions(version=1)
+    assert data_dirs(t) == dirs
 
 
 def test_emptied_partition_dropped_from_manifest(spark, orders, tmp_path):
@@ -144,27 +156,30 @@ def test_vacuum_keeps_referenced_dirs(spark, orders, tmp_path):
 
 
 def test_commit_conflict_detected(spark, orders, tmp_path):
+    """A handle staged on a version that is no longer current is refused,
+    on both table kinds, even after later commits moved past it."""
     from sparkmerge.errors import MergeConflictError
     from sparkmerge.table import SnapshotTable
 
     t = PartitionedSnapshotTable.create(spark, str(tmp_path / "t"), orders, "o_orderstatus")
     # writer A stages against v1...
     staged_a = t.stage_merge(orders.filter("o_orderstatus = 'O'"), {"O"})
-    # ...but writer B commits first (simulated by swapping the pointer)
-    t._swap_pointer(staged_a)
-    t._write_manifest(staged_a + 1, "o_orderstatus", orders.schema, t.partitions())
+    # ...but writer B commits v2 and then v3 first
+    t.compact(spark)
+    t.compact(spark)
     with pytest.raises(MergeConflictError):
-        # A's staged version now trails the pointer — publishing must refuse
+        # A's staged version now trails the current one — publishing must refuse
         t.commit(staged_a)
+    assert t.versions() == [1, 2, 3]
 
     # plain SnapshotTable: same contract
     s = SnapshotTable.create(spark, str(tmp_path / "s"), orders.limit(10))
-    v2 = s.stage(orders.limit(5))
-    s._swap_pointer(v2)  # concurrent writer took v2
-    v2b = s.stage(orders.limit(3))  # stages v3 — fine
-    s.commit(v2b)  # v3 over v2: no conflict
+    stale = s.stage(orders.limit(5))
+    s.add_columns(spark, {"x": "int"})  # a concurrent writer took v2
+    assert s.commit(s.stage(orders.limit(3))) == 3  # staged on v2: no conflict
     with pytest.raises(MergeConflictError):
-        s.commit(v2)  # stale staged version must refuse
+        s.commit(stale)  # stale staged version must refuse
+    assert s.versions() == [1, 2, 3] and s.read(spark).count() == 3
 
 
 def test_compact_merges_small_files(spark, orders, tmp_path):
@@ -386,7 +401,7 @@ def test_prune_scan_with_broadcast_strategy(spark, orders, tmp_path):
     assert same_rows(t.read(spark), t2.read(spark))
     parts = t.partitions()
     assert parts["F"] == v1_parts["F"] and parts["P"] == v1_parts["P"]
-    assert parts["O"].startswith(os.path.join("files", "v2"))
+    assert parts["O"] != v1_parts["O"]
 
 
 def test_incremental_ingest_loop(spark, tmp_path):
@@ -423,11 +438,11 @@ def test_incremental_ingest_loop(spark, tmp_path):
         assert all(after[m] == before[m] for m in before if m != months[i])
         assert {m for m in after if after[m] != before.get(m)} <= {months[i]}
         expected = merge_preview(expected, delta, keys, delete="NO")
-        v = t.current_version()
+        v, dirs = t.current_version(), data_dirs(t)
         merge_partitioned(spark, t, delta, keys, delete="NO",
                           prune_scan=True, strategy="auto")
         assert t.current_version() == v + 1  # committed...
-        assert not os.path.exists(str(tmp_path / "t" / "files" / f"v{v + 1}"))  # ...metadata-only
+        assert data_dirs(t) == dirs  # ...metadata-only
     assert same_rows(t.read(spark), expected)
     assert same_rows(t.read(spark, version=1), orders)
 
@@ -443,7 +458,8 @@ def test_staged_files_match_manifest_schema(spark, tmp_path):
     """A source wider than the table (``v bigint`` into ``v int``) is cast
     to the manifest's types before staging, so the committed version stays
     readable; a value that does not fit fails the merge before commit, with
-    ANSI mode on or off (a lenient cast would commit a wrapped integer)."""
+    ANSI mode on or off (a lenient cast would commit a wrapped integer), and
+    the failed staging write leaves no directory behind."""
     t, df = _ints_table(spark, str(tmp_path / "t"))
     wide = df.withColumn("v", F.col("v").cast("bigint") + 1)
     merge_partitioned(spark, t, wide.filter("p = 'A'"), ["k", "p"], prune_scan=True)
@@ -460,6 +476,7 @@ def test_staged_files_match_manifest_schema(spark, tmp_path):
                 merge_partitioned(spark, t, huge, ["k", "p"], prune_scan=True)
             assert t.current_version() == 2
             assert not os.path.exists(str(tmp_path / "t" / "v=3.json"))
+            assert data_dirs(t) == named_dirs(t)
     finally:
         spark.conf.set("spark.sql.ansi.enabled", ansi)
     assert sorted(r["v"] for r in t.read(spark).collect()) == [11, 21, 30, 40]
@@ -477,14 +494,20 @@ def _jobs(spark, tag, fn):
 
 
 def test_job_counts_per_call(spark, orders, tmp_path):
-    """A read opens with the manifest's schema (no footer-inference job),
-    and a pruned merge finds its changed partitions in one aggregation."""
+    """A read opens with the version record's schema (no footer-inference
+    job), and a pruned merge finds its changed partitions in one aggregation."""
+    from sparkmerge.table import SnapshotTable
+
     t = PartitionedSnapshotTable.create(spark, str(tmp_path / "t"), orders, "o_orderstatus")
 
     def noop(df):
         df.write.format("noop").mode("overwrite").save()
 
     assert _jobs(spark, "ptable-read", lambda: noop(t.read(spark))) == 1
+    # a plain snapshot reads with its record's schema too (2 jobs when the
+    # schema came from the parquet footers)
+    s = SnapshotTable.create(spark, str(tmp_path / "s"), orders)
+    assert _jobs(spark, "table-read", lambda: noop(s.read(spark))) == 1
     assert _jobs(spark, "ptable-read-parts", lambda: noop(t.read_partitions(spark, ["O"]))) == 1
 
     keys = ["o_orderkey", "o_orderstatus"]
@@ -512,12 +535,13 @@ def test_changed_partition_discovery(spark, tmp_path, monkeypatch):
     # A and B change; then A, B and C, more groups than the limit keeps
     touch_all = moved.withColumn("v", F.when(F.col("k") == 4, 41).otherwise(F.col("v")))
     monkeypatch.setattr(ptable_mod, "MAX_PARTITION_VALUES", 1)
+    dirs = data_dirs(t)
     for src in (moved, touch_all):
         with pytest.raises(MergeValidationError, match="touches >1 distinct partitions"):
             merge_partitioned(spark, t, src, "k")
         assert t.current_version() == 1
         assert not os.path.exists(str(tmp_path / "t" / "v=2.json"))
-        assert not os.path.exists(str(tmp_path / "t" / "files" / "v2"))
+        assert data_dirs(t) == dirs
 
     monkeypatch.undo()
     res = merge_partitioned(spark, t, moved, "k")

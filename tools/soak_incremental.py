@@ -92,13 +92,14 @@ def main() -> None:
                 ok = False
                 print(f"day {i}: COPY-FORWARD VIOLATION touched={sorted(touched)}")
             # idempotence: same batch again must be a metadata-only commit
-            v = tbl.current_version()
+            files = os.path.join(d, "t", "files")
+            dirs = set(os.listdir(files))
             merge_partitioned(spark, tbl, delta, keys, delete="NO",
                               prune_scan=True, strategy="auto")
-            data_dir = os.path.join(d, "t", "files", f"v{tbl.current_version()}")
-            if os.path.exists(data_dir):
+            wrote = set(os.listdir(files)) - dirs
+            if wrote:
                 ok = False
-                print(f"day {i}: idempotent re-merge wrote data ({data_dir})")
+                print(f"day {i}: idempotent re-merge wrote data ({sorted(wrote)})")
             if i == days // 2:
                 tbl.compact(spark)
         # convergence: storage loop ≡ pure-dataflow replay
