@@ -240,6 +240,18 @@ def _report(cs: Changeset, merge_sql: str, thr: float | None, in_scope: DataFram
     )
 
 
+def _check_threshold(changed: int, before: int, thr: float | None) -> float | None:
+    """The threshold guard: the changed share of the in-scope rows, in
+    percent; raises ``MergeThresholdExceeded`` past ``thr``."""
+    if thr is None:
+        return None
+    variance = (changed / before * 100.0) if before > 0 else 0.0
+    # empty-target bypass: proceed when the target had no rows (:476)
+    if before > 0 and variance > thr:
+        raise MergeThresholdExceeded(variance, thr, changed, before)
+    return variance
+
+
 def _commit(
     target: SnapshotTable,
     base: int,
@@ -259,12 +271,7 @@ def _commit(
     staged = stage()
     try:
         changed, before = counts()
-        variance = None
-        if thr is not None:
-            variance = (changed / before * 100.0) if before > 0 else 0.0
-            # empty-target bypass: proceed when the target had no rows (:476)
-            if before > 0 and variance > thr:
-                raise MergeThresholdExceeded(variance, thr, changed, before)
+        variance = _check_threshold(changed, before, thr)
         version = target._commit_on(base, staged)
     except BaseException:
         target.abort(staged)
@@ -425,6 +432,9 @@ def merge_partitioned(
                 f"of {pcol!r}; partition by a coarser key."
             )
 
+        # the counts are known before anything is written, so a threshold
+        # trip stages nothing
+        _check_threshold(changed, before, thr)
         new_state = cs.apply_changes()
         if not changed_vals:
             changed_state = new_state.limit(0)

@@ -102,30 +102,29 @@ _FORCE_REVERIFY = {
     "orders_basket_lift",
     "tpch_q5",
     "tpch_q21_style",
-    # --- r13 session-3: bitmask set aggregations over bounded domains
-    # (output-identical to the sets paths, hash-verified sf0.01 + sf0.1
-    # pre-commit; brand_audience's mask path is size-gated to ≥512 MiB
-    # lineitem, so the small-SF plan is unchanged):
+    # --- member-set ops on the shared word-partitioned bitset primitive
+    # (sparkmerge.ext.bitsets; one plan at every SF and member count,
+    # hash-verified sf0.01 + sf0.1 pre-commit):
     "dedup_cross_source_matrix",
     "orders_brand_audience_jaccard",
-    # --- r13 session-3: _edges pair generation is Generate-based (arrays)
-    # — every co-occurrence-graph consumer re-verified (all 15 hash-green
+    # --- r13 session-3: _edges pair generation is Generate-based (the
+    # one pair path) — every co-occurrence-graph consumer re-verified (all 15 hash-green
     # at sf0.01 pre-commit, key ops also at sf0.1); the three driver-bench
     # visible ones queued:
     "graph_cooccurrence_edges",
     "graph_kcore_peel",
     "graph_degree_profile",
-    # --- r13 session-3: type-co-occurrence bitmask core (size-gated;
-    # hash-verified sf0.01 + sf0.1 pre-commit, determinism stable):
+    # --- type-co-occurrence core on the bitset primitive (hash-verified
+    # sf0.01 + sf0.1 pre-commit):
     "events_type_lift_matrix",
     "events_type_cooccurrence_daily",
     # --- r13 session-3: triangle kernel regenerates oriented edges from
     # the adjacency arrays (hash-verified sf0.01 + sf0.1 pre-commit):
     "graph_triangle_count",
     "graph_clustering_coefficient",
-    # --- r13 session-4: per-token source-set aggregation is bitmask-based
-    # (the cross-source recipe on tokens; output-identical to agg='sets',
-    # hash-verified sf0.01 + sf0.1 pre-commit):
+    # --- per-token source-set aggregation on the bitset primitive (the
+    # cross-source recipe on tokens; hash-verified sf0.01 + sf0.1
+    # pre-commit):
     "text_source_vocab_overlap",
     # --- r13 session-4: pagerank's adjacency checkpoint records its
     # hashpartitioning (AQE-off materialization) and r0 derives from the
@@ -137,9 +136,9 @@ _FORCE_REVERIFY = {
     # pre-commit, determinism stable):
     "dedup_cluster_survivors",
     # --- r13 session-6: the recall certifier is the inverted-index
-    # intersection count over text-grain classes (truth set proven
-    # identical to the nlj certifier at 3 SFs pre-commit; hash-verified
-    # sf0.01 + sf0.1, determinism stable):
+    # intersection count over text-grain classes (truth set checked
+    # against a pure-Python brute force at sf0.001 and sf0.01 in tests;
+    # hash-verified sf0.01 + sf0.1, determinism stable):
     "dedup_lsh_recall_eval",
     # --- r11 rewrite confirmations still owed (q1 decimal shift /
     # cumulative-share guard / q9 long-cents / funnel min-chain):

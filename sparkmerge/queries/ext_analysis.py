@@ -892,12 +892,11 @@ SELECT part_a, part_b, pair_n, ia.c AS n_a, ib.c AS n_b,
     "support/confidence/lift from EXACT int64 counts, one IEEE division "
     "each; prune on/off output-identical (tested)",
 )
-def orders_basket_lift(spark, sf_dir, apriori_prune=False, basket_build="sorted"):
+def orders_basket_lift(spark, sf_dir, apriori_prune=False):
     li = load(spark, sf_dir, "lineitem")
     # r13 (guide §2.3 — cheaper aggregation; r12 verdict lead item): the
-    # basket build is now SORT-BASED.  The r7-r12 build (basket_build=
-    # "arrays", kept for the measured A/B and the output-identity
-    # regression test) ran sort_array(collect_set(...)) as an
+    # basket build is SORT-BASED.  The r7-r12 build ran
+    # sort_array(collect_set(...)) as an
     # ObjectHashAggregate — 15M per-order array buffers resident in a hash
     # map until each partition ends, the op's dominant stage at sf10
     # (12-17 s/pass solo on this host, 24-27 s in an aged session: exactly
@@ -914,20 +913,13 @@ def orders_basket_lift(spark, sf_dir, apriori_prune=False, basket_build="sorted"
     # (join machinery per pair vs codegen Generate) and its checkpointed
     # 60M-row build starved the 32-way aggregates into
     # AGGREGATE_OUT_OF_MEMORY under the 8g local profile.
-    if basket_build == "sorted":
-        baskets = _sortagg_checkpoint(
-            li.select("l_orderkey", "l_partkey")
-            .repartition("l_orderkey")
-            .sortWithinPartitions("l_orderkey", "l_partkey")
-            .groupBy("l_orderkey")
-            .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
-        )
-    else:
-        baskets = (
-            li.groupBy("l_orderkey")
-            .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
-            .localCheckpoint(eager=True)
-        )
+    baskets = _sortagg_checkpoint(
+        li.select("l_orderkey", "l_partkey")
+        .repartition("l_orderkey")
+        .sortWithinPartitions("l_orderkey", "l_partkey")
+        .groupBy("l_orderkey")
+        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
+    )
     n = baskets.agg(F.count(F.lit(1)).alias("n_orders"))
     item = (
         baskets.select(F.explode("parts").alias("l_partkey"))
@@ -1594,157 +1586,42 @@ def orders_fulfillment_latency(spark, sf_dir):
 # — ONE IEEE division of cross-multiplied exact integers (the log-free
 # PMI surrogate; same bucket unit as the co-occurrence graph builder).
 #
-# Scale: dedup (bucket, type) presence in ONE map-side-combined shuffle;
-# each bucket's sorted ≤|types| set expands to i < j pairs MAP-SIDE
-# (posexplode+slice — the dedup_cross_source_matrix pattern, never a
-# bucket-level self-join); the pair aggregation's domain is |types|², the
+# Scale: each bucket's type set is ONE bitset in ONE map-side-combined
+# shuffle (sparkmerge.ext.bitsets — the dedup_cross_source_matrix
+# pattern, never a bucket-level self-join); the distinct type sets expand
+# to i < j pairs, the pair aggregation's domain is |types|², the
 # marginals broadcast back onto it.  Overflow: n_ab·N ≤ N² ≈ 1e16 at
 # sf10's ~1e8 buckets — safe in int64.
 
 
-# agg='auto' gate for the type-co-occurrence pair (the brand_audience
-# precedent): the bitmask path wins where the bucket population is large
-# (interleaved fresh-session A/B at sf10, 112 MiB events: lift matrix
-# 3.9-4.3 → 1.9-2.0 s, daily 2.0 → 1.6 s) but its wider plan costs
-# ~0.15-0.2 s of tiny-stage overhead under the lean small-SF profile
-# (sf0.1: 0.61 → 0.76 s / 0.36 → 0.56 s).  Unknown size → sets (the
-# semantics-identical, domain-unbounded path).
-_TYPE_MASK_MIN_BYTES = 64 * 1024 * 1024
-
-
-def _type_cooccurrence_agg(sf_dir: str) -> str:
-    import os
-
-    try:
-        size = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
-    except OSError:
-        return "sets"
-    return "mask" if size >= _TYPE_MASK_MIN_BYTES else "sets"
-
-
-def _type_bucket_cooccurrence(spark, sf_dir, bucket, agg):
+def _type_bucket_cooccurrence(spark, sf_dir, bucket):
     """Shared (user, bucket) × event-type co-occurrence core for the lift
-    matrix and its daily-grain companion: returns (pairs, ma, mb, n_total)
-    — the i < j type-pair presence counts, both marginal legs, and the
-    bucket-population count.
+    matrix and its daily-grain companion: returns (pairs, n_total) — the
+    i < j type-pair presence counts with both marginals
+    (``type_a, type_b, n_ab, n_a, n_b``) and the bucket-population count.
 
-    r13 (guide §2.3/§2.4 — the cross-source/brand-audience bitmask idiom):
-    ``agg='mask'`` (what ``'auto'`` resolves to past the size gate above)
-    aggregates each (user, bucket)'s type set as
-    ONE bit_or long keyed on the bucket — the idempotent OR replaces the
-    distinct() exchange AND the collect_set ObjectHashAggregate — and the
-    pair counts, marginals, and bucket total all derive from the
-    DISTINCT-MASK count relation (≤ 2^|types| rows), so the expensive
-    stream is shuffled exactly once and aggregated once.  Bit ids are
-    type-string-rank, so i < j bit pairs are exactly the sorted string
-    pairs the r8 path produced; raise_error past 64 types — never a
-    silent wrap.  ``agg='sets'`` keeps the r8-r12 distinct + collect_set
-    path (the >64-type fallback and regression/identity surface).
-    Measured at sf10 (fresh-session warm protocol, interleaved):
-    lift matrix 6.5 → see OPTIMIZATION_r13.md."""
-    from pyspark.sql.window import Window
+    Each (user, bucket)'s type set is one bitset keyed on the bucket
+    (sparkmerge.ext.bitsets): the idempotent bit_or replaces a distinct()
+    exchange and a collect_set ObjectHashAggregate, and the pair counts,
+    marginals and bucket total all derive from the DISTINCT-MASK count
+    relation (≤ 2^|types| rows), so the expensive stream is shuffled
+    exactly once and aggregated once.  Bit ids are type-string-rank, so
+    i < j bit pairs are exactly the sorted string pairs."""
+    from sparkmerge.ext.bitsets import member_ids, member_pairs, member_set_counts
 
-    if agg == "auto":
-        agg = _type_cooccurrence_agg(sf_dir)
     e = load(spark, sf_dir, "events")
-    if agg == "sets":
-        pres = (
-            e.select("user_id", bucket.alias("b"), "event_type")
-            .repartition("user_id", "b")
-            .distinct()
-        )
-        per_bucket = pres.groupBy("user_id", "b").agg(
-            F.sort_array(F.collect_set("event_type")).alias("types")
-        )
-        n_total = per_bucket.agg(F.count(F.lit(1)).alias("n"))
-        marg = pres.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_t"))
-        pairs = (
-            per_bucket.select(
-                F.posexplode("types").alias("i", "type_a"), "types"
-            )
-            .select(
-                "type_a",
-                F.explode(F.expr("slice(types, i + 2, size(types))")).alias(
-                    "type_b"
-                ),
-            )
-            .groupBy("type_a", "type_b")
-            .agg(F.count(F.lit(1)).alias("n_ab"))
-        )
-        ma = marg.select(
-            F.col("event_type").alias("type_a"), F.col("n_t").alias("n_a")
-        )
-        mb = marg.select(
-            F.col("event_type").alias("type_b"), F.col("n_t").alias("n_b")
-        )
-        return pairs, ma, mb, n_total
-    if agg != "mask":
-        raise ValueError(f"Unknown agg: {agg!r}")
-    tid = F.row_number().over(Window.orderBy("event_type")) - 1
-    tids = (
-        e.select("event_type")
-        .distinct()
-        .select(
-            "event_type",
-            F.when(tid < 64, tid)
-            .otherwise(
-                F.raise_error(
-                    F.lit(
-                        "events type-co-occurrence agg='mask' supports at "
-                        "most 64 event types; use agg='sets'"
-                    )
-                ).cast("int")
-            )
-            .alias("tid"),
-        )
-        # bounded (≤|types| rows) with THREE consumers (the stream join,
-        # ma, mb) — each would re-run the distinct over the events scan
-        .localCheckpoint(eager=True)
+    ids = member_ids(e, "event_type")
+    keyed = e.select("user_id", bucket.alias("b"), "event_type").join(
+        F.broadcast(ids.df), "event_type"
     )
-    stream = e.select("user_id", bucket.alias("b"), "event_type").join(
-        F.broadcast(tids), "event_type"
+    # bounded, read four times (pairs, both marginals, the total)
+    counts = member_set_counts(keyed, ["user_id", "b"], ids).localCheckpoint(eager=True)
+    pairs = member_pairs(counts).select(
+        F.col("a").alias("type_a"), F.col("b").alias("type_b"),
+        "n_ab", "n_a", "n_b",
     )
-    masks = stream.groupBy("user_id", "b").agg(
-        F.bit_or(F.expr("shiftleft(CAST(1 AS BIGINT), tid)")).alias("m")
-    )
-    mask_counts = (
-        masks.groupBy("m")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)  # bounded: ≤ 2^|types| rows, 3 consumers
-    )
-    n_total = mask_counts.agg(F.sum("cnt").alias("n"))
-    bits = F.expr("filter(sequence(0, 63), b -> ((m >> b) & 1) = 1)")
-    bp = mask_counts.select("cnt", bits.alias("bits"))
-    marg = (
-        bp.select("cnt", F.explode("bits").alias("tid"))
-        .groupBy("tid")
-        .agg(F.sum("cnt").alias("n_t"))
-    )
-    id_pairs = bp.select(
-        "cnt", F.posexplode("bits").alias("i", "ta"), "bits"
-    ).select(
-        "cnt",
-        "ta",
-        F.explode(F.expr("slice(bits, i + 2, size(bits))")).alias("tb"),
-    )
-    na = tids.select(F.col("event_type").alias("type_a"), F.col("tid").alias("ta"))
-    nb = tids.select(F.col("event_type").alias("type_b"), F.col("tid").alias("tb"))
-    pairs = (
-        id_pairs.groupBy("ta", "tb")
-        .agg(F.sum("cnt").alias("n_ab"))
-        .join(F.broadcast(na), "ta")
-        .join(F.broadcast(nb), "tb")
-        .select("type_a", "type_b", "n_ab")
-    )
-    ma = (
-        marg.join(F.broadcast(tids), "tid")
-        .select(F.col("event_type").alias("type_a"), F.col("n_t").alias("n_a"))
-    )
-    mb = (
-        marg.join(F.broadcast(tids), "tid")
-        .select(F.col("event_type").alias("type_b"), F.col("n_t").alias("n_b"))
-    )
-    return pairs, ma, mb, n_total
+    n_total = counts.where(F.col("a").isNull()).select("n")
+    return pairs, n_total
 
 
 
@@ -1778,36 +1655,29 @@ SELECT p.type_a, p.type_b, ma.n_t AS n_a, mb.n_t AS n_b, p.n_ab,
 """,
     description="event-type co-occurrence lift matrix (market-basket "
     "association for streams): (user, hour) bucket presences dedup in ONE "
-    "map-side-combined shuffle — at scale (size-gated agg='auto', r13) as "
-    "a bit_or type BITMASK per bucket whose idempotent OR replaces the "
-    "distinct() exchange and the collect_set ObjectHashAggregate, with "
+    "map-side-combined shuffle as a type bitset per bucket (ext.bitsets: "
+    "the idempotent bit_or replaces a distinct() exchange and a "
+    "collect_set ObjectHashAggregate, no cap on the type count), with "
     "pairs, marginals AND the bucket total all derived from the "
     "distinct-mask count relation (≤2^|types| rows; bit ids are "
-    "type-string-rank, raise_error past 64); below the gate the narrow "
-    "sets plan stays (sorted ≤|types| sets, posexplode+slice pairs) — "
-    "both paths output-identical (tested); lift = ONE IEEE division of "
+    "type-string-rank); lift = ONE IEEE division of "
     "cross-multiplied exact integers (log-free PMI surrogate; n_ab·N ≤ N² "
     "safe in int64 at sf10)",
 )
-def events_type_lift_matrix(spark, sf_dir, agg="auto"):
-    pairs, ma, mb, n_total = _type_bucket_cooccurrence(
-        spark, sf_dir, F.date_trunc("hour", F.col("ts")), agg
+def events_type_lift_matrix(spark, sf_dir):
+    pairs, n_total = _type_bucket_cooccurrence(
+        spark, sf_dir, F.date_trunc("hour", F.col("ts"))
     )
-    return (
-        pairs.join(F.broadcast(ma), "type_a")
-        .join(F.broadcast(mb), "type_b")
-        .crossJoin(F.broadcast(n_total))
-        .select(
-            "type_a",
-            "type_b",
-            "n_a",
-            "n_b",
-            "n_ab",
-            (
-                (F.col("n_ab") * F.col("n")).cast("double")
-                / (F.col("n_a") * F.col("n_b")).cast("double")
-            ).alias("lift"),
-        )
+    return pairs.crossJoin(F.broadcast(n_total)).select(
+        "type_a",
+        "type_b",
+        "n_a",
+        "n_b",
+        "n_ab",
+        (
+            (F.col("n_ab") * F.col("n")).cast("double")
+            / (F.col("n_a") * F.col("n_b")).cast("double")
+        ).alias("lift"),
     )
 
 
@@ -2520,39 +2390,14 @@ def events_benford_digit_profile(spark, sf_dir):
 # Brand audience overlap at the CUSTOMER grain: for every brand pair, the
 # Jaccard of their buyer sets (|both| / |either|) — the assortment-
 # cannibalization / cross-sell table (orders_basket_lift is the same
-# question at the order grain with a lift measure).  Pair generation is
-# the posexplode+slice idiom over the per-customer sorted brand set
-# (≤|brands| = 25, so fan-out ≤ 325 per customer — bounded by the
-# CATALOG, not the data), with per-brand audience totals emitted in the
-# SAME exploded stream as '' -sentinel tokens so the expensive upstream
-# (two shuffle joins + the customer-set agg) runs EXACTLY once.  The
-# aggregated (a, b) relation is bounded (≤ |brands|² rows) and feeds
-# three consumers, so it is eagerly checkpointed per the bounded-
-# intermediate rule; the totals re-attach as broadcast joins.  Jaccard =
-# ONE IEEE division of exact integers via inclusion-exclusion.
-
-
-# agg='auto' gate for orders_brand_audience_jaccard: the bitmask path wins
-# where the per-customer set-buffer population is large (measured 1.5-1.6×
-# at sf10, a wash at sf1) but its wider plan — id-mapping relation, two
-# bounded checkpoints, per-bit expansions — costs ~0.3 s of tiny-stage
-# overhead under the lean small-SF profile where the whole op is sub-second
-# (measured 0.8 → 1.0-1.3 s at sf0.1).  Gate on the driving table's parquet
-# size, the tpch_q5 precedent: past ~512 MiB of lineitem the buffer
-# population dominates and the mask path is strictly better; below it the
-# narrow sets plan is.  Unknown size → sets (the semantics-identical,
-# domain-unbounded path).
-_BRAND_MASK_MIN_BYTES = 512 * 1024 * 1024
-
-
-def _brand_audience_agg(sf_dir: str) -> str:
-    import os
-
-    try:
-        size = os.path.getsize(os.path.join(sf_dir, "lineitem.parquet"))
-    except OSError:
-        return "sets"
-    return "mask" if size >= _BRAND_MASK_MIN_BYTES else "sets"
+# question at the order grain with a lift measure).  Each customer's
+# brand set is one bitset (sparkmerge.ext.bitsets); pairs and per-brand
+# audience totals come from ONE sentinel expansion of the distinct sets,
+# so the expensive upstream (two joins + the customer-set agg) runs
+# EXACTLY once.  The aggregated (a, b) relation is bounded (≤ |brands|²
+# rows) and feeds three consumers, so it is eagerly checkpointed per the
+# bounded-intermediate rule; the totals re-attach as broadcast joins.
+# Jaccard = ONE IEEE division of exact integers via inclusion-exclusion.
 
 
 @register(
@@ -2579,156 +2424,43 @@ SELECT brand_a, brand_b, n_both,
 """,
     description="brand-pair audience Jaccard at the customer grain "
     "(cross-sell / cannibalization table): per-customer brand sets over "
-    "the bounded catalog domain (≤|brands| = 25) — at scale (size-gated "
-    "agg='auto', r13) ONE bit_or bitmask HashAggregate keyed on custkey "
-    "whose idempotent OR replaces the distinct() exchange AND the "
-    "collect_set ObjectHashAggregate, with pair + audience counts "
-    "expanded from the distinct-mask count relation (bit ids are "
-    "brand-string-rank, so i < j bit pairs are the sorted string pairs; "
-    "raise_error past 64 bits); below the gate the narrow sets plan "
-    "(sorted collect_set + sentinel-token exploded stream) stays — both "
-    "paths output-identical (tested); Jaccard = ONE IEEE division of "
-    "exact integers (inclusion-exclusion)",
+    "the bounded catalog domain (≤|brands| = 25) as ONE bitset "
+    "HashAggregate keyed on custkey (ext.bitsets) whose idempotent OR "
+    "replaces a distinct() exchange AND a collect_set "
+    "ObjectHashAggregate, with pair + audience counts expanded from the "
+    "distinct-mask count relation (bit ids are brand-string-rank, so "
+    "i < j bit pairs are the sorted string pairs; no cap on the brand "
+    "count); Jaccard = ONE IEEE division of exact integers "
+    "(inclusion-exclusion)",
 )
-def orders_brand_audience_jaccard(spark, sf_dir, agg="auto"):
-    from pyspark.sql.window import Window
+def orders_brand_audience_jaccard(spark, sf_dir):
+    from sparkmerge.ext.bitsets import member_ids, member_pairs, member_set_counts
 
-    if agg == "auto":
-        agg = _brand_audience_agg(sf_dir)
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     p = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    # r13 (guide §2.3/§2.4 — cheaper aggregation, remove a shuffle
-    # outright): the per-customer brand-set aggregation is BITMASK-based
-    # at scale (``agg='auto'`` resolves via the parquet-size gate above;
-    # ``agg='mask'``/``'sets'`` force a path).  The r8-r12 path (the
-    # >64-brand fallback and regression surface) ran
-    # distinct() over (custkey, brand) — one full exchange — then
-    # collect_set per customer (ObjectHashAggregate, ~1.5M resident set
-    # buffers at sf1) and exploded pairs per customer.  Brands are a
-    # bounded catalog domain (25), so each brand gets a dense bit id in
-    # BRAND-STRING SORT ORDER and the whole set build is ONE
-    # bit_or(1L << bid) HashAggregate keyed on o_custkey: OR is
-    # idempotent, so the distinct() exchange is gone (the partial agg
-    # dedups for free), the agg is declarative codegen, and pair + single
-    # counts expand from the DISTINCT-MASK count relation (≤ 2^|brands|
-    # but in practice ≤ |customers| rows, tiny) instead of per customer.
-    # The sentinel-token trick becomes unnecessary — singles are the
-    # per-bit sums over the same mask counts.  Outputs identical ints;
-    # the mask path raise_errors past 64 brands — never a silent wrap.
-    if agg == "sets":
-        cb = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .join(p, li.l_partkey == p.p_partkey)
-            .select("o_custkey", "p_brand")
-            .distinct()
-        )
-        sets = cb.groupBy("o_custkey").agg(
-            F.sort_array(F.collect_set("p_brand")).alias("brands")
-        )
-        # one exploded stream carries BOTH the (a, tail) pairs and a
-        # ''-sentinel single per element — the upstream runs exactly once
-        tok = sets.select(
-            F.posexplode("brands").alias("i", "a"), "brands"
-        ).select(
-            "a",
-            F.explode(
-                F.concat(
-                    F.array(F.lit("")),
-                    F.expr("slice(brands, i + 2, size(brands))"),
-                )
-            ).alias("b"),
-        )
-        g = tok.groupBy("a", "b").agg(F.count(F.lit(1)).alias("n"))
-        g = g.localCheckpoint(eager=True)  # bounded: ≤ |brands|² rows
-        singles = g.filter(F.col("b") == "").select(
-            F.col("a").alias("brand"), F.col("n").alias("n_single")
-        )
-        pairs = g.filter(F.col("b") != "").select(
-            F.col("a").alias("brand_a"), F.col("b").alias("brand_b"),
-            F.col("n").alias("n_both"),
-        )
-    elif agg == "mask":
-        bid = F.row_number().over(Window.orderBy("brand")) - 1
-        bids = (
-            p.select(F.col("p_brand").alias("brand"))
-            .distinct()
-            .select(
-                "brand",
-                F.when(bid < 64, bid)
-                .otherwise(
-                    F.raise_error(
-                        F.lit(
-                            "orders_brand_audience_jaccard agg='mask' "
-                            "supports at most 64 brands; use agg='sets'"
-                        )
-                    ).cast("int")
-                )
-                .alias("bid"),
-            )
-            # bounded (≤|brands| rows) with FOUR consumers (pb join, the
-            # singles name re-attach, na, nb) — without the checkpoint each
-            # consumer re-runs the distinct over the part scan
-            .localCheckpoint(eager=True)
-        )
-        pb = p.join(
-            F.broadcast(bids), p.p_brand == bids.brand
-        ).select("p_partkey", "bid")
-        stream = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .join(pb, li.l_partkey == pb.p_partkey)
-            .select("o_custkey", "bid")
-        )
-        masks = stream.groupBy("o_custkey").agg(
-            F.bit_or(F.expr("shiftleft(CAST(1 AS BIGINT), bid)")).alias("m")
-        )
-        mask_counts = (
-            masks.groupBy("m")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .localCheckpoint(eager=True)  # bounded: ≤ distinct masks
-        )
-        bits = F.expr("filter(sequence(0, 63), b -> ((m >> b) & 1) = 1)")
-        bp = mask_counts.select("cnt", bits.alias("bits"))
-        singles = (
-            bp.select("cnt", F.explode("bits").alias("bid"))
-            .groupBy("bid")
-            .agg(F.sum("cnt").alias("n_single"))
-            .join(F.broadcast(bids), "bid")
-            .select("brand", "n_single")
-        )
-        id_pairs = bp.select(
-            "cnt", F.posexplode("bits").alias("i", "ba"), "bits"
-        ).select(
-            "cnt",
-            "ba",
-            F.explode(F.expr("slice(bits, i + 2, size(bits))")).alias("bb"),
-        )
-        na = bids.select(F.col("brand").alias("brand_a"), F.col("bid").alias("ba"))
-        nb = bids.select(F.col("brand").alias("brand_b"), F.col("bid").alias("bb"))
-        pairs = (
-            id_pairs.groupBy("ba", "bb")
-            .agg(F.sum("cnt").alias("n_both"))
-            .join(F.broadcast(na), "ba")
-            .join(F.broadcast(nb), "bb")
-            .select("brand_a", "brand_b", "n_both")
-        )
-    else:
-        raise ValueError(f"Unknown agg: {agg!r}")
-    ta = singles.select(
-        F.col("brand").alias("brand_a"), F.col("n_single").alias("n_a")
+    # one bitset per customer keyed on o_custkey: the idempotent OR needs
+    # no distinct() over (custkey, brand), and pair + audience counts
+    # expand from the distinct-mask count relation, not per customer.  The
+    # brand id attaches per PART (~|parts| string probes, not ~|lineitems|;
+    # attaching it after the joins measured ~1 s slower at sf1)
+    ids = member_ids(p, "p_brand")
+    pb = p.join(F.broadcast(ids.df), "p_brand")
+    keyed = li.join(o, li.l_orderkey == o.o_orderkey).join(
+        pb, li.l_partkey == pb.p_partkey
     )
-    tb = singles.select(
-        F.col("brand").alias("brand_b"), F.col("n_single").alias("n_b")
-    )
-    out = (
-        pairs.join(F.broadcast(ta), "brand_a")
-        .join(F.broadcast(tb), "brand_b")
-    )
-    jac = F.col("n_both").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_both")
+    # bounded, and member_pairs reads it three times
+    counts = member_set_counts(keyed, ["o_custkey"], ids).localCheckpoint(eager=True)
+    jac = F.col("n_ab").cast("double") / (
+        F.col("n_a") + F.col("n_b") - F.col("n_ab")
     ).cast("double")
-    return out.select(
-        "brand_a", "brand_b", "n_both", "n_a", "n_b", jac.alias("jaccard")
+    return member_pairs(counts).select(
+        F.col("a").alias("brand_a"),
+        F.col("b").alias("brand_b"),
+        F.col("n_ab").alias("n_both"),
+        "n_a",
+        "n_b",
+        jac.alias("jaccard"),
     )
 
 
@@ -3000,11 +2732,11 @@ def orders_monthly_mix_shift(spark, sf_dir):
 # same-DAY user co-presence counts with each pair's per-mille reach into
 # the RARER type's audience ((1000·n_ab) DIV min(n_a, n_b) — the
 # confidence-style association read; exact integers, non-negative, so DIV
-# is engine-portable).  Same scale shape as the hourly matrix: (user, day)
-# presences dedup in ONE map-side-combined shuffle, each bucket's sorted
-# ≤|types| set expands to i < j pairs MAP-SIDE (posexplode+slice — never a
-# bucket self-join), the pair aggregation domain is |types|², and
-# marginals re-attach broadcast.
+# is engine-portable).  Same scale shape as the hourly matrix: each
+# (user, day) bucket's type set is ONE bitset in ONE map-side-combined
+# shuffle, the distinct type sets expand to i < j pairs (never a bucket
+# self-join), the pair aggregation domain is |types|², and marginals
+# re-attach broadcast.
 
 
 @register(
@@ -3032,30 +2764,22 @@ SELECT type_a, type_b, ma.n_t AS n_a, mb.n_t AS n_b, n_ab,
   JOIN marg mb ON mb.event_type = type_b
 """,
     description="daily event-type co-occurrence: (user, day) presences "
-    "dedup in ONE map-side-combined shuffle — at scale (size-gated "
-    "agg='auto', r13) as a bit_or type BITMASK per bucket (the lift-"
-    "matrix core, shared helper; pairs and marginals derive from the "
-    "distinct-mask counts), below the gate the sorted-set posexplode+"
-    "slice plan — both paths output-identical (tested); per-mille reach "
+    "dedup in ONE map-side-combined shuffle as a type bitset per bucket "
+    "(the lift-matrix core, shared helper over ext.bitsets; pairs and "
+    "marginals derive from the distinct-mask counts); per-mille reach "
     "into the rarer type's audience ((1000·n_ab) DIV min(n_a,n_b), exact "
     "non-negative integers) — the daily-grain companion of the "
     "hour-bucket lift matrix",
 )
-def events_type_cooccurrence_daily(spark, sf_dir, agg="auto"):
-    pairs, ma, mb, _ = _type_bucket_cooccurrence(
-        spark, sf_dir, F.col("ts").cast("date"), agg
-    )
-    return (
-        pairs.join(F.broadcast(ma), "type_a")
-        .join(F.broadcast(mb), "type_b")
-        .select(
-            "type_a",
-            "type_b",
-            "n_a",
-            "n_b",
-            "n_ab",
-            F.expr("(1000 * n_ab) div least(n_a, n_b)").alias("pm_of_rarer"),
-        )
+def events_type_cooccurrence_daily(spark, sf_dir):
+    pairs, _ = _type_bucket_cooccurrence(spark, sf_dir, F.col("ts").cast("date"))
+    return pairs.select(
+        "type_a",
+        "type_b",
+        "n_a",
+        "n_b",
+        "n_ab",
+        F.expr("(1000 * n_ab) div least(n_a, n_b)").alias("pm_of_rarer"),
     )
 
 

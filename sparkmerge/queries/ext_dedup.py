@@ -677,7 +677,7 @@ def dedup_sorted_neighborhood(spark, sf_dir):
 
 _EVAL_MOD = 20  # evaluation sample: doc_id % 20 == 0 (the ngram-op sample)
 
-# certifier='count' broadcast gate: force the sampled-side broadcast only
+# certifier broadcast gate: force the sampled-side broadcast only
 # while the documents table is provably small (~512 MiB parquet ≈ well
 # within executor memory for the 1/20-sampled shingle explode); past it the
 # scale profile's AQE picks the join from runtime stats (tpch_q5 precedent)
@@ -733,151 +733,118 @@ SELECT CAST(count(*) FILTER (is_true) AS BIGINT) AS n_true,
     "test) runs only on pairs with a sampled endpoint; truth threshold "
     "J ≥ 0.5 tested as the integer inequality 3·inter ≥ |A|+|B|",
 )
-def dedup_lsh_recall_eval(spark, sf_dir, certifier="count"):
+def dedup_lsh_recall_eval(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
     # exact side: the SAME normalize + 5-shingle definition the MinHash
     # signatures use (sparkmerge/ext/dedup.py shingles/minhash_signatures);
     # truth pairs have at least one SAMPLED endpoint (the ngram-op sampling
     # style: probe side sampled, build side full corpus).
-    if certifier == "count":
-        # r13 (guide §2.3/§3): the brute-force certifier below is a
-        # broadcast nested-loop evaluating array_intersect on every
-        # (sample × corpus) pair — measured 60.9 s at sf0.1 on a plan
-        # that can't parallelize past the tiny scan's splits, and
-        # quadratic in the corpus at fixed sample rate.  (A PPJoin
-        # prefix-filter rewrite was measured first and rejected: at
-        # threshold 0.5 over CHARACTER shingles the prefix join emits
-        # 2.67M candidate rows — MORE than the 1.25M brute-force pairs —
-        # because 5-gram sets are large and diffuse; 32.9 s.)  The landed
-        # certifier is the inverted-index intersection COUNT: explode
-        # each class's distinct shingles, equi-join sampled × corpus
-        # classes on the shingle string (exact — the raw string is the
-        # join key), and |A∩B| is the matched-row count per class pair —
-        # no per-pair array_intersect ever runs, the join mass is
-        # Σ|A∩B| (76M rows at sf0.1, map-side partial-agg'd), and every
-        # stage parallelizes.  Classes first — but on NORMALIZED TEXT
-        # (the _minhash_pairs collapse, a plain string group key), NOT on
-        # the shingle-set array: identical text ⟹ identical set, and a
-        # groupBy keyed on the ~280-element string ARRAY was measured at
-        # 16.5-18 s for 5k rows (complex-type keys fall off the fast
-        # hash-agg path) vs 0.9 s for the string key.  Two distinct texts
-        # with an identical shingle set simply stay distinct classes —
-        # their cross pair is counted exactly (inter=|A| ⟹ J=1 ≥ 0.5),
-        # so the truth set is unchanged.  Within-class pairs are J=1 by
-        # identity, emitted by the member expansion; the truth threshold
-        # stays the integer inequality 3·inter ≥ |A|+|B|.
-        #
-        # Join-side discipline (the tpch_q5 size-gate precedent): the
-        # SAMPLED-classes explode is the build side, but its size grows
-        # with the corpus, so the broadcast hint is gated on the
-        # documents parquet size — without it the lean profile's
-        # checkpoint-blind stats pick BuildRight on the CORPUS explode
-        # (measured: a ~1M-row string-keyed broadcast, 25-37 s; hinted
-        # build + spread corpus stream: 1.8-3.4 s).  Past the gate no
-        # hint is forced and the scale profile's AQE plans the join from
-        # runtime stats.  The corpus repartition is gated the same way:
-        # under the lean profile the checkpointed classes sit on fewer
-        # partitions than cores and the 76M-row join+partial-agg would
-        # serialize (the _spread rationale).
-        from sparkmerge.ext.dedup import _expand_pairs, _spread, shingles
+    # r13 (guide §2.3/§3): a brute-force certifier (a broadcast
+    # nested-loop evaluating array_intersect on every (sample × corpus)
+    # pair, the oracle's formulation) measured 60.9 s at sf0.1 on a plan
+    # that can't parallelize past the tiny scan's splits, and is
+    # quadratic in the corpus at fixed sample rate.  (A PPJoin
+    # prefix-filter rewrite was measured first and rejected: at
+    # threshold 0.5 over CHARACTER shingles the prefix join emits
+    # 2.67M candidate rows — MORE than the 1.25M brute-force pairs —
+    # because 5-gram sets are large and diffuse; 32.9 s.)  The landed
+    # certifier is the inverted-index intersection COUNT: explode
+    # each class's distinct shingles, equi-join sampled × corpus
+    # classes on the shingle string (exact — the raw string is the
+    # join key), and |A∩B| is the matched-row count per class pair —
+    # no per-pair array_intersect ever runs, the join mass is
+    # Σ|A∩B| (76M rows at sf0.1, map-side partial-agg'd), and every
+    # stage parallelizes.  Classes first — but on NORMALIZED TEXT
+    # (the _minhash_pairs collapse, a plain string group key), NOT on
+    # the shingle-set array: identical text ⟹ identical set, and a
+    # groupBy keyed on the ~280-element string ARRAY was measured at
+    # 16.5-18 s for 5k rows (complex-type keys fall off the fast
+    # hash-agg path) vs 0.9 s for the string key.  Two distinct texts
+    # with an identical shingle set simply stay distinct classes —
+    # their cross pair is counted exactly (inter=|A| ⟹ J=1 ≥ 0.5),
+    # so the truth set is unchanged.  Within-class pairs are J=1 by
+    # identity, emitted by the member expansion; the truth threshold
+    # stays the integer inequality 3·inter ≥ |A|+|B|.
+    #
+    # Join-side discipline (the tpch_q5 size-gate precedent): the
+    # SAMPLED-classes explode is the build side, but its size grows
+    # with the corpus, so the broadcast hint is gated on the
+    # documents parquet size — without it the lean profile's
+    # checkpoint-blind stats pick BuildRight on the CORPUS explode
+    # (measured: a ~1M-row string-keyed broadcast, 25-37 s; hinted
+    # build + spread corpus stream: 1.8-3.4 s).  Past the gate no
+    # hint is forced and the scale profile's AQE plans the join from
+    # runtime stats.  The corpus repartition is gated the same way:
+    # under the lean profile the checkpointed classes sit on fewer
+    # partitions than cores and the 76M-row join+partial-agg would
+    # serialize (the _spread rationale).
+    from sparkmerge.ext.dedup import _expand_pairs, _spread, shingles
 
-        norm = _spread(d.select("doc_id", "text")).select(
-            "doc_id",
-            F.regexp_replace(F.lower(F.col("text")), r"\s+", " ").alias("_norm"),
-        )
-        # NULL-text docs never pair (array_intersect(NULL, ·) fails the
-        # brute-force filter); drop them before the collapse so a NULL
-        # class can't emit within-class pairs
-        classes = (
-            norm.filter(F.col("_norm").isNotNull())
-            .groupBy("_norm")
-            .agg(F.sort_array(F.collect_list("doc_id")).alias("_ids"))
-            .localCheckpoint(eager=True)
-        )
-        # shingles() re-normalizes its input — idempotent on _norm (the
-        # _minhash_pairs argument); sets are per-CLASS, computed once
-        cb = classes.select(
-            F.col("_ids")[0].alias("_id"),
-            F.array_distinct(shingles(F.col("_norm"), 5)).alias("_toks"),
-            F.exists("_ids", lambda i: i % _EVAL_MOD == 0).alias("_probe"),
-        )
-        try:
-            import os as _os
+    norm = _spread(d.select("doc_id", "text")).select(
+        "doc_id",
+        F.regexp_replace(F.lower(F.col("text")), r"\s+", " ").alias("_norm"),
+    )
+    # NULL-text docs never pair (array_intersect(NULL, ·) fails the
+    # oracle's filter); drop them before the collapse so a NULL
+    # class can't emit within-class pairs
+    classes = (
+        norm.filter(F.col("_norm").isNotNull())
+        .groupBy("_norm")
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("_ids"))
+        .localCheckpoint(eager=True)
+    )
+    # shingles() re-normalizes its input — idempotent on _norm (the
+    # _minhash_pairs argument); sets are per-CLASS, computed once
+    cb = classes.select(
+        F.col("_ids")[0].alias("_id"),
+        F.array_distinct(shingles(F.col("_norm"), 5)).alias("_toks"),
+        F.exists("_ids", lambda i: i % _EVAL_MOD == 0).alias("_probe"),
+    )
+    try:
+        import os as _os
 
-            small = _os.path.getsize(
-                _os.path.join(sf_dir, "documents.parquet")
-            ) <= _RECALL_BCAST_MAX_BYTES
-        except OSError:
-            small = False  # unknown size: never force a broadcast
-        bsrc = (
-            cb.repartition(spark.sparkContext.defaultParallelism)
-            if small
-            else cb
+        small = _os.path.getsize(
+            _os.path.join(sf_dir, "documents.parquet")
+        ) <= _RECALL_BCAST_MAX_BYTES
+    except OSError:
+        small = False  # unknown size: never force a broadcast
+    bsrc = (
+        cb.repartition(spark.sparkContext.defaultParallelism)
+        if small
+        else cb
+    )
+    a = cb.filter(F.col("_probe")).select(
+        F.col("_id").alias("a_id"),
+        F.size("_toks").alias("_an"),
+        F.explode("_toks").alias("_tok"),
+    )
+    b = bsrc.select(
+        F.col("_id").alias("b_id"),
+        F.size("_toks").alias("_bn"),
+        F.explode("_toks").alias("_tok"),
+    )
+    qual = (
+        (F.broadcast(a) if small else a).join(b, "_tok")
+        .filter(F.col("a_id") != F.col("b_id"))
+        .groupBy("a_id", "_an", "b_id", "_bn")
+        .agg(F.count(F.lit(1)).alias("_i"))
+        .filter(3 * F.col("_i") >= F.col("_an") + F.col("_bn"))
+        .select(
+            F.least("a_id", "b_id").alias("a_id"),
+            F.greatest("a_id", "b_id").alias("b_id"),
         )
-        a = cb.filter(F.col("_probe")).select(
-            F.col("_id").alias("a_id"),
-            F.size("_toks").alias("_an"),
-            F.explode("_toks").alias("_tok"),
+        .dropDuplicates(["a_id", "b_id"])  # both-sampled class pairs
+        .withColumn("_v", F.lit(1.0))  # expansion carrier, dropped below
+    )
+    truth = (
+        _expand_pairs(classes, qual, "_v", directed=False)
+        .filter(
+            (F.col("a_id") % _EVAL_MOD == 0)
+            | (F.col("b_id") % _EVAL_MOD == 0)
         )
-        b = bsrc.select(
-            F.col("_id").alias("b_id"),
-            F.size("_toks").alias("_bn"),
-            F.explode("_toks").alias("_tok"),
-        )
-        qual = (
-            (F.broadcast(a) if small else a).join(b, "_tok")
-            .filter(F.col("a_id") != F.col("b_id"))
-            .groupBy("a_id", "_an", "b_id", "_bn")
-            .agg(F.count(F.lit(1)).alias("_i"))
-            .filter(3 * F.col("_i") >= F.col("_an") + F.col("_bn"))
-            .select(
-                F.least("a_id", "b_id").alias("a_id"),
-                F.greatest("a_id", "b_id").alias("b_id"),
-            )
-            .dropDuplicates(["a_id", "b_id"])  # both-sampled class pairs
-            .withColumn("_v", F.lit(1.0))  # expansion carrier, dropped below
-        )
-        truth = (
-            _expand_pairs(classes, qual, "_v", directed=False)
-            .filter(
-                (F.col("a_id") % _EVAL_MOD == 0)
-                | (F.col("b_id") % _EVAL_MOD == 0)
-            )
-            .select("a_id", "b_id")
-            .withColumn("is_true", F.lit(True))
-        )
-    elif certifier == "nlj":
-        # the pre-r13 brute-force certifier — kept as the regression
-        # surface for test_recall_eval_certifiers_output_identical
-        norm = d.select(
-            "doc_id",
-            F.regexp_replace(F.lower(F.col("text")), r"\s+", " ").alias("_norm"),
-        )
-        idx = F.sequence(F.lit(1), F.greatest(F.length("_norm") - 4, F.lit(1)))
-        sets = norm.select(
-            "doc_id",
-            F.array_distinct(
-                F.transform(idx, lambda i: F.substring(F.col("_norm"), i, 5))
-            ).alias("ss"),
-        )
-        a = sets.filter(F.col("doc_id") % _EVAL_MOD == 0).select(
-            F.col("doc_id").alias("p_id"), F.col("ss").alias("sa")
-        )
-        b = sets.select(F.col("doc_id").alias("c_id"), F.col("ss").alias("sb"))
-        inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
-        truth = (
-            F.broadcast(a)
-            .join(b, F.col("p_id") != F.col("c_id"))
-            .filter(3 * inter >= F.size("sa") + F.size("sb"))
-            .select(
-                F.least(F.col("p_id"), F.col("c_id")).alias("a_id"),
-                F.greatest(F.col("p_id"), F.col("c_id")).alias("b_id"),
-            )
-            .distinct()  # both-sampled pairs are found from each endpoint
-            .withColumn("is_true", F.lit(True))
-        )
-    else:
-        raise ValueError(f"unknown certifier {certifier!r}")
+        .select("a_id", "b_id")
+        .withColumn("is_true", F.lit(True))
+    )
     cand = (
         _minhash_pairs(spark, sf_dir)
         .filter(
@@ -926,13 +893,13 @@ def dedup_lsh_recall_eval(spark, sf_dir, certifier="count"):
 # sets, an under-count of at most 1 per colliding pair at ~2^-64 per
 # shingle pair; the exact raw-string path stays the oracle surface).  Each
 # distinct (shingle, source) contributes once; shingles aggregate their
-# DISTINCT source sets in ONE content-keyed shuffle — since r13 as a
-# BITMASK long over dense source-rank bits (bit_or is idempotent, so the
-# partial agg dedups for free and the whole aggregation is a declarative
-# codegen HashAggregate instead of collect_set's ObjectHashAggregate) —
-# then the mask→count relation (bounded by distinct masks, thousands of
-# rows at any SF) expands into i < j source pairs, so the pair
-# aggregation's domain is |sources|², never |docs|².  The oracle certifies
+# DISTINCT source sets in ONE content-keyed shuffle — as a bitset over
+# dense source-rank bits (sparkmerge.ext.bitsets: bit_or is idempotent, so
+# the partial agg dedups for free and the whole aggregation is a
+# declarative codegen HashAggregate instead of collect_set's
+# ObjectHashAggregate) — then the mask→count relation (bounded by
+# distinct masks, thousands of rows at any SF) expands into i < j source
+# pairs, so the pair aggregation's domain is |sources|², never |docs|².  The oracle certifies
 # via the self-join formulation on the distinct (shingle, source) relation.
 
 
@@ -962,50 +929,23 @@ SELECT source_a, source_b, CAST(count(*) AS BIGINT) AS n_shared_shingles
     "weighting audit): distinct 5-word shingles per source group by their "
     "raw string (md5 measured pure overhead at this key width; xxhash64 "
     "is the 100 TB shuffle-compaction lever), each shingle aggregates its "
-    "distinct source set in ONE content-keyed map-side-combined shuffle — "
-    "as a BITMASK long (bit_or of dense source-rank bits, fully-codegen "
-    "declarative HashAggregate; r13, replacing the collect_set "
-    "ObjectHashAggregate whose ~25M resident set buffers were the sf10 "
-    "cost) — and the pair expansion runs over the DISTINCT-MASK counts "
+    "distinct source set in ONE content-keyed map-side-combined shuffle as "
+    "a word-partitioned bitset (ext.bitsets: bit_or of dense source-rank "
+    "bits, fully-codegen declarative HashAggregate, no cap on the source "
+    "count) — and the pair expansion runs over the DISTINCT-MASK counts "
     "(≤ min(2^|sources|, |shingles|) rows), never per shingle; bit ids "
     "are source-string-rank so i < j bit pairs are exactly the sorted "
-    "string pairs; agg='sets' keeps the collect_set path (>64-source "
-    "fallback, output-identity regression surface; the mask path "
-    "raise_errors past 64 — never a silent wrap); shingle_key='hash' is "
+    "string pairs; shingle_key='hash' is "
     "the REGISTERED 100 TB lever (xxhash64 compacts the ~30-byte shingle "
     "string to an 8-byte shuffle key before the groupBy — counts-only "
     "surface, so cross-engine digest match is not required); oracle "
     "certifies against the (shingle, source) self-join formulation",
 )
-def dedup_cross_source_matrix(spark, sf_dir, shingle_key="raw", agg="mask"):
-    from pyspark.sql.window import Window
-
+def dedup_cross_source_matrix(spark, sf_dir, shingle_key="raw"):
+    from sparkmerge.ext.bitsets import member_ids, member_set_counts
     from sparkmerge.ext.text import whitespace_tokens
 
     d = load(spark, sf_dir, "documents")
-    # r13 (guide §2.3 — cheaper aggregation, narrower types): the per-
-    # shingle source-set aggregation is BITMASK-based by default
-    # (``agg='mask'``).  collect_set is a typed imperative aggregate —
-    # ObjectHashAggregate keeps every one of the ~25M (sf10) per-shingle
-    # set buffers resident until its partition ends (the exact profile the
-    # r13 basket-build fix removed), and the pair fan-out then runs over
-    # every shingle row.  The source domain is BOUNDED (20 on every test
-    # corpus; a curated feed list at any scale), so each source gets a
-    # dense bit id in SOURCE-STRING SORT ORDER (a row_number over the
-    # ≤|sources| distinct relation — the order sort_array(collect_set(..))
-    # produced, so i < j bit pairs are exactly the old string-sorted
-    # pairs), ``bit_or(1L << sid)`` aggregates each shingle's source set
-    # as ONE long in a fully-codegen declarative HashAggregate (partial
-    # agg stays map-side-combined; OR is idempotent so duplicate
-    # (h, source) rows need no dedup), and the pair expansion collapses to
-    # the DISTINCT-MASK relation (masks → count, ≤ thousands of rows at
-    # any SF) instead of running per shingle.  Outputs are identical ints.
-    # ``agg='sets'`` keeps the r12 collect_set path (the >64-source
-    # fallback and the output-identity regression surface); the mask path
-    # guards the 64-bit bound with an in-plan raise_error on the tiny
-    # sid relation — never a silent wrap.
-    if agg not in ("mask", "sets"):
-        raise ValueError(f"Unknown agg: {agg!r}")
     tokd = d.select(
         "source", whitespace_tokens(F.lower(F.col("text"))).alias("t")
     )
@@ -1016,8 +956,8 @@ def dedup_cross_source_matrix(spark, sf_dir, shingle_key="raw", agg="mask"):
     ).otherwise(F.expr("array()"))
     # explode the index FIRST, build each shingle with plain slice/join
     # expressions (codegen) — a transform() lambda here runs interpreted
-    # over every shingle and measured ~15 % slower at sf1; collect_set
-    # dedups (h, source) in-agg, so no separate distinct pass
+    # over every shingle and measured ~15 % slower at sf1; the bitset
+    # aggregate dedups (h, source) in-agg, so no separate distinct pass
     ex = tokd.select("source", "t", F.explode(idx).alias("i"))
     h = F.array_join(F.expr("slice(t, i, 5)"), " ")
     if shingle_key == "hash":
@@ -1031,73 +971,11 @@ def dedup_cross_source_matrix(spark, sf_dir, shingle_key="raw", agg="mask"):
         h = F.xxhash64(h)
     elif shingle_key != "raw":
         raise ValueError(f"Unknown shingle_key: {shingle_key!r}")
-    if agg == "sets":
-        per_shingle = (
-            ex.select("source", h.alias("h"))
-            .groupBy("h")
-            .agg(F.sort_array(F.collect_set("source")).alias("sources"))
-        )
-        pairs = (
-            per_shingle.select(
-                F.posexplode("sources").alias("i", "source_a"), "sources"
-            ).select(
-                "source_a",
-                F.explode(
-                    F.expr("slice(sources, i + 2, size(sources))")
-                ).alias("source_b"),
-            )
-        )
-        return pairs.groupBy("source_a", "source_b").agg(
-            F.count(F.lit(1)).alias("n_shared_shingles")
-        )
-    # dense bit ids in source-string sort order; bounded relation, one
-    # single-partition row_number window over ≤|sources| rows
-    sid = F.row_number().over(Window.orderBy("source")) - 1
-    sids = (
-        d.select("source")
-        .distinct()
-        .select(
-            "source",
-            F.when(sid < 64, sid)
-            .otherwise(
-                F.raise_error(
-                    F.lit(
-                        "dedup_cross_source_matrix agg='mask' supports at "
-                        "most 64 sources; use agg='sets'"
-                    )
-                ).cast("int")
-            )
-            .alias("sid"),
-        )
-        # bounded (≤|sources| rows) with THREE consumers (the exi join,
-        # na, nb) — without the checkpoint each consumer re-runs the
-        # distinct over the documents scan
-        .localCheckpoint(eager=True)
-    )
-    # attach the bit id per DOC (pre-explode — ~|docs| probes, not
-    # ~|shingles|); the shingle stream then carries only (h, sid)
-    exi = ex.join(F.broadcast(sids), "source").select(h.alias("h"), "sid")
-    per_shingle = exi.groupBy("h").agg(
-        F.bit_or(F.expr("shiftleft(CAST(1 AS BIGINT), sid)")).alias("m")
-    )
-    # the pair domain collapses to distinct masks → count (tiny at any SF)
-    mask_counts = per_shingle.groupBy("m").agg(F.count(F.lit(1)).alias("cnt"))
-    bits = F.expr("filter(sequence(0, 63), b -> ((m >> b) & 1) = 1)")
-    bp = mask_counts.select("cnt", bits.alias("bits"))
-    id_pairs = bp.select(
-        "cnt", F.posexplode("bits").alias("i", "ba"), "bits"
-    ).select(
-        "cnt",
-        "ba",
-        F.explode(F.expr("slice(bits, i + 2, size(bits))")).alias("bb"),
-    )
-    cnt_pairs = id_pairs.groupBy("ba", "bb").agg(
-        F.sum("cnt").alias("n_shared_shingles")
-    )
-    na = sids.select(F.col("source").alias("source_a"), F.col("sid").alias("ba"))
-    nb = sids.select(F.col("source").alias("source_b"), F.col("sid").alias("bb"))
-    return (
-        cnt_pairs.join(F.broadcast(na), "ba")
-        .join(F.broadcast(nb), "bb")
-        .select("source_a", "source_b", "n_shared_shingles")
+    ids = member_ids(d, "source")
+    keyed = ex.join(F.broadcast(ids.df), "source")
+    counts = member_set_counts(keyed, [h.alias("h")], ids)
+    return counts.where(F.col("b").isNotNull()).select(
+        F.col("a").alias("source_a"),
+        F.col("b").alias("source_b"),
+        F.col("n").alias("n_shared_shingles"),
     )

@@ -26,10 +26,10 @@ Scale notes (100 TB): the edge builder groups per (hour, type) bucket,
 CAPS bucket membership at ``_BUCKET_CAP`` members (deterministic
 integer-mix ranking — a uniform sample, not head-of-id bias), then
 expands pairs map-side from each bucket's ≤cap-element sorted member
-array (r13; the r4-r12 bucket-local self-join is kept as
-``pairgen='join'``), so per-bucket pair cost is bounded by cap² at
-ANY corpus density.  The r4/r5 uncapped builder (pair cost Θ(Σ occupancy²)
-on a corpus that densifies with scale: 43 s at sf1 for the builder alone,
+array (r13, replacing the r4-r12 bucket-local self-join), so
+per-bucket pair cost is bounded by cap² at ANY corpus density.  The r4/r5
+uncapped builder (pair cost Θ(Σ occupancy²) on a corpus that densifies
+with scale: 43 s at sf1 for the builder alone,
 SCALING.md) was the repo's last super-linear surface; the whole family
 migrated to the capped derivation in r6 (r5 verdict ask #2) after
 ``graph_cooccurrence_capped`` proved it green and 27× faster at sf1.
@@ -92,9 +92,7 @@ edges AS (
 _EDGES_SQL = _edges_sql(_BUCKET_CAP)
 
 
-def _edges(
-    spark, sf_dir, cap: int = _BUCKET_CAP, pairgen: str = "arrays"
-) -> DataFrame:
+def _edges(spark, sf_dir, cap: int = _BUCKET_CAP) -> DataFrame:
     """Undirected weighted edges (u < v) from (hour, event_type) bucket
     co-occurrence, bucket membership capped at ``cap`` members (one
     bucket-keyed rank window, deterministic integer-mix order).
@@ -117,8 +115,7 @@ def _edges(
     Generate pays an array slice (interleaved fresh-session A/B, noop
     sink, median-of-3/5: sf0.1 0.52-0.62 → 0.42 s, sf10 3.4-4.0 →
     1.9-2.7 s, sf1 wash; output identity verified row-for-row at sf0.1's
-    765,742 edges and by the family oracle sweep).  ``pairgen='join'``
-    keeps the self-join as the regression/identity surface."""
+    765,742 edges and by the family oracle sweep)."""
     from pyspark.sql.window import Window
 
     ev = (
@@ -137,27 +134,10 @@ def _edges(
         )
     )
     capped = ev.withColumn("rn", rn).filter(F.col("rn") <= cap).drop("rn")
-    if pairgen == "join":
-        l, r = capped.alias("l"), capped.alias("r")
-        return (
-            l.join(
-                r,
-                (F.col("l.b") == F.col("r.b"))
-                & (F.col("l.event_type") == F.col("r.event_type"))
-                & (F.col("l.user_id") < F.col("r.user_id")),
-            )
-            .groupBy(
-                F.col("l.user_id").alias("u"),
-                F.col("r.user_id").alias("v"),
-            )
-            .agg(F.count(F.lit(1)).alias("w"))
-        )
-    if pairgen != "arrays":
-        raise ValueError(f"Unknown pairgen: {pairgen!r}")
     # per-bucket sorted member arrays (bounded at ``cap``, so the
     # collect_set buffers are small and die with their partition), then
     # the i < j Generate expansion — ascending user_id array order makes
-    # u < v by construction, exactly the join predicate's pair set
+    # u < v by construction
     members = capped.groupBy("b", "event_type").agg(
         F.sort_array(F.collect_set("user_id")).alias("us")
     )

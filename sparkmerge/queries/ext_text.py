@@ -1756,14 +1756,13 @@ def text_source_length_drift(spark, sf_dir):
 # Source-pair shared-vocabulary Jaccard — the crawler-dedup complement of
 # text_source_trigram_cosine: how much of two sources' distinct WORD
 # vocabulary is common?  Same dataflow as dedup_cross_source_matrix (one
-# content-keyed shuffle aggregating each token's distinct source set)
-# fused with the orders_brand_audience_jaccard sentinel trick: the
-# ≤|sources| sorted set expands MAP-SIDE into i < j pairs PLUS a
-# ''-sentinel single per member, so per-source vocabulary totals come out
-# of the SAME exploded stream and the token-keyed upstream runs exactly
-# once.  The pair/single aggregate is bounded by |sources|²+|sources| at
-# any corpus size; Jaccard is ONE IEEE division of exact integers
-# (inclusion-exclusion).
+# content-keyed shuffle aggregating each token's distinct source set as a
+# bitset, sparkmerge.ext.bitsets): the distinct source sets expand into
+# i < j pairs PLUS a sentinel single per member, so per-source vocabulary
+# totals come out of the SAME expansion and the token-keyed upstream runs
+# exactly once.  The pair/single aggregate is bounded by
+# |sources|²+|sources| at any corpus size; Jaccard is ONE IEEE division of
+# exact integers (inclusion-exclusion).
 
 
 @register(
@@ -1792,140 +1791,40 @@ SELECT source_a, source_b, n_shared, ta.n AS n_a, tb.n AS n_b,
 """,
     description="source-pair shared-vocabulary Jaccard (crawler-overlap "
     "audit): each distinct word token aggregates its distinct source set "
-    "in ONE content-keyed map-side-combined shuffle — as a BITMASK long "
-    "(bit_or of dense source-rank bits, fully-codegen declarative "
-    "HashAggregate; r13, the cross-source-matrix recipe on tokens, "
-    "replacing the collect_set ObjectHashAggregate whose per-token set "
-    "buffers were the sf10 cost) — then pairs AND vocabulary totals both "
-    "derive from the DISTINCT-MASK count relation (≤ min(2^|sources|, "
-    "|vocab|) rows) via one sentinel-augmented bit expansion, pair domain "
-    "|sources|²; agg='sets' keeps the collect_set path (>64-source "
-    "fallback, output-identity regression surface; the mask path "
-    "raise_errors past 64 — never a silent wrap); Jaccard = ONE IEEE "
+    "in ONE content-keyed map-side-combined shuffle as a word-partitioned "
+    "bitset (ext.bitsets: bit_or of dense source-rank bits, fully-codegen "
+    "declarative HashAggregate, no cap on the source count) — then pairs "
+    "AND vocabulary totals both derive from the DISTINCT-MASK count "
+    "relation (≤ min(2^|sources|, |vocab|) rows) via one sentinel-"
+    "augmented bit expansion, pair domain |sources|²; Jaccard = ONE IEEE "
     "division of exact integers via inclusion-exclusion",
 )
-def text_source_vocab_overlap(spark, sf_dir, agg="mask"):
+def text_source_vocab_overlap(spark, sf_dir):
+    from sparkmerge.ext.bitsets import member_ids, member_pairs, member_set_counts
     from sparkmerge.ext.text import whitespace_tokens
 
-    if agg not in ("mask", "sets"):
-        raise ValueError(f"Unknown agg: {agg!r}")
     d = load(spark, sf_dir, "documents")
     # tokenize in its OWN projection below the Generate (explode-alias
     # barrier — a computed alias sharing a select with explode() lands
     # above the generator and re-evaluates once per OUTPUT row)
     tokd = d.select("source", whitespace_tokens(F.lower(F.col("text"))).alias("t"))
-    jac = F.col("n_shared").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_shared")
+    # attach the source id per DOC, before the token explode — ~|docs|
+    # probes, not ~|token occurrences|
+    ids = member_ids(d, "source")
+    keyed = tokd.join(F.broadcast(ids.df), "source")
+    # bounded, and member_pairs reads it three times
+    counts = member_set_counts(keyed, [F.explode("t").alias("tok")], ids)
+    counts = counts.localCheckpoint(eager=True)
+    jac = F.col("n_ab").cast("double") / (
+        F.col("n_a") + F.col("n_b") - F.col("n_ab")
     ).cast("double")
-    if agg == "sets":
-        per_tok = (
-            tokd.select("source", F.explode("t").alias("tok"))
-            .groupBy("tok")
-            .agg(F.sort_array(F.collect_set("source")).alias("sources"))
-        )
-        stream = per_tok.select(
-            F.posexplode("sources").alias("i", "a"), "sources"
-        ).select(
-            "a",
-            F.explode(
-                F.concat(
-                    F.array(F.lit("")),
-                    F.expr("slice(sources, i + 2, size(sources))"),
-                )
-            ).alias("b"),
-        )
-        g = stream.groupBy("a", "b").agg(F.count(F.lit(1)).alias("n"))
-        g = g.localCheckpoint(eager=True)  # bounded: ≤ |sources|² + |sources| rows
-        singles = g.filter(F.col("b") == "")
-        pairs = g.filter(F.col("b") != "").select(
-            F.col("a").alias("source_a"),
-            F.col("b").alias("source_b"),
-            F.col("n").alias("n_shared"),
-        )
-        ta = singles.select(F.col("a").alias("source_a"), F.col("n").alias("n_a"))
-        tb = singles.select(F.col("a").alias("source_b"), F.col("n").alias("n_b"))
-        return (
-            pairs.join(F.broadcast(ta), "source_a")
-            .join(F.broadcast(tb), "source_b")
-            .select(
-                "source_a", "source_b", "n_shared", "n_a", "n_b", jac.alias("jaccard")
-            )
-        )
-    # r13 (guide §2.3 — cheaper aggregation, shuffle fewer bytes): the
-    # bitmask path (``agg='mask'``, the dedup_cross_source_matrix recipe
-    # on tokens).  collect_set is a typed imperative aggregate —
-    # ObjectHashAggregate keeps every per-token set buffer resident until
-    # its partition ends (millions of buffers at sf10), and the sentinel
-    # pair expansion then runs over every token row.  The source domain is
-    # BOUNDED (20 on every test corpus), so each source gets a dense bit
-    # id in SOURCE-STRING SORT ORDER (the order sort_array(collect_set(..))
-    # produced, so i < j bit pairs are exactly the old string-sorted
-    # pairs), ``bit_or(1L << sid)`` aggregates each token's source set as
-    # ONE long in a fully-codegen declarative HashAggregate (the partial
-    # agg stays map-side-combined; OR is idempotent so duplicate
-    # (tok, source) occurrences need no dedup), and BOTH the pair counts
-    # and the per-source vocabulary totals derive from the DISTINCT-MASK
-    # count relation via the same sentinel-augmented expansion the sets
-    # path used per token (here: per distinct mask, -1L as the sentinel).
-    sid = F.row_number().over(Window.orderBy("source")) - 1
-    sids = (
-        d.select("source")
-        .distinct()
-        .select(
-            "source",
-            F.when(sid < 64, sid)
-            .otherwise(
-                F.raise_error(
-                    F.lit(
-                        "text_source_vocab_overlap agg='mask' supports at "
-                        "most 64 sources; use agg='sets'"
-                    )
-                ).cast("int")
-            )
-            .alias("sid"),
-        )
-        # bounded (≤|sources| rows) with THREE consumers (the token-stream
-        # join, na, nb) — without the checkpoint each consumer re-runs the
-        # distinct over the documents scan
-        .localCheckpoint(eager=True)
-    )
-    # attach the bit id per DOC (pre-explode — ~|docs| probes, not
-    # ~|token occurrences|); the token stream then carries only (tok, sid)
-    toki = tokd.join(F.broadcast(sids), "source").select(
-        "sid", F.explode("t").alias("tok")
-    )
-    per_tok = toki.groupBy("tok").agg(
-        F.bit_or(F.expr("shiftleft(CAST(1 AS BIGINT), sid)")).alias("m")
-    )
-    mask_counts = per_tok.groupBy("m").agg(F.count(F.lit(1)).alias("cnt"))
-    bits = F.expr("filter(sequence(0, 63), b -> ((m >> b) & 1) = 1)")
-    # bits in its OWN projection below the Generate (explode-alias barrier)
-    bp = mask_counts.select("cnt", bits.alias("bits"))
-    bstream = bp.select(
-        F.posexplode("bits").alias("i", "ba"), "cnt", "bits"
-    ).select(
-        "ba",
-        "cnt",
-        F.explode(
-            F.concat(F.array(F.lit(-1)), F.expr("slice(bits, i + 2, size(bits))"))
-        ).alias("bb"),
-    )
-    g = bstream.groupBy("ba", "bb").agg(F.sum("cnt").alias("n"))
-    g = g.localCheckpoint(eager=True)  # bounded: ≤ |sources|² + |sources| rows
-    singles = g.filter(F.col("bb") == -1)
-    pairs = g.filter(F.col("bb") != -1).select(
-        "ba", "bb", F.col("n").alias("n_shared")
-    )
-    ta = singles.select("ba", F.col("n").alias("n_a"))
-    tb = singles.select(F.col("ba").alias("bb"), F.col("n").alias("n_b"))
-    na = sids.select(F.col("source").alias("source_a"), F.col("sid").alias("ba"))
-    nb = sids.select(F.col("source").alias("source_b"), F.col("sid").alias("bb"))
-    return (
-        pairs.join(F.broadcast(ta), "ba")
-        .join(F.broadcast(tb), "bb")
-        .join(F.broadcast(na), "ba")
-        .join(F.broadcast(nb), "bb")
-        .select("source_a", "source_b", "n_shared", "n_a", "n_b", jac.alias("jaccard"))
+    return member_pairs(counts).select(
+        F.col("a").alias("source_a"),
+        F.col("b").alias("source_b"),
+        F.col("n_ab").alias("n_shared"),
+        "n_a",
+        "n_b",
+        jac.alias("jaccard"),
     )
 
 

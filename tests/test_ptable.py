@@ -127,10 +127,25 @@ def test_null_partition_values(spark, orders, tmp_path):
     assert same_rows(t.read(spark), merge_preview(with_null, src, "o_orderkey"))
 
 
-def test_threshold_abort_leaves_table_untouched(spark, orders, tmp_path):
+def test_threshold_abort_leaves_table_untouched(spark, orders, tmp_path, monkeypatch):
+    """A threshold trip stages nothing: the lake merge knows its counts
+    before it writes, so ``stage_merge`` never runs and no writer
+    directory appears under ``files/``."""
     t = PartitionedSnapshotTable.create(spark, str(tmp_path / "t"), orders, "o_orderstatus")
+    files = tmp_path / "t" / "files"
+    dirs_before = sorted(os.listdir(files))
+    stage_calls = []
+    stage_merge = PartitionedSnapshotTable.stage_merge
+
+    def counting_stage_merge(self, *args, **kwargs):
+        stage_calls.append(args)
+        return stage_merge(self, *args, **kwargs)
+
+    monkeypatch.setattr(PartitionedSnapshotTable, "stage_merge", counting_stage_merge)
     with pytest.raises(MergeThresholdExceeded):
         merge_partitioned(spark, t, orders.limit(3), "o_orderkey", threshold="1%")
+    assert stage_calls == []
+    assert sorted(os.listdir(files)) == dirs_before
     assert t.current_version() == 1
     assert not os.path.exists(str(tmp_path / "t" / "v=2.json"))
     assert same_rows(t.read(spark), orders)

@@ -1,28 +1,31 @@
 """r13 optimization-round regression tests: the sort-based basket build
-(output identity vs the r12 arrays path + SortAggregate planning +
-conf-restore/partitioning semantics of _sortagg_checkpoint), tpch_q5's
-size-gated supplier broadcast, and bench's cheapest-first sf1 ordering."""
+(SortAggregate planning + conf-restore/partitioning semantics of
+_sortagg_checkpoint), tpch_q5's size-gated supplier broadcast, bench's
+cheapest-first sf1 ordering, and the single-path ops (the member-set ops on
+sparkmerge.ext.bitsets, the Generate-based edge builder, the recall
+certifier) checked against their DuckDB oracles or a brute force."""
 
 from __future__ import annotations
 
 from sparkmerge.queries import registry
+from tests.conftest import assert_oracle_match
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _rows(df):
-    return sorted(
-        (r["part_a"], r["part_b"], r["pair_n"], r["n_a"], r["n_b"],
-         r["confidence"], r["lift"])
-        for r in df.collect()
+def _assert_no_object_hash_aggregate(df):
+    """The member sets aggregate as declarative bit_or HashAggregates, never
+    collect_set's ObjectHashAggregate."""
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
     )
+    assert "ObjectHashAggregate" not in plan
 
 
 def test_basket_build_paths_output_identical(spark):
-    fn = registry()["orders_basket_lift"].fn
-    ref = _rows(fn(spark, SF_DIR))  # default: sort-based build
-    assert ref == _rows(fn(spark, SF_DIR, basket_build="arrays"))
-    assert len(ref) > 0
+    """The sort-based basket build (the op's one build) matches the DuckDB
+    oracle."""
+    assert len(assert_oracle_match(spark, "orders_basket_lift")) > 0
 
 
 def test_sortagg_checkpoint_plans_sort_aggregate_and_restores_confs(spark):
@@ -121,106 +124,52 @@ def test_sf1_leg_runs_cheapest_first():
 
 
 def test_cross_source_mask_and_sets_output_identical(spark):
-    """r13 session-3: the bitmask source-set aggregation (agg='mask',
-    default) must be row-identical to the r12 collect_set path (agg='sets')
-    in both shingle-key modes, and the mask plan must carry no
-    ObjectHashAggregate (the resident-buffer profile the rewrite removes)."""
+    """The bitset source-set aggregation matches the DuckDB oracle; the
+    hashed shingle key gives the same counts on this corpus (no xxhash64
+    collision); neither plan carries an ObjectHashAggregate."""
+    import pytest
+
     fn = registry()["dedup_cross_source_matrix"].fn
-
-    def rows(**kw):
-        return sorted(tuple(r) for r in fn(spark, SF_DIR, **kw).collect())
-
-    ref = rows()  # default: agg='mask'
-    assert ref == rows(agg="sets")
-    assert rows(shingle_key="hash") == rows(agg="sets", shingle_key="hash")
-    assert len(ref) > 0
-    plan = fn(spark, SF_DIR)._sc._jvm.PythonSQLUtils.explainString(
-        fn(spark, SF_DIR)._jdf.queryExecution(), "formatted"
+    raw = assert_oracle_match(spark, "dedup_cross_source_matrix")
+    assert len(raw) > 0
+    hashed = fn(spark, SF_DIR, shingle_key="hash")
+    assert sorted(tuple(r) for r in hashed.collect()) == sorted(
+        raw.itertuples(index=False, name=None)
     )
-    assert "ObjectHashAggregate" not in plan
-    import pytest
-
+    _assert_no_object_hash_aggregate(fn(spark, SF_DIR))
+    _assert_no_object_hash_aggregate(hashed)
     with pytest.raises(ValueError):
-        fn(spark, SF_DIR, agg="nope")
+        fn(spark, SF_DIR, shingle_key="nope")
 
 
-def test_brand_audience_auto_gate_and_path_identity(spark, monkeypatch):
-    """r13 session-3: agg='auto' resolves via the lineitem parquet-size
-    gate (sets below, mask at scale); mask and sets are row-identical; the
-    mask path's set build is a bit_or HashAggregate, never an
-    ObjectHashAggregate."""
-    import pytest
-
-    from sparkmerge.queries import ext_analysis as ea
-
-    fn = registry()["orders_brand_audience_jaccard"].fn
-
-    def rows(**kw):
-        return sorted(tuple(r) for r in fn(spark, SF_DIR, **kw).collect())
-
-    ref = rows()  # auto -> sets at sf0.001
-    assert ea._brand_audience_agg(SF_DIR) == "sets"
-    assert ref == rows(agg="mask") == rows(agg="sets")
-    assert len(ref) > 0
-    with pytest.raises(ValueError):
-        fn(spark, SF_DIR, agg="nope")
-    # gate opens past the threshold, closes on unknown dirs (fail-safe)
-    monkeypatch.setattr(ea, "_BRAND_MASK_MIN_BYTES", 0)
-    assert ea._brand_audience_agg(SF_DIR) == "mask"
-    assert ea._brand_audience_agg("/nonexistent") == "sets"
-    monkeypatch.undo()
-    # the mask build aggregates bitmasks declaratively (codegen HashAggregate)
-    df = fn(spark, SF_DIR, agg="mask")
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
+def test_brand_audience_auto_gate_and_path_identity(spark):
+    """One plan at every scale: the bitset brand-set build matches the DuckDB
+    oracle and carries no ObjectHashAggregate."""
+    assert len(assert_oracle_match(spark, "orders_brand_audience_jaccard")) > 0
+    _assert_no_object_hash_aggregate(
+        registry()["orders_brand_audience_jaccard"].fn(spark, SF_DIR)
     )
-    assert "ObjectHashAggregate" not in plan
 
 
 def test_edges_pairgen_arrays_and_join_identical(spark):
-    """r13 session-3: the Generate-based per-bucket pair expansion
-    (pairgen='arrays', default) must produce the identical weighted edge
-    multiset as the r4-r12 bucket-local self-join, at both the family cap
-    and the tight cap."""
-    import pytest
-
+    """The Generate-based per-bucket pair expansion (the one pair path)
+    gives exactly the brute-force weighted edge multiset at both the family
+    cap and the tight cap."""
     from sparkmerge.queries.ext_graph import _BUCKET_CAP, _TIGHT_CAP, _edges
+    from tests.test_graph_ext import _brute_edges
 
     for cap in (_BUCKET_CAP, _TIGHT_CAP):
-        a = sorted(tuple(r) for r in _edges(spark, SF_DIR, cap=cap).collect())
-        j = sorted(
-            tuple(r)
-            for r in _edges(spark, SF_DIR, cap=cap, pairgen="join").collect()
-        )
-        assert a == j
-        assert len(a) > 0
-    with pytest.raises(ValueError):
-        _edges(spark, SF_DIR, pairgen="nope")
+        got = {(r["u"], r["v"]): r["w"] for r in _edges(spark, SF_DIR, cap=cap).collect()}
+        assert got == dict(_brute_edges(spark, cap=cap))
+        assert len(got) > 0
 
 
-def test_events_type_cooccurrence_auto_gate_and_path_identity(spark, monkeypatch):
-    """r13 session-3: both type-co-occurrence ops resolve agg='auto' via the
-    events parquet-size gate and are row-identical across mask/sets."""
-    import pytest
-
-    from sparkmerge.queries import ext_analysis as ea
-
-    assert ea._type_cooccurrence_agg(SF_DIR) == "sets"
-    monkeypatch.setattr(ea, "_TYPE_MASK_MIN_BYTES", 0)
-    assert ea._type_cooccurrence_agg(SF_DIR) == "mask"
-    assert ea._type_cooccurrence_agg("/nonexistent") == "sets"
-    monkeypatch.undo()
+def test_events_type_cooccurrence_auto_gate_and_path_identity(spark):
+    """One plan at every scale: both type-co-occurrence ops match their
+    DuckDB oracles and carry no ObjectHashAggregate."""
     for op in ("events_type_lift_matrix", "events_type_cooccurrence_daily"):
-        fn = registry()[op].fn
-
-        def rows(**kw):
-            return sorted(tuple(r) for r in fn(spark, SF_DIR, **kw).collect())
-
-        ref = rows()  # auto -> sets at sf0.001
-        assert ref == rows(agg="mask") == rows(agg="sets")
-        assert len(ref) > 0
-        with pytest.raises(ValueError):
-            fn(spark, SF_DIR, agg="nope")
+        assert len(assert_oracle_match(spark, op)) > 0
+        _assert_no_object_hash_aggregate(registry()[op].fn(spark, SF_DIR))
 
 
 def test_triangle_adjacency_generate_replaces_src_join(spark):
@@ -265,28 +214,12 @@ def test_triangle_adjacency_generate_replaces_src_join(spark):
 
 
 def test_vocab_overlap_mask_and_sets_output_identical(spark):
-    """r13 session-4: text_source_vocab_overlap's bitmask source-set
-    aggregation (agg='mask', default) must be row-identical to the
-    collect_set path (agg='sets'), and the mask plan must carry no
-    ObjectHashAggregate (the per-token resident-buffer profile the
-    rewrite removes)."""
-    fn = registry()["text_source_vocab_overlap"].fn
-
-    def rows(**kw):
-        return sorted(tuple(r) for r in fn(spark, SF_DIR, **kw).collect())
-
-    ref = rows()  # default: agg='mask'
-    assert ref == rows(agg="sets")
-    assert len(ref) > 0
-    df = fn(spark, SF_DIR)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
+    """The bitset per-token source-set aggregation matches the DuckDB
+    oracle and carries no ObjectHashAggregate."""
+    assert len(assert_oracle_match(spark, "text_source_vocab_overlap")) > 0
+    _assert_no_object_hash_aggregate(
+        registry()["text_source_vocab_overlap"].fn(spark, SF_DIR)
     )
-    assert "ObjectHashAggregate" not in plan
-    import pytest
-
-    with pytest.raises(ValueError):
-        fn(spark, SF_DIR, agg="nope")
 
 
 def test_pagerank_checkpoint_partitioning_and_single_lineage(spark):
@@ -340,17 +273,8 @@ def test_dedup_survivors_covers_deep_chains(spark):
 
 
 def test_recall_eval_certifiers_output_identical(spark):
-    """r13: dedup_lsh_recall_eval's exact-truth certifier is now the
-    inverted-index intersection COUNT over text-grain classes (60.9 -> 8.8 s
-    at sf0.1); the pre-r13 broadcast nested-loop stays registered as
-    certifier='nlj' and both must report the same TP/FP/FN/recall row --
-    the truth sets are required to be IDENTICAL, not merely similar."""
-    fn = registry()["dedup_lsh_recall_eval"].fn
+    """The inverted-index intersection-count certifier (the op's one
+    certifier) matches the DuckDB oracle, whose truth set is the
+    brute-force array_intersect formulation, at sf0.001 and sf0.01."""
     for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
-        count_rows = sorted(map(str, fn(spark, sf).collect()))
-        nlj_rows = sorted(map(str, fn(spark, sf, certifier="nlj").collect()))
-        assert count_rows == nlj_rows, sf
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="unknown certifier"):
-        fn(spark, "/root/testdata/sf0.001", certifier="bogus")
+        assert len(assert_oracle_match(spark, "dedup_lsh_recall_eval", sf)) == 1

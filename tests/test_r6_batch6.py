@@ -81,20 +81,29 @@ def test_lsh_recall_eval_counts_consistent(spark):
         assert row["precision"] == row["tp"] / row["n_cand"]
 
 
-def test_lsh_recall_eval_truth_matches_bruteforce(spark):
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_lsh_recall_eval_truth_matches_bruteforce(spark, sf):
+    """The exact certifier's truth set against a pure-Python brute force
+    over the same 5-character shingles, and every count against that truth
+    crossed with the collected LSH candidate pairs."""
     import re
 
+    from sparkmerge.queries.ext_dedup import _EVAL_MOD, _minhash_pairs
+
+    sf_dir = f"/root/testdata/{sf}"
     docs = (
-        spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id", "text")
         .collect()
     )
     sets = {}
     for r in docs:
+        if r["text"] is None:
+            continue  # a NULL text has no shingles and never pairs
         t = re.sub(r"\s+", " ", r["text"].lower())
         n = max(len(t) - 4, 1)
         sets[r["doc_id"]] = {t[i : i + 5] for i in range(n)}
-    sampled = [i for i in sets if i % 20 == 0]
+    sampled = [i for i in sets if i % _EVAL_MOD == 0]
     truth = set()
     for a in sampled:
         for b in sets:
@@ -103,5 +112,15 @@ def test_lsh_recall_eval_truth_matches_bruteforce(spark):
             inter = len(sets[a] & sets[b])
             if 3 * inter >= len(sets[a]) + len(sets[b]):
                 truth.add((min(a, b), max(a, b)))
-    row = registry()["dedup_lsh_recall_eval"].fn(spark, SF_DIR).collect()[0]
+    cand = {
+        (r["a_id"], r["b_id"])
+        for r in _minhash_pairs(spark, sf_dir).select("a_id", "b_id").collect()
+        if r["a_id"] % _EVAL_MOD == 0 or r["b_id"] % _EVAL_MOD == 0
+    }
+    row = registry()["dedup_lsh_recall_eval"].fn(spark, sf_dir).collect()[0]
+    assert len(truth) > 0
     assert row["n_true"] == len(truth)
+    assert row["n_cand"] == len(cand)
+    assert row["tp"] == len(truth & cand)
+    assert row["fp"] == len(cand - truth)
+    assert row["fn"] == len(truth - cand)
