@@ -1,9 +1,11 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract (PySpark target): ``entry``, ``queries`` and ``oracle_sql``.
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs each
-``queries()[name]`` at sf=0.01 and compares it against the matching
-``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash → CORRECTNESS_r{N}.json).
+A verifier runs ``entry(spark)`` as a smoke check, runs each
+``queries()[name]`` and compares it against the matching
+``oracle_sql()[name]`` via DuckDB (row count + schema + order-insensitive
+value hash).  Tier-1 makes the same comparison for every op at sf0.001
+(``tests/test_oracle_sweep.py``); ``tools/check_oracle.py`` runs it at any
+other scale.
 
 All operators live in ``sparkmerge.queries`` (one module per SURVEY.md §2
 section); this file only adapts the registry to the driver's interface.
@@ -26,38 +28,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2, ordered so the
-    driver's capped correctness window verifies never-verified ops first,
-    then force-reverified rewrites, then the stalest greens."""
+    """One entry per implemented operator from SURVEY.md §2, in registration
+    order."""
     from sparkmerge.queries import registry
 
-    reg = registry()
-    _check_verify_queue(list(reg))
-    return {op_id: spec.fn for op_id, spec in reg.items()}
-
-
-def _check_verify_queue(ops: list[str]) -> None:
-    """Fail LOUDLY at verify time if the registry ordering ever stops
-    matching the artifact-derived queue contract (r5 verdict ask #8) — a
-    silent mis-rotation would burn the driver's capped window on the wrong
-    ops for a full round."""
-    from sparkmerge.queries import _FORCE_REVERIFY, _last_verified_round, verify_order
-
-    if ops != verify_order(ops):
-        raise RuntimeError(
-            "registry() order diverged from verify_order() — the driver "
-            "window would verify the wrong ops"
-        )
-    seen = _last_verified_round()
-    never = {op for op in ops if op not in seen}
-    frv = {op for op in _FORCE_REVERIFY if op in seen}
-    if set(ops[: len(never)]) != never or set(
-        ops[len(never) : len(never) + len(frv)]
-    ) != frv:
-        raise RuntimeError(
-            "verify queue tiers out of order (never-verified / "
-            "force-reverify prefix violated)"
-        )
+    return {op_id: spec.fn for op_id, spec in registry().items()}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -12,8 +12,9 @@ pass produces a *changeset* DataFrame:
     _old: struct<target row>    (null for INSERT)
     _new: struct<new row state> (null for DELETE)
 
-from which the new snapshot (``apply_changes``), the CDC audit record
-(``audit``) and the threshold guard counts (``action_counts``) all derive.
+from which the new snapshot (``apply_changes``) and the CDC audit record
+(``audit``) derive; merge.py takes the threshold guard's counts from the
+same frame (an ``Observation`` or one aggregation).
 
 Scale notes (100 TB posture):
 - Default strategy: the join shuffles both sides by the key once; everything
@@ -268,8 +269,8 @@ class Changeset:
         return self.df.filter(F.col(_ACTION) != ACTION_KEEP).select(*cols)
 
     def action_counts(self) -> dict[str, int]:
-        """Count rows per action (driver-side; small). Used by tests and the
-        threshold guard's slow path — merge.py prefers Observation metrics."""
+        """Count rows per action (driver-side; small, one extra job).  Used
+        by tests; the merges count on the jobs they already run."""
         rows = self.df.groupBy(_ACTION).count().collect()
         return {r[_ACTION]: r["count"] for r in rows}
 

@@ -42,6 +42,7 @@ from sparkmerge.changeset import (
     ACTION_KEEP,
     Changeset,
     DeleteMode,
+    _qs,
     build_changeset,
     latest_per_key,
 )
@@ -337,7 +338,7 @@ def merge_partitioned(
     scanned scope, mirroring how ``@targetFilter`` scopes the reference's
     pre-count (:141-150).
     """
-    from sparkmerge.ptable import MAX_PARTITION_VALUES, canon_col
+    from sparkmerge.ptable import MAX_PARTITION_VALUES, canon_col, canon_sql
 
     if audit and audit_path is None:
         audit_path = default_audit_path(target)
@@ -436,22 +437,13 @@ def merge_partitioned(
         # trip stages nothing
         _check_threshold(changed, before, thr)
         new_state = cs.apply_changes()
-        if not changed_vals:
-            changed_state = new_state.limit(0)
-        elif len(changed_vals) <= 64:
-            changed_state = new_state.filter(canon_col(pcol).isin(*changed_vals))
+        if changed_vals:
+            # one SQL-text IN-list, which the optimizer turns into a hash-set
+            # lookup (InSet) at any partition count
+            in_list = ", ".join(map(_qs, sorted(changed_vals)))
+            changed_state = new_state.filter(f"{canon_sql(pcol)} IN ({in_list})")
         else:
-            # thousands of changed partitions would blow up an IN-list
-            # expression; a broadcast semi-join against the value set keeps
-            # the filter O(1) per row at any partition count
-            vals_df = spark.createDataFrame(
-                [(v,) for v in sorted(changed_vals)], "_changed_part string"
-            )
-            changed_state = new_state.join(
-                F.broadcast(vals_df),
-                canon_col(pcol) == F.col("_changed_part"),
-                "left_semi",
-            )
+            changed_state = new_state.limit(0)
         return _commit(target, base, cs, lambda: target.stage_merge(changed_state, changed_vals),
                        lambda: (changed, before), thr, audit_path)
     finally:

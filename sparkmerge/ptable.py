@@ -62,6 +62,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, StructType
 
+from sparkmerge.changeset import _qi, _qs
 from sparkmerge.errors import MergeError
 from sparkmerge.table import SnapshotTable, Staged
 
@@ -80,9 +81,16 @@ def canon_value(v) -> str:
     return HIVE_NULL if v is None else str(v)
 
 
+def canon_sql(name: str) -> str:
+    """The same canonicalization as Spark SQL text over column ``name``
+    (dots name nested fields, as in ``F.col``)."""
+    ident = ".".join(_qi(part) for part in name.split("."))
+    return f"coalesce(CAST({ident} AS STRING), {_qs(HIVE_NULL)})"
+
+
 def canon_col(name: str) -> Column:
     """The same canonicalization as a Spark column expression."""
-    return F.coalesce(F.col(name).cast("string"), F.lit(HIVE_NULL))
+    return F.expr(canon_sql(name))
 
 
 def _cast_strict(name: str, have: str | None, to: DataType) -> Column:

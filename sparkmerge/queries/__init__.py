@@ -1,9 +1,10 @@
 """Operator registry — one entry per SURVEY.md §2 op id.
 
 Each op registers a PySpark query ``(spark, sf_dir) -> DataFrame`` and,
-where SQL-expressible, an equivalent DuckDB oracle SQL string.  The driver
-runs both at sf0.01 and compares row-count + schema + order-insensitive
-value-hash (``/root/repo/__spark_entry__.py`` contract), so:
+where SQL-expressible, an equivalent DuckDB oracle SQL string.  Tier-1
+(``tests/test_oracle_sweep.py``) runs both for every op at sf0.001 and
+compares row count, column names and order-insensitive values
+(``tools.check_oracle.mismatches``), so:
 
 - every computed column is aliased identically on both sides;
 - fixtures are pure derivations (no randomness, no wall-clock);
@@ -70,158 +71,12 @@ def register(op_id: str, *, oracle: str | None = None, description: str = ""):
     return deco
 
 
-# Ops whose implementation changed AFTER their last driver-green
-# CORRECTNESS row (the staleness ordering below only sees round numbers,
-# not code edits).  They sort right after never-verified ops so the next
-# capped driver window re-confirms the current code.  Remove an entry once
-# a post-rewrite green row lands.
-# NOTE (r7): all 12 r6 entries (graph family ×7, abtest, q21, bitext,
-# asof ×2) landed green r6 rows and are cleared per the contract above.
-# NOTE (r8): all 4 r7 entries (basket rewrite + 3 spatial param surfaces)
-# landed green r7 rows and are cleared.
-# NOTE (r9): both r8 entries (the shingle_key / rolling-distinct lever
-# surfaces) landed green r8 rows and are cleared.
-# NOTE (r10): all 7 r9 entries (lsh/tables/gap_unit levers ×4, multimodal
-# real-codec trio) landed green r9 rows and are cleared.
-# NOTE (r11): all 7 r10 entries (lsh-guard pair, multimodal trio, q1
-# long-cents, cumulative-share prefix sum) landed green r10 rows and are
-# cleared.
-_FORCE_REVERIFY = {
-    # NOTE (r13): the r12 window cleared 50 of the previous 62 entries
-    # (CORRECTNESS_r12.json, all hash-green).  Kept below: the 14 r11/r12
-    # entries the rotating window has not yet reached (all covered by the
-    # at-HEAD 337/337 local sweeps, but one driver confirmation each is
-    # still owed), plus the three r13 surfaces.
-    # --- r13 OPTIMIZATION round (OPTIMIZATION_r13.md changes #1-#2):
-    # basket build is now a streaming SortAggregate materialization
-    # (output-identical by construction, hash-verified sf0.001 + sf0.01
-    # pre-commit); q5's supplier broadcast hint is size-gated (join
-    # strategy freedom only, gate open at every bench SF); q21's
-    # finished-order gate moved below the windows as a left-semi join
-    # (hash-verified sf0.01 + sf0.1 pre-commit).
-    "orders_basket_lift",
-    "tpch_q5",
-    "tpch_q21_style",
-    # --- member-set ops on the shared word-partitioned bitset primitive
-    # (sparkmerge.ext.bitsets; one plan at every SF and member count,
-    # hash-verified sf0.01 + sf0.1 pre-commit):
-    "dedup_cross_source_matrix",
-    "orders_brand_audience_jaccard",
-    # --- r13 session-3: _edges pair generation is Generate-based (the
-    # one pair path) — every co-occurrence-graph consumer re-verified (all 15 hash-green
-    # at sf0.01 pre-commit, key ops also at sf0.1); the three driver-bench
-    # visible ones queued:
-    "graph_cooccurrence_edges",
-    "graph_kcore_peel",
-    "graph_degree_profile",
-    # --- type-co-occurrence core on the bitset primitive (hash-verified
-    # sf0.01 + sf0.1 pre-commit):
-    "events_type_lift_matrix",
-    "events_type_cooccurrence_daily",
-    # --- r13 session-3: triangle kernel regenerates oriented edges from
-    # the adjacency arrays (hash-verified sf0.01 + sf0.1 pre-commit):
-    "graph_triangle_count",
-    "graph_clustering_coefficient",
-    # --- per-token source-set aggregation on the bitset primitive (the
-    # cross-source recipe on tokens; hash-verified sf0.01 + sf0.1
-    # pre-commit):
-    "text_source_vocab_overlap",
-    # --- r13 session-4: pagerank's adjacency checkpoint records its
-    # hashpartitioning (AQE-off materialization) and r0 derives from the
-    # checkpoint (hash-verified sf0.01 + sf0.1 pre-commit):
-    "graph_pagerank_fixedpoint",
-    # --- r13 session-5: the CC round budget covers the sf10 minhash
-    # graph's 18-round chain (max_iters 8 → 32; converged corpora exit on
-    # the sum fixed point unchanged — hash-verified sf0.01 + sf0.1
-    # pre-commit, determinism stable):
-    "dedup_cluster_survivors",
-    # --- r13 session-6: the recall certifier is the inverted-index
-    # intersection count over text-grain classes (truth set checked
-    # against a pure-Python brute force at sf0.001 and sf0.01 in tests;
-    # hash-verified sf0.01 + sf0.1, determinism stable):
-    "dedup_lsh_recall_eval",
-    # --- r11 rewrite confirmations still owed (q1 decimal shift /
-    # cumulative-share guard / q9 long-cents / funnel min-chain):
-    "tpch_q1",
-    "window_cumulative_share",
-    "tpch_q9_style",
-    "events_funnel_steps",
-    # --- r12 surfaces the r12 window did not reach:
-    "text_cross_lang_length_ratio",
-    "dedup_ngram_jaccard",
-    "dedup_containment",
-    "bitext_margin_mine",
-    "ann_pq",
-    "merge_multi_source",
-    "multimodal_columns",
-    "merge_schema_evolution",
-    "stream_merge_foreachbatch",
-    "events_user_type_entropy",
-}
-
-
-
-def _last_verified_round() -> dict[str, int]:
-    """op_id → highest round N whose committed CORRECTNESS_r{N}.json has a
-    row for the op (regardless of pass/fail — a red row still proves the
-    driver reached it, and red ops are also in _FORCE_REVERIFY territory
-    only if their code changed; otherwise staleness keeps them early)."""
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    seen: dict[str, int] = {}
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for op in rows:
-            seen[op] = max(seen.get(op, -1), rnd)
-    return seen
-
-
-def verify_order(op_ids: list[str]) -> list[str]:
-    """Order ops for a capped driver correctness window, derived from the
-    committed CORRECTNESS_r*.json artifacts (r4 verdict ask #2 — no more
-    hand-rotated lists):
-
-    1. never driver-verified (no row in any round), registration order;
-    2. _FORCE_REVERIFY (code changed after last green row);
-    3. everything else, stalest driver record first (ascending round).
-
-    Ties break on registration order, so the queue is deterministic.
-    """
-    seen = _last_verified_round()
-    idx = {op: i for i, op in enumerate(op_ids)}
-
-    def key(op: str):
-        if op not in seen:
-            tier = 0
-        elif op in _FORCE_REVERIFY:
-            tier = 1
-        else:
-            tier = 2
-        return (tier, seen.get(op, -1), idx[op])
-
-    return sorted(op_ids, key=key)
-
-
 def registry() -> dict[str, QuerySpec]:
-    """Import all query modules (idempotent) and return the full registry,
-    ordered so driver-unverified ops come first (see verify_order)."""
+    """Import all query modules (idempotent) and return the full registry
+    in registration order (module order of ``_MODULES``, then source order)."""
     for mod in _MODULES:
         importlib.import_module(mod)
-    return {op: _REGISTRY[op] for op in verify_order(list(_REGISTRY))}
+    return dict(_REGISTRY)
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:

@@ -35,23 +35,16 @@ def changeset_flat(df):
 
 def assert_oracle_match(spark, op, sf_dir=SF_DIR):
     """Registry op ``op`` over ``sf_dir`` equals its DuckDB oracle over the
-    same parquet files, compared through the oracle harness's canonical form
-    (exact ints and strings, bit-exact doubles); returns the op's output."""
-    import os
-
-    import duckdb
-
+    same parquet files, by the oracle harness's comparator (row count, column
+    names, scalar cells, exact ints and strings, bit-exact doubles); returns
+    the op's output."""
     from sparkmerge.queries import registry
-    from tools.check_oracle import TABLES, canon
+    from tools.check_oracle import connect, mismatches
 
     spec = registry()[op]
     got = spec.fn(spark, sf_dir).toPandas()
-    with duckdb.connect() as con:
-        for t in TABLES:
-            path = os.path.join(sf_dir, f"{t}.parquet")
-            if os.path.exists(path):
-                con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    with connect(sf_dir) as con:
         want = con.sql(spec.oracle).df()
-    assert sorted(got.columns) == sorted(want.columns)
-    assert canon(got).equals(canon(want)), op
+    problems = mismatches(got, want)
+    assert not problems, f"{op}: " + "; ".join(problems)
     return got

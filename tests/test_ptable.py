@@ -333,16 +333,21 @@ def test_partitioned_merge_audit_and_threshold(spark, orders, tmp_path):
 
 
 def test_many_changed_partitions_semi_join_path(spark, orders, tmp_path):
-    """>64 changed partitions exercises the broadcast-semi-join filter path
-    (an IN-list over thousands of values would blow up the expression)."""
-    base = orders.withColumn("bucket", (F.col("o_custkey") % 80).cast("string"))
+    """80 changed partitions, one of whose values needs SQL quoting, filter
+    through one IN-list: the merge runs 7 Spark jobs and commits the
+    source's rows."""
+    bucket = (F.col("o_custkey") % 80).cast("string")
+    base = orders.withColumn("bucket", F.when(bucket == "0", "it's \\0").otherwise(bucket))
     t = PartitionedSnapshotTable.create(spark, str(tmp_path / "t"), base, "bucket")
     assert len(t.partitions()) == 80
+    assert "it's \\0" in t.partitions()
     src = base.withColumn(
         "o_totalprice", F.col("o_totalprice") + 1.0  # touch every partition
     )
-    res = merge_partitioned(spark, t, src, "o_orderkey")
-    assert res.committed
+    res = []
+    assert _jobs(spark, "ptable-80", lambda: res.append(
+        merge_partitioned(spark, t, src, "o_orderkey"))) == 7
+    assert res[0].committed
     assert same_rows(t.read(spark), src)
 
 

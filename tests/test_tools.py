@@ -1,5 +1,4 @@
-"""Tests for the round-4 tooling: the registry verification queue and the
-sf-scale corpus generator (tools/gen_scale.py)."""
+"""Tests for the sf-scale corpus generator (tools/gen_scale.py)."""
 
 from __future__ import annotations
 
@@ -11,20 +10,6 @@ import duckdb
 import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def test_verify_queue_force_entries_exist_and_total():
-    # the hand-rotated _VERIFY_FIRST list was replaced in r5 by an order
-    # DERIVED from CORRECTNESS_r*.json (tests/test_verify_queue.py covers
-    # the ordering properties); here: the force-reverify set must reference
-    # real ops and the registry ordering must be a total permutation
-    from sparkmerge.queries import _FORCE_REVERIFY, registry
-
-    reg = registry()
-    unknown = [op for op in _FORCE_REVERIFY if op not in reg]
-    assert not unknown, f"_FORCE_REVERIFY references unknown ops: {unknown}"
-    ordered = list(reg)
-    assert len(ordered) == len(set(ordered))
 
 
 @pytest.fixture(scope="module")

@@ -3,20 +3,23 @@ DuckDB oracle at a given sf dir and compares row count, column names, and an
 order-insensitive value comparison (exact for ints/strings/bools/timestamps,
 bit-exact for doubles — matching the driver's value-hash gate).
 
+Tier-1 makes this comparison for every op at sf0.001
+(``tests/test_oracle_sweep.py``, through :func:`mismatches`); this tool runs
+it at the larger scales (sf0.01, sf0.1) or on a chosen subset of ops.
+
 Usage: python tools/check_oracle.py [sf_dir] [op_id ...]
        python tools/check_oracle.py --json LOCAL_ORACLE.json [sf_dir] [op_id ...]
 
 ``--json PATH`` additionally writes a machine-readable artifact
 (op → pass/fail/rows-only + row count + seconds, plus sf dir and a
-UTC timestamp) so the judge can distinguish "untested by the driver's
-50-op window" from "untested entirely" without trusting a commit
-message (round-3 verdict task 8).
+UTC timestamp), the per-scale record behind ``LOCAL_ORACLE*.json``.
 """
 
 from __future__ import annotations
 
 import datetime
 import json
+import os
 import sys
 import time
 import traceback
@@ -52,6 +55,55 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return out.sort_values(by=list(out.columns), kind="mergesort").reset_index(drop=True)
 
 
+def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per corpus table present in
+    ``sf_dir`` — the names the oracle SQL reads."""
+    con = duckdb.connect()
+    for t in TABLES:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(path):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return con
+
+
+def mismatches(got: pd.DataFrame, want: pd.DataFrame) -> list[str]:
+    """Every way the Spark output ``got`` differs from the oracle output
+    ``want``: row count, column names, non-scalar cells, then canonical
+    values.  Empty when they match."""
+    problems = []
+    # Driver-comparator safety: the driver canonicalizes via pandas
+    # sort_values over all columns, which raises on unhashable cells
+    # (list/dict/np.ndarray).  Registry outputs must therefore be
+    # scalar-only; flag any offender even when our own cell-wise canon
+    # would cope with it.
+    for col in got.columns:
+        nonnull = got[col].dropna()
+        if not len(nonnull):
+            continue
+        cell = nonnull.iloc[0]
+        if isinstance(cell, (list, dict)) or getattr(cell, "ndim", 0) > 0:
+            problems.append(
+                f"non-scalar output column {col!r} "
+                f"({type(cell).__name__}) would crash the driver's "
+                "canonicalizer — serialize it (array_join etc.)"
+            )
+    if len(got) != len(want):
+        problems.append(f"row count: spark={len(got)} duckdb={len(want)}")
+    g_cols, w_cols = sorted(got.columns), sorted(want.columns)
+    if g_cols != w_cols:
+        problems.append(f"columns: spark={g_cols} duckdb={w_cols}")
+    if not problems:
+        cg, cw = canon(got), canon(want)
+        if not cg.equals(cw):
+            neq = (cg != cw).any(axis=1)
+            problems.append(
+                f"values differ in {int(neq.sum())}/{len(cg)} rows\n"
+                f"  spark:  {cg[neq].head(3).to_dict('records')}\n"
+                f"  duckdb: {cw[neq].head(3).to_dict('records')}"
+            )
+    return problems
+
+
 def main() -> int:
     argv = sys.argv[1:]
     json_path = None
@@ -61,17 +113,13 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
-    import os
-
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from sparkmerge.queries import registry
     from sparkmerge.session import get_spark
 
     spark = get_spark("check_oracle")
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    con = connect(sf_dir)
 
     reg = registry()
     failures, passed, rows_only = [], 0, 0
@@ -101,39 +149,7 @@ def main() -> int:
             failures.append((op_id, "ORACLE ERROR:\n" + traceback.format_exc(limit=4)))
             record[op_id] = {"status": "oracle_error", "checked_utc": run_utc, "rows": len(sdf), "secs": round(time.time() - t0, 2)}
             continue
-        problems = []
-        # Driver-comparator safety: the driver canonicalizes via pandas
-        # sort_values over all columns, which raises on unhashable cells
-        # (list/dict/np.ndarray — how embedding_quantize went red in r3).
-        # Registry outputs must therefore be scalar-only; flag any offender
-        # here even when our own cell-wise canon would cope with it.
-        for col in sdf.columns:
-            nonnull = sdf[col].dropna()
-            if not len(nonnull):
-                continue
-            cell = nonnull.iloc[0]
-            if isinstance(cell, (list, dict)) or getattr(cell, "ndim", 0) > 0:
-                problems.append(
-                    f"non-scalar output column {col!r} "
-                    f"({type(cell).__name__}) would crash the driver's "
-                    "canonicalizer — serialize it (array_join etc.)"
-                )
-        if len(sdf) != len(odf):
-            problems.append(f"row count: spark={len(sdf)} duckdb={len(odf)}")
-        s_cols, o_cols = sorted(sdf.columns), sorted(odf.columns)
-        if s_cols != o_cols:
-            problems.append(f"columns: spark={s_cols} duckdb={o_cols}")
-        if not problems:
-            cs, co = canon(sdf), canon(odf)
-            if not cs.equals(co):
-                neq = (cs != co).any(axis=1)
-                diff_rows = cs[neq].head(3)
-                odiff = co[neq].head(3)
-                problems.append(
-                    f"values differ in {int(neq.sum())}/{len(cs)} rows\n"
-                    f"  spark:  {diff_rows.to_dict('records')}\n"
-                    f"  duckdb: {odiff.to_dict('records')}"
-                )
+        problems = mismatches(sdf, odf)
         if problems:
             failures.append((op_id, "; ".join(problems)))
             print(f"  ✗ {op_id:28s} MISMATCH ({time.time()-t0:.1f}s)")

@@ -156,10 +156,8 @@ def main() -> None:
     spark = get_spark("plan-report", input_bytes=100)
     spark.sparkContext.setLogLevel("ERROR")
     reg = registry()
-    # ADVICE r12: sort the non-curated tail by op_id — registry() order
-    # depends on the driver-verify history (CORRECTNESS_r*.json), so an
-    # unsorted listing moved rows between regenerations and every PLANS.md
-    # re-cut carried spurious diff noise.
+    # sort the non-curated tail by op_id, so a PLANS.md re-cut keeps its rows
+    # in place whichever module an op is registered from
     ops = OPS + sorted(op for op in reg if op not in set(OPS))
 
     lines = [
