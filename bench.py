@@ -7,49 +7,38 @@ on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
      "unit": "sec", "queries": {<op_id>: sec, ...}, "sf": <sf>,
      "duckdb": {<op_id>: sec, ...}, "ratio_vs_duckdb": <total ratio>}
 
-Per query: one warm-up run then the median of 5 timed runs, identically for
-both engines.  Spark materialization uses the noop sink (full execution, no
-driver-side row transfer); DuckDB fetches arrow (its native materialization).
-
-Repeats adapt to query weight so the protocol stays usable at larger SFs
-(the sf1 scaling column, BASELINE.md): a query whose warm-up exceeds 10 s
-records that single run; over 2 s, median of 3.  At sf0.1 every headline
-query warms up in <2 s, so the driver-run protocol is unchanged (median 5).
+Every reading, on both engines and in every leg, is one
+``sparkmerge.profile.measure`` call: a warm-up run whose length decides the
+repeats (see that module); at sf0.1 most headline queries warm up in
+<2 s and read as the median of 5 runs.  Spark materialization uses
+the noop sink (full execution, no driver-side row transfer); DuckDB fetches
+arrow (its native materialization).
 
 When run at the default sf0.1 dir, a second leg re-measures the headline
 set at sf1 (~170 MiB, derived from sf0.1 by tools/gen_scale.py — key-offset
 replication, see its docstring) and embeds it under "sf1" in the same JSON
 line.  The job floor that dominates sub-100 ms queries at sf0.1 amortizes
 at sf1, which is the point of recording both (BASELINE.md round-4 section).
-The leg is wall-clock-budgeted (SPARK_GRAFT_SF1_BUDGET sec, default 420;
-SPARK_GRAFT_SF1=0 disables) and failure-isolated, so the primary sf0.1
-output line is never at risk.  (Default raised 420 -> 540 round 9 — a ~1.3x-slower
-host session budget-skipped four entries; earlier: raised 360 -> 420 late round 8:
-the explode-alias fix freed ~12 s of leg time and HEADLINE grew by two
-entries — the old budget expired exactly before the three newest ops,
-which were the only per-round bench blind spot.)
+The leg is wall-clock-budgeted (``SF1_BUDGET_S``; SPARK_GRAFT_SF1=0
+disables) and failure-isolated, so the primary sf0.1 output line is never
+at risk.
 
-A third leg (r7 verdict ask #6) embeds sf10 (~1.7 GiB) under "sf10" with
-THREE sub-blocks (r8 verdict ask #4): "breadth" (~8 scale-safe ops
-spanning merge/agg/window/graph/text — the ~1× amortization story, now a
-committed BENCH artifact instead of a SCALING.md-only table), "levers"
-(the registered blocking='lsh' 100 TB routes, Spark-only rows), and
-"tail" (the heaviest exact shapes: job floors amortize, the
-set-similarity ops go superlinear as their blocking keys densify — their
-certifier oracles are infeasible at this SF, so Spark completing them at
-all is the measurement).  Each block has its OWN protected budget window
-(SPARK_GRAFT_SF10_{BREADTH,LEVERS,TAIL}_BUDGET sec, defaults 360/300/1800
-— r9's single shared budget let throttled breadth+levers runs silently
-drop 8 tail ops including merge_full; SPARK_GRAFT_SF10=0 disables), cheap
-blocks run first, quadratic certifier oracles never run, and both heaps
-are collected between ops (the r7 sf10 OOM lesson).
+A third leg embeds sf10 (~1.7 GiB) under "sf10" with three sub-blocks:
+"breadth" (~8 scale-safe ops spanning merge/agg/window/graph/text — the
+~1× amortization story), "levers" (the registered blocking='lsh' 100 TB
+routes, Spark-only rows), and "tail" (the heaviest exact shapes: job
+floors amortize, the set-similarity ops go superlinear as their blocking
+keys densify — their certifier oracles are infeasible at this SF, so Spark
+completing them at all is the measurement).  Each block has its own
+budget window (``SF10_BUDGET_S``, so a slow breadth block cannot starve
+the tail; SPARK_GRAFT_SF10=0 disables), cheap blocks run first, quadratic
+certifier oracles never run, and both heaps are collected between ops.
 
 The FIRST stdout line is a compact one-line JSON summary (per-leg totals
-+ ratios + skip lists) so the driver's bounded output capture always
-retains the headline numbers even when the full result line's tail is
-truncated (r8 verdict ask #6 — BENCH_r08.json lost its sf0.1 block that
-way); the complete result remains the LAST line, and BENCH_LOCAL.json
-carries it verbatim as a committed artifact.
++ ratios + skip lists), so a bounded capture of the output always keeps
+the headline numbers even when the full result line's tail is truncated;
+the complete result remains the LAST line, and BENCH_LOCAL.json carries it
+verbatim as a committed artifact.
 """
 
 from __future__ import annotations
@@ -60,6 +49,8 @@ import sys
 import time
 
 import duckdb
+
+from sparkmerge.profile import measure, release_checkpoint_blocks
 
 HEADLINE = [
     "merge_full",
@@ -122,7 +113,7 @@ HEADLINE = [
 # the rest of the leg).  Standalone sf1 numbers live in SCALING.md.
 SF1_SKIP = {
     "bitext_margin_mine": "~140 s Spark / ~179 s oracle at sf1 (SCALING.md) — "
-    "one run would consume the whole SPARK_GRAFT_SF1_BUDGET; measured "
+    "one run would consume the whole SF1_BUDGET_S; measured "
     "instead as a single warm run under sf1.receipts (r8 verdict ask #5)",
 }
 
@@ -176,11 +167,19 @@ _SF1_LAST_KNOWN_SEC = {
     "dedup_minhash": 6.271,
 }
 
+# Wall-clock budgets (seconds) of the sf1 leg, its receipts and their oracle
+# runs, and each sf10 block.  The sf1 and sf10 budgets guard entry, not
+# duration; the receipt-oracle budget interrupts DuckDB (_oracle_with_budget).
+SF1_BUDGET_S = 540.0
+SF1_RECEIPT_BUDGET_S = 200.0
+SF1_RECEIPT_ORACLE_BUDGET_S = 420.0
+SF10_BUDGET_S = {"breadth": 360.0, "levers": 300.0, "tail": 1800.0}
+
 # Spark-only single-run receipts appended to the sf1 leg AFTER the main
-# loop, under their own budget extension (SPARK_GRAFT_SF1_RECEIPT_BUDGET,
-# default 200 s): ops too heavy for the repeat protocol but too important
-# to stay unmeasured round over round (r8 verdict ask #5 — bitext was the
-# one never-measured headline op).  Warm run only, no oracle.
+# loop, under their own budget extension (SF1_RECEIPT_BUDGET_S): ops too
+# heavy for the repeat protocol but too important to stay unmeasured round
+# over round (r8 verdict ask #5 — bitext was the one never-measured
+# headline op).  Warm run only, no oracle.
 SF1_RECEIPTS = ["bitext_margin_mine"]
 
 TABLES = [
@@ -189,31 +188,10 @@ TABLES = [
 ]
 
 
-def _release_checkpoint_blocks(spark) -> None:
-    """Unpersist leftover localCheckpoint blocks BETWEEN timed runs (guide
-    §1.2 — isolate the measured computation; r12 measurement-bug fix,
-    disclosed in OPTIMIZATION_r12.md).  Ops that eagerly checkpoint a
-    bounded intermediate persist executor blocks that outlive the rep's
-    Python handles — the JVM-side release is asynchronous and GC-driven —
-    so a long leg accumulates earlier queries' dead blocks and LATER
-    queries read slower under block-manager pressure (measured in the r12
-    round-close run: five checkpoint-adjacent ops late in the sf0.1
-    alphabet read 1.5-2.9× their fresh-session solo medians; identical
-    code, identical inputs).  This call releases state only — it runs
-    OUTSIDE every timer, and every timed rep still recomputes from the
-    parquet inputs; nothing is cached or precomputed across runs."""
-    try:
-        for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            jrdd.unpersist(True)
-    except Exception:
-        pass  # measurement hygiene must never fail the bench
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from sparkmerge.queries import registry
     from sparkmerge.session import get_spark, host_cpus
 
@@ -228,41 +206,25 @@ def main() -> None:
 
     # Pre-warm OUTSIDE any timing: the read-optimized table rewrites and the
     # session's first-job JIT/codegen otherwise land inside the FIRST op's
-    # warm-up, and when that pushes it over 10 s the adaptive protocol
-    # records the contaminated run (merge_full read 18.6 s vs its steady
-    # ~1.5 s in an r9 run).  The sf1 leg has documented this same trap since
-    # round 4; the primary leg now applies the same discipline.
+    # warm-up, and when that pushes it over 10 s the warm-up becomes part
+    # of the reading (merge_full read 18.6 s vs its steady ~1.5 s in an r9
+    # run).  The sf1 leg applies the same discipline.
     from sparkmerge.queries import table_path
 
     for t in TABLES:
         table_path(sf_dir, t)
     reg["tpch_q6"].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
-    def _repeats(warmup_sec: float) -> int:
-        return 1 if warmup_sec >= 10 else 3 if warmup_sec >= 2 else 5
-
     def run_spark(op_id: str) -> float:
-        _release_checkpoint_blocks(spark)  # outside the timer
-        t0 = time.perf_counter()
-        reg[op_id].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm-up
-        warm = time.perf_counter() - t0
-        n = _repeats(warm)
-        if n == 1:
-            return warm
-        times = []
-        for _ in range(n):
-            _release_checkpoint_blocks(spark)  # outside the timer
-            # construction INSIDE the timer: Catalyst analysis is a real
-            # per-query cost, and ops that eagerly localCheckpoint a reused
-            # intermediate (graph family, bitext) do that work at
-            # construction — timing only the write would silently exclude
-            # it (caught r6: bitext read 0.1 s while really costing ~7 s).
-            # scaling_report.py always measured construction+write; this
-            # aligns the two protocols.
-            t0 = time.perf_counter()
-            reg[op_id].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            times.append(time.perf_counter() - t0)
-        return sorted(times)[n // 2]  # median (codegen/JIT settles after run 1)
+        # construction INSIDE the timer: Catalyst analysis is a real
+        # per-query cost, and ops that eagerly localCheckpoint a reused
+        # intermediate (graph family, bitext) do that work at construction —
+        # timing only the write would silently exclude it (caught r6: bitext
+        # read 0.1 s while really costing ~7 s).
+        return measure(
+            lambda: reg[op_id].fn(spark, sf_dir).write.format("noop").mode("overwrite").save(),
+            before=lambda: release_checkpoint_blocks(spark),
+        )
 
     con = duckdb.connect()
     con.execute(f"PRAGMA threads={host_cpus()}")
@@ -271,20 +233,7 @@ def main() -> None:
 
     def run_duck(op_id: str) -> float | None:
         sql = reg[op_id].oracle
-        if sql is None:
-            return None
-        t0 = time.perf_counter()
-        con.sql(sql).arrow()  # warm-up
-        warm = time.perf_counter() - t0
-        n = _repeats(warm)
-        if n == 1:
-            return warm
-        times = []
-        for _ in range(n):
-            t0 = time.perf_counter()
-            con.sql(sql).arrow()
-            times.append(time.perf_counter() - t0)
-        return sorted(times)[n // 2]
+        return None if sql is None else measure(lambda: con.sql(sql).arrow())
 
     spark_times: dict[str, float] = {}
     duck_times: dict[str, float] = {}
@@ -449,13 +398,12 @@ def _sf1_leg(spark, reg) -> dict:
     The session was built with the lean profile (input_bytes = sf0.1); the
     confs that matter for the 10× leg — shuffle parallelism, AQE, split
     size — are dynamic SQL confs, so flip them to the scale profile for the
-    leg and restore after.  Budgeted: once SPARK_GRAFT_SF1_BUDGET seconds
-    (default 540 — see the module header) have elapsed, remaining queries
-    are recorded as skipped.
+    leg and restore after.  Budgeted: once ``SF1_BUDGET_S`` seconds have
+    elapsed, remaining queries are recorded as skipped.
     """
     import subprocess
 
-    from sparkmerge.session import host_cpus
+    from sparkmerge.session import host_cpus, sql_confs
 
     sf1_dir = "/tmp/sparkmerge_sf1"
     if not os.path.isdir(sf1_dir):
@@ -468,59 +416,28 @@ def _sf1_leg(spark, reg) -> dict:
             # is ~40 s, so 600 s is pure headroom
             timeout=600,
         )
-    budget = float(os.environ.get("SPARK_GRAFT_SF1_BUDGET", "540"))
     t_start = time.perf_counter()
 
-    cpus = str(host_cpus())
-    saved = {
-        k: spark.conf.get(k)
-        for k in (
-            "spark.sql.shuffle.partitions",
-            "spark.sql.adaptive.enabled",
-            "spark.sql.files.maxPartitionBytes",
-            "spark.sql.autoBroadcastJoinThreshold",
-        )
-    }
-    spark.conf.set("spark.sql.shuffle.partitions", cpus)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(10 * 1024 * 1024))
+    scale = sql_confs("scale")
+    saved = {k: spark.conf.get(k) for k in scale}
+    for k, v in scale.items():
+        spark.conf.set(k, v)
 
     con = duckdb.connect()
-    con.execute(f"PRAGMA threads={cpus}")
+    con.execute(f"PRAGMA threads={host_cpus()}")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf1_dir}/{t}.parquet')")
 
     # Pre-warm the read-optimized table cache OUTSIDE any timing: the first
     # query touching a table at sf1 otherwise pays the one-time row-group
     # rewrite inside its warm-up — and when that pushes the warm-up over
-    # 10 s, the adaptive protocol records the warm-up itself (this is
-    # exactly how BENCH's embedded leg once read topk_similarity at 10.3 s
-    # vs 1.2 s under the standalone protocol; BASELINE.md round-4 final).
+    # 10 s, the warm-up becomes part of the reading (this is exactly how
+    # BENCH's embedded leg once read topk_similarity at 10.3 s vs 1.2 s
+    # under the standalone protocol; BASELINE.md round-4 final).
     from sparkmerge.queries import table_path
 
     for t in TABLES:
         table_path(sf1_dir, t)
-
-    def timed(run, pre=None) -> float:
-        # pre() runs OUTSIDE every timer — the Spark runs pass the
-        # checkpoint-block release here (see _release_checkpoint_blocks)
-        if pre is not None:
-            pre()
-        t0 = time.perf_counter()
-        run()
-        warm = time.perf_counter() - t0
-        n = 1 if warm >= 10 else 3 if warm >= 2 else 5
-        if n == 1:
-            return warm
-        times = []
-        for _ in range(n):
-            if pre is not None:
-                pre()
-            t0 = time.perf_counter()
-            run()
-            times.append(time.perf_counter() - t0)
-        return sorted(times)[n // 2]
 
     spark_times: dict[str, float] = {}
     duck_times: dict[str, float] = {}
@@ -533,14 +450,14 @@ def _sf1_leg(spark, reg) -> dict:
         for op_id in sf1_order:
             if op_id in SF1_SKIP:
                 continue  # reason recorded under "skipped_expensive" below
-            if time.perf_counter() - t_start > budget:
+            if time.perf_counter() - t_start > SF1_BUDGET_S:
                 skipped.append(op_id)
                 continue
             spec = reg[op_id]
             spark_times[op_id] = round(
-                timed(
+                measure(
                     lambda: spec.fn(spark, sf1_dir).write.format("noop").mode("overwrite").save(),
-                    pre=lambda: _release_checkpoint_blocks(spark),
+                    before=lambda: release_checkpoint_blocks(spark),
                 ),
                 4,
             )
@@ -550,19 +467,18 @@ def _sf1_leg(spark, reg) -> dict:
             # run them here; the standalone sf1 runs record them.
             if op_id in ("dedup_ngram_jaccard", "dedup_containment"):
                 oracle_skipped.append(op_id)
-            elif spec.oracle is not None and time.perf_counter() - t_start <= budget:
-                duck_times[op_id] = round(timed(lambda: con.sql(spec.oracle).arrow()), 4)
+            elif spec.oracle is not None and time.perf_counter() - t_start <= SF1_BUDGET_S:
+                duck_times[op_id] = round(measure(lambda: con.sql(spec.oracle).arrow()), 4)
         # single-warm-run receipts for the ops too heavy for the repeat
         # protocol — their own budget extension so they never starve the
         # main loop and the main loop never starves them
         receipts: dict[str, float] = {}
         receipts_duckdb: dict[str, float] = {}
-        receipt_budget = float(os.environ.get("SPARK_GRAFT_SF1_RECEIPT_BUDGET", "200"))
         r_start = time.perf_counter()
         for op_id in SF1_RECEIPTS:
-            if time.perf_counter() - r_start > receipt_budget:
+            if time.perf_counter() - r_start > SF1_RECEIPT_BUDGET_S:
                 break
-            _release_checkpoint_blocks(spark)  # outside the timer
+            release_checkpoint_blocks(spark)  # outside the timer
             t0 = time.perf_counter()
             reg[op_id].fn(spark, sf1_dir).write.format("noop").mode("overwrite").save()
             receipts[op_id] = round(time.perf_counter() - t0, 4)
@@ -575,14 +491,13 @@ def _sf1_leg(spark, reg) -> dict:
         # run was measured at 1517 s under a round-10 host load burst,
         # so a watchdog thread interrupts DuckDB at the budget and the
         # row is simply skipped (the receipt keeps its Spark wall clock).
-        oracle_budget = float(os.environ.get("SPARK_GRAFT_SF1_RECEIPT_ORACLE_BUDGET", "420"))
         o_start = time.perf_counter()
         for op_id in receipts:
-            if time.perf_counter() - o_start > oracle_budget:
+            if time.perf_counter() - o_start > SF1_RECEIPT_ORACLE_BUDGET_S:
                 break
             if reg[op_id].oracle is None:
                 continue
-            remaining = oracle_budget - (time.perf_counter() - o_start)
+            remaining = SF1_RECEIPT_ORACLE_BUDGET_S - (time.perf_counter() - o_start)
             elapsed = _oracle_with_budget(con, reg[op_id].oracle, remaining)
             if elapsed is not None:
                 receipts_duckdb[op_id] = round(elapsed, 4)
@@ -658,10 +573,9 @@ def _sf10_leg(spark, reg) -> dict:
     sf10 the shuffle payload is GBs and the uncompressed leg measured
     dedup_minhash at 214 s vs ~13 s under the scale profile, so the leg
     shells out to a fresh scale-profile session and parses its one-line
-    JSON.  ``SPARK_GRAFT_SF10=0`` disables; per-block budgets
-    ``SPARK_GRAFT_SF10_{BREADTH,LEVERS,TAIL}_BUDGET`` sec (defaults
-    360/300/1800) enforced inside the runner, with a hard wall-clock
-    backstop here.
+    JSON.  ``SPARK_GRAFT_SF10=0`` disables; the per-block budgets
+    ``SF10_BUDGET_S`` are enforced inside the runner, with a hard
+    wall-clock backstop here.
     """
     import subprocess
 
@@ -683,14 +597,7 @@ def _sf10_leg(spark, reg) -> dict:
     # the runner budgets each of its three blocks separately (r9 verdict
     # ask #2 — protected tail slice); the backstop here covers their sum
     # plus last-admitted-op overruns
-    budget = sum(
-        float(os.environ.get(k, d))
-        for k, d in (
-            ("SPARK_GRAFT_SF10_BREADTH_BUDGET", "360"),
-            ("SPARK_GRAFT_SF10_LEVERS_BUDGET", "300"),
-            ("SPARK_GRAFT_SF10_TAIL_BUDGET", "1800"),
-        )
-    )
+    budget = sum(SF10_BUDGET_S.values())
     env = dict(os.environ)
     env["PYTHONPATH"] = os.path.dirname(os.path.abspath(__file__))
     proc = subprocess.run(

@@ -32,8 +32,8 @@ _RADIUS = 8  # Chebyshev radius = cell side
 # reduced mod a ~2^20 prime BEFORE the big multiplier so no intermediate
 # exceeds ~2^52: raw ids reach 1e9+ under gen_scale's key-offset
 # replication, and the original unreduced mix overflowed int64 at sf10
-# (caught by tools/scale10_report.py — both engines raise on BIGINT
-# overflow, so "portable" must also mean bounded).
+# (found at sf10 — both engines raise on BIGINT overflow, so "portable"
+# must also mean bounded).
 _P = 1048573  # prime < 2^20
 _XC = f"(((event_id % {_P}) * 2654435761) % 4294967296) % {_GRID}"
 _YC = (
@@ -302,9 +302,8 @@ def spatial_dbscan_core(spark, sf_dir, cell_size=_RADIUS):
     # identical under both consumers, so ReuseExchange computes it once
     # and both read the shuffle files from disk.  An eager localCheckpoint
     # here pinned the full pair list (~1e8 rows at sf10 — output-bound
-    # like join_spatial_grid) on the executor heap and OOMed; caught by
-    # tools/scale10_report.py, the third real scale bug the sf-sweep
-    # discipline has found.
+    # like join_spatial_grid) on the executor heap and OOMed; found at
+    # sf10, the third real scale bug the sf-sweep discipline has found.
     nbr = (
         build.join(probe, ["cx", "cy"])
         .filter((F.col("pid") != F.col("b_pid")) & (cheb <= _RADIUS))

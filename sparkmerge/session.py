@@ -39,6 +39,37 @@ def driver_memory() -> str:
     return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{half_mib}m"
 
 
+def sql_confs(profile: str) -> dict[str, str]:
+    """The dynamic SQL confs that differ between the ``"lean"`` and
+    ``"scale"`` profiles.  ``get_spark`` builds a session with them, and a
+    caller that moves a live session to another input size sets them (they
+    are SQL confs, so a running session takes them; the core confs fixed at
+    session start are not among them)."""
+    return {
+        "lean": {
+            "spark.sql.shuffle.partitions": "8",
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.files.maxPartitionBytes": str(1024 * 1024),
+            # every table in a <64 MiB corpus is dimension-sized, so
+            # broadcasting everything is right
+            "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        },
+        "scale": {
+            "spark.sql.shuffle.partitions": str(host_cpus()),
+            "spark.sql.adaptive.enabled": "true",
+            # The local corpus is ~MBs per table, so the 128 MB default split
+            # would put every file on one task; 4 MB gives every core work.
+            "spark.sql.files.maxPartitionBytes": str(4 * 1024 * 1024),
+            # Spark's 10 MiB default — measured at sf1 (BASELINE.md round-4):
+            # 64 MiB made the planner broadcast the 1.5M-row orders table
+            # (single-threaded driver hash build), tripling tpch_q3/q5; the
+            # same mistake at 100 TB would OOM the driver.  AQE still
+            # upgrades shuffle joins to broadcast from runtime stats.
+            "spark.sql.autoBroadcastJoinThreshold": str(10 * 1024 * 1024),
+        },
+    }[profile]
+
+
 def get_spark(
     app_name: str = "sparkmerge",
     *,
@@ -60,13 +91,18 @@ def get_spark(
     """
     cpus = host_cpus()
     small = input_bytes is not None and input_bytes < _SMALL_INPUT_BYTES
-    if shuffle_partitions is None:
-        shuffle_partitions = 8 if small else cpus
+    confs = sql_confs("lean" if small else "scale")
+    if shuffle_partitions is not None:
+        confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    # A real cluster reading 100 TB sets the split size back up through the
+    # env var (row groups there are >=128 MB anyway).
+    confs["spark.sql.files.maxPartitionBytes"] = os.environ.get(
+        "SPARK_GRAFT_MAX_PARTITION_BYTES", confs["spark.sql.files.maxPartitionBytes"]
+    )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "false" if small else "true")
+        .config(map=confs)
         # Lean-profile scheduler trims (measured ~30 ms/job → ~15 ms/job on
         # trivial jobs): locality wait is meaningless in local mode, and
         # compressing KB-sized shuffle/broadcast payloads costs more than the
@@ -87,29 +123,6 @@ def get_spark(
         # 16g.  A small host gets half its RAM (see driver_memory).
         .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
-        # Broadcast threshold: under the lean profile every table in a
-        # <64 MiB corpus is dimension-sized, so broadcasting everything is
-        # right.  At scale keep Spark's 10 MiB default — measured at sf1
-        # (BASELINE.md round-4): 64 MiB made the planner broadcast the
-        # 1.5M-row orders table (single-threaded driver hash build), tripling
-        # tpch_q3/q5; the same mistake at 100 TB would OOM the driver.  AQE
-        # still upgrades shuffle joins to broadcast from runtime stats.
-        .config(
-            "spark.sql.autoBroadcastJoinThreshold",
-            str(64 * 1024 * 1024 if small else 10 * 1024 * 1024),
-        )
-        # Split size governs scan parallelism.  The local corpus is ~MBs per
-        # table, so the 128 MB default would put every file on one task; 4 MB
-        # (1 MB under the lean profile) gives every core work.  A real
-        # cluster reading 100 TB overrides this back up via the env var (row
-        # groups there are >=128 MB anyway).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get(
-                "SPARK_GRAFT_MAX_PARTITION_BYTES",
-                str(1024 * 1024 if small else 4 * 1024 * 1024),
-            ),
-        )
         .config("spark.sql.files.openCostInBytes", str(512 * 1024))
     )
     return builder.getOrCreate()

@@ -342,18 +342,19 @@ def test_seasonal_mase_bounded_joins_are_broadcast(spark):
 
 
 def test_release_checkpoint_blocks_unpersists(spark):
-    """r12 measurement hygiene: bench._release_checkpoint_blocks must drop
+    """r12 measurement hygiene: release_checkpoint_blocks must drop
     every persistent RDD (the leftover localCheckpoint blocks that
     otherwise accumulate across a bench leg), and must be a no-op-safe
     call when nothing is persisted."""
-    import bench
     from pyspark.sql import functions as F
+
+    from sparkmerge.profile import release_checkpoint_blocks
 
     df = spark.range(100).select(F.col("id")).localCheckpoint(eager=True)
     assert spark.sparkContext._jsc.getPersistentRDDs().size() > 0
-    bench._release_checkpoint_blocks(spark)
+    release_checkpoint_blocks(spark)
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
-    bench._release_checkpoint_blocks(spark)  # idempotent / empty-safe
+    release_checkpoint_blocks(spark)  # idempotent / empty-safe
     del df
 
 

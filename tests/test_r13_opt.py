@@ -1,9 +1,10 @@
 """r13 optimization-round regression tests: the sort-based basket build
 (SortAggregate planning + conf-restore/partitioning semantics of
 _sortagg_checkpoint), tpch_q5's size-gated supplier broadcast, bench's
-cheapest-first sf1 ordering, and the single-path ops (the member-set ops on
-sparkmerge.ext.bitsets, the Generate-based edge builder, the recall
-certifier) checked against their DuckDB oracles or a brute force."""
+cheapest-first sf1 ordering, the member-set ops' plans on
+sparkmerge.ext.bitsets, and the single-path ops (the Generate-based edge
+builder, the recall certifier) checked against a brute force or their
+DuckDB oracles."""
 
 from __future__ import annotations
 
@@ -20,12 +21,6 @@ def _assert_no_object_hash_aggregate(df):
         df._jdf.queryExecution(), "formatted"
     )
     assert "ObjectHashAggregate" not in plan
-
-
-def test_basket_build_paths_output_identical(spark):
-    """The sort-based basket build (the op's one build) matches the DuckDB
-    oracle."""
-    assert len(assert_oracle_match(spark, "orders_basket_lift")) > 0
 
 
 def test_sortagg_checkpoint_plans_sort_aggregate_and_restores_confs(spark):
@@ -124,28 +119,26 @@ def test_sf1_leg_runs_cheapest_first():
 
 
 def test_cross_source_mask_and_sets_output_identical(spark):
-    """The bitset source-set aggregation matches the DuckDB oracle; the
-    hashed shingle key gives the same counts on this corpus (no xxhash64
-    collision); neither plan carries an ObjectHashAggregate."""
+    """The hashed shingle key gives the same counts as the raw one on this
+    corpus (no xxhash64 collision); neither plan carries an
+    ObjectHashAggregate.  The oracle sweep checks the raw key's output."""
     import pytest
 
     fn = registry()["dedup_cross_source_matrix"].fn
-    raw = assert_oracle_match(spark, "dedup_cross_source_matrix")
-    assert len(raw) > 0
+    raw = fn(spark, SF_DIR)
     hashed = fn(spark, SF_DIR, shingle_key="hash")
     assert sorted(tuple(r) for r in hashed.collect()) == sorted(
-        raw.itertuples(index=False, name=None)
+        tuple(r) for r in raw.collect()
     )
-    _assert_no_object_hash_aggregate(fn(spark, SF_DIR))
+    _assert_no_object_hash_aggregate(raw)
     _assert_no_object_hash_aggregate(hashed)
     with pytest.raises(ValueError):
         fn(spark, SF_DIR, shingle_key="nope")
 
 
 def test_brand_audience_auto_gate_and_path_identity(spark):
-    """One plan at every scale: the bitset brand-set build matches the DuckDB
-    oracle and carries no ObjectHashAggregate."""
-    assert len(assert_oracle_match(spark, "orders_brand_audience_jaccard")) > 0
+    """One plan at every scale: the bitset brand-set build carries no
+    ObjectHashAggregate (the oracle sweep checks its output)."""
     _assert_no_object_hash_aggregate(
         registry()["orders_brand_audience_jaccard"].fn(spark, SF_DIR)
     )
@@ -165,10 +158,9 @@ def test_edges_pairgen_arrays_and_join_identical(spark):
 
 
 def test_events_type_cooccurrence_auto_gate_and_path_identity(spark):
-    """One plan at every scale: both type-co-occurrence ops match their
-    DuckDB oracles and carry no ObjectHashAggregate."""
+    """One plan at every scale: neither type-co-occurrence op carries an
+    ObjectHashAggregate (the oracle sweep checks their output)."""
     for op in ("events_type_lift_matrix", "events_type_cooccurrence_daily"):
-        assert len(assert_oracle_match(spark, op)) > 0
         _assert_no_object_hash_aggregate(registry()[op].fn(spark, SF_DIR))
 
 
@@ -214,9 +206,8 @@ def test_triangle_adjacency_generate_replaces_src_join(spark):
 
 
 def test_vocab_overlap_mask_and_sets_output_identical(spark):
-    """The bitset per-token source-set aggregation matches the DuckDB
-    oracle and carries no ObjectHashAggregate."""
-    assert len(assert_oracle_match(spark, "text_source_vocab_overlap")) > 0
+    """The bitset per-token source-set aggregation carries no
+    ObjectHashAggregate (the oracle sweep checks its output)."""
     _assert_no_object_hash_aggregate(
         registry()["text_source_vocab_overlap"].fn(spark, SF_DIR)
     )

@@ -37,20 +37,19 @@ import duckdb
 
 def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    import bench  # SF10_OPS / SF10_BREADTH / SF10_ORACLE_SKIP / TABLES are the contract
+    import bench  # SF10_* / TABLES are the contract
 
+    from sparkmerge.profile import measure, release_checkpoint_blocks
     from sparkmerge.queries import registry, table_path
     from sparkmerge.session import get_spark, host_cpus
 
     sf10_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sparkmerge_sf10"
-    # Per-BLOCK budgets, each measured from its own block start (r9 verdict
-    # ask #2: the r9 global budget spent itself on throttled breadth+levers
-    # runs and silently dropped 8 tail ops including merge_full/tpch_q5 —
-    # the merge-at-scale evidence.  A protected tail slice means a bad host
-    # day costs breadth rows, never the headline merge story).
-    breadth_budget = float(os.environ.get("SPARK_GRAFT_SF10_BREADTH_BUDGET", "360"))
-    levers_budget = float(os.environ.get("SPARK_GRAFT_SF10_LEVERS_BUDGET", "300"))
-    tail_budget = float(os.environ.get("SPARK_GRAFT_SF10_TAIL_BUDGET", "1800"))
+    # Per-BLOCK budgets (bench.SF10_BUDGET_S), each measured from its own
+    # block start (r9 verdict ask #2: the r9 global budget spent itself on
+    # throttled breadth+levers runs and silently dropped 8 tail ops
+    # including merge_full/tpch_q5 — the merge-at-scale evidence.  A
+    # protected tail slice means a bad host day costs breadth rows, never
+    # the headline merge story).
     cpus = host_cpus()
 
     spark = get_spark("bench-sf10")  # scale profile: AQE on, compression on
@@ -92,45 +91,9 @@ def main() -> None:
     gc.collect()
     spark.sparkContext._jvm.System.gc()
 
-    def timed(run, pre=None) -> float:
-        # pre() runs OUTSIDE every timer — Spark runs release leftover
-        # localCheckpoint blocks here (bench._release_checkpoint_blocks,
-        # r12 measurement-hygiene fix; the gc.collect() between ops only
-        # releases blocks ASYNCHRONOUSLY via the ContextCleaner)
-        if pre is not None:
-            pre()
-        t0 = time.perf_counter()
-        run()
-        warm = time.perf_counter() - t0
-        if warm >= 60:
-            # genuinely heavy: one rep — per-plan warmup share is noise at
-            # this magnitude, and a second rep would blow the block budget
-            return warm
-        n = 1 if warm >= 10 else 3 if warm >= 2 else 5
-        if n == 1:
-            # 10-60 s band: the first reading still carries the op's OWN
-            # cold costs (whole-stage-codegen compile for this plan shape,
-            # first touch of its input files) even after session warmup —
-            # the r11 committed artifact read merge_sparse_patch at 24.8 s
-            # against a 3.7 s steady state this way.  One more rep; min is
-            # the steady-state estimator when one sample is cold-biased.
-            if pre is not None:
-                pre()
-            t0 = time.perf_counter()
-            run()
-            return min(warm, time.perf_counter() - t0)
-        times = []
-        for _ in range(n):
-            if pre is not None:
-                pre()
-            t0 = time.perf_counter()
-            run()
-            times.append(time.perf_counter() - t0)
-        return sorted(times)[n // 2]
-
     reg = registry()
 
-    def measure(entries, block_budget: float) -> dict:
+    def run_block(entries, block_budget: float) -> dict:
         """One leg block.  ``entries``: list of (label, op_id, fn_kwargs);
         oracle runs for kwargs-free entries only (a kwargs variant is a
         Spark-side lever whose default path carries the oracle).  The
@@ -151,15 +114,17 @@ def main() -> None:
                 continue
             spec = reg[op_id]
             # failure-isolated per op AND per side: one runaway query costs
-            # its own row, never the whole leg
+            # its own row, never the whole leg.  The gc.collect() between
+            # ops releases checkpoint blocks only asynchronously (through
+            # the ContextCleaner), so each run also releases them first.
             try:
                 spark_times[label] = round(
-                    timed(
+                    measure(
                         lambda: spec.fn(spark, sf10_dir, **kwargs)
                         .write.format("noop")
                         .mode("overwrite")
                         .save(),
-                        pre=lambda: bench._release_checkpoint_blocks(spark),
+                        before=lambda: release_checkpoint_blocks(spark),
                     ),
                     4,
                 )
@@ -173,7 +138,7 @@ def main() -> None:
             elif spec.oracle is not None and not over_budget():
                 try:
                     duck_times[label] = round(
-                        timed(lambda: con.sql(spec.oracle).arrow()), 4
+                        measure(lambda: con.sql(spec.oracle).arrow()), 4
                     )
                 except Exception as e:  # noqa: BLE001
                     errors[label] = f"duckdb: {type(e).__name__}: {e}"[:200]
@@ -190,25 +155,22 @@ def main() -> None:
             block["errors"] = errors
         return block
 
+    budget = bench.SF10_BUDGET_S
     out = {
         "sf": 10,
-        "budget_sec": {
-            "breadth": breadth_budget,
-            "levers": levers_budget,
-            "tail": tail_budget,
-        },
+        "budget_sec": budget,
         # cheap-first ordering retained, but every block now has its OWN
         # protected budget window — breadth/levers overruns can no longer
         # starve the tail (the merge-at-scale evidence)
-        "breadth": measure([(op, op, {}) for op in bench.SF10_BREADTH], breadth_budget),
-        "levers": measure(
+        "breadth": run_block([(op, op, {}) for op in bench.SF10_BREADTH], budget["breadth"]),
+        "levers": run_block(
             [
                 (f"{op}[lsh]", op, {"blocking": "lsh"})
                 for op in ("dedup_ngram_jaccard", "dedup_containment")
             ],
-            levers_budget,
+            budget["levers"],
         ),
-        "tail": measure([(op, op, {}) for op in bench.SF10_OPS], tail_budget),
+        "tail": run_block([(op, op, {}) for op in bench.SF10_OPS], budget["tail"]),
     }
     print(json.dumps(out))
 

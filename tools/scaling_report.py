@@ -4,15 +4,14 @@ sf0.001 → sf0.01 → sf0.1 (100× data growth), Spark vs the DuckDB oracle.
 The point is the SHAPE, not the absolute numbers: Spark times are
 floor-dominated at tiny SFs and grow sublinearly in data size, while the
 all-pairs oracle formulations grow quadratically — the crossover the engine
-is designed around.  Protocol matches bench.py (warm-up + median of 3,
-noop sink / arrow materialization).
+is designed around.  Every reading is one ``sparkmerge.profile.measure``
+call, as in bench.py (noop sink / arrow materialization).
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 import duckdb
 
@@ -221,8 +220,9 @@ TABLES = [
 
 def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from sparkmerge.profile import measure
     from sparkmerge.queries import registry
-    from sparkmerge.session import get_spark, host_cpus
+    from sparkmerge.session import get_spark, host_cpus, sql_confs
 
     # Incremental mode: `python tools/scaling_report.py op1 op2 ...`
     # measures ONLY the named ops and seeds everything else from the last
@@ -263,7 +263,6 @@ def main() -> None:
     spark = get_spark("sparkmerge-scaling", input_bytes=17 * 1024 * 1024)
     spark.sparkContext.setLogLevel("ERROR")
     reg = registry()
-    cpus = str(host_cpus())
 
     # absorb one-time session costs (JVM classloading, codegen compiler,
     # parquet reader init) BEFORE the first measured op — without this the
@@ -283,17 +282,10 @@ def main() -> None:
                 [sys.executable, os.path.join(os.path.dirname(__file__), "gen_scale.py")],
                 check=True,
             )
-        big = sf == "1"
-        spark.conf.set("spark.sql.shuffle.partitions", cpus if big else "8")
-        spark.conf.set("spark.sql.adaptive.enabled", "true" if big else "false")
-        spark.conf.set(
-            "spark.sql.files.maxPartitionBytes", str((4 if big else 1) * 1024 * 1024)
-        )
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", str((10 if big else 64) * 1024 * 1024)
-        )
+        for k, v in sql_confs("scale" if sf == "1" else "lean").items():
+            spark.conf.set(k, v)
         con = duckdb.connect()
-        con.execute(f"PRAGMA threads={cpus}")
+        con.execute(f"PRAGMA threads={host_cpus()}")
         for t in TABLES:
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
@@ -302,44 +294,18 @@ def main() -> None:
             if only and op not in only:
                 continue
             spec = reg[op]
-
-            def srun():
-                spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-            # Adaptive repeats (bench.py protocol): a warm-up over 10 s IS the
-            # measurement — the quadratic all-pairs oracle formulations at sf1
-            # would otherwise take minutes × 4 runs each.
-            t0 = time.perf_counter()
-            srun()
-            warm = time.perf_counter() - t0
-            if warm >= 10:
-                s = warm
-            else:
-                n = 3 if warm < 2 else 1
-                ts = []
-                for _ in range(max(n, 1)):
-                    t0 = time.perf_counter()
-                    srun()
-                    ts.append(time.perf_counter() - t0)
-                s = sorted(ts)[len(ts) // 2]
+            # a warm-up of 60 s or more is the reading — the quadratic
+            # all-pairs oracle formulations at sf1 would otherwise take
+            # minutes × several runs each
+            s = measure(
+                lambda: spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            )
             if (op, sf) in ORACLE_SKIP:
                 results.setdefault(op, {})[sf] = (s, float("nan"))
                 print(f"{op} sf{sf}: spark {s:.3f} duck skipped", file=sys.stderr)
                 continue
             try:
-                t0 = time.perf_counter()
-                con.sql(spec.oracle).arrow()
-                warm = time.perf_counter() - t0
-                if warm >= 10:
-                    d = warm
-                else:
-                    n = 3 if warm < 2 else 1
-                    ts = []
-                    for _ in range(max(n, 1)):
-                        t0 = time.perf_counter()
-                        con.sql(spec.oracle).arrow()
-                        ts.append(time.perf_counter() - t0)
-                    d = sorted(ts)[len(ts) // 2]
+                d = measure(lambda: con.sql(spec.oracle).arrow())
             except Exception as e:  # disk-spill death etc: record, keep going
                 print(f"{op} sf{sf}: duck ERROR {e}", file=sys.stderr)
                 d = float("nan")
@@ -355,10 +321,9 @@ def main() -> None:
     lines = [
         "# SCALING — wall-clock growth across 1000× data (generated by tools/scaling_report.py)",
         "",
-        "Session pre-warmed, then warm-up + median of 3 per op (adaptive: single",
-        "run when a warm-up exceeds 10 s —",
-        "only the quadratic oracle formulations at sf1 hit this), same",
-        "materialization as bench.py.  `spark@sf / duck@sf` in seconds; `growth` is",
+        "Session pre-warmed, then one `sparkmerge.profile.measure` reading per op",
+        "(a warm-up whose length picks the repeats), same materialization as",
+        "bench.py.  `spark@sf / duck@sf` in seconds; `growth` is",
         "time(sf1) / time(sf0.001) — data grows 1000×, so growth ≪ 1000 means the",
         "fixed job floor dominates (disappears at scale), growth ≈ 1000 is linear",
         "work, growth ≫ 1000 is super-linear (the all-pairs oracle formulations).",

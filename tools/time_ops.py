@@ -1,6 +1,6 @@
-"""Targeted op timer — bench.py's exact protocol (construct+noop write,
-warm-up rep then adaptive median) for a named list of ops at any SF dir,
-in a fresh session with the profile bench would use for that dir.
+"""Targeted op timer: each named op at any SF dir, timed construct + noop
+write by ``sparkmerge.profile.measure`` (bench.py's protocol), in a fresh
+session with the profile bench would use for that dir.
 
 Usage: python tools/time_ops.py <sf_dir> op[:kwarg=val,...] [op ...]
    e.g. python tools/time_ops.py /tmp/sparkmerge_sf10 dedup_ngram_jaccard:blocking=lsh
@@ -11,7 +11,6 @@ from __future__ import annotations
 import gc
 import os
 import sys
-import time
 
 
 def main() -> None:
@@ -25,6 +24,8 @@ def main() -> None:
             op, kwargs = arg, {}
         specs.append((arg, op, kwargs))
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from bench import TABLES
+    from sparkmerge.profile import measure, release_checkpoint_blocks
     from sparkmerge.queries import registry, table_path
     from sparkmerge.session import get_spark
 
@@ -36,10 +37,7 @@ def main() -> None:
     spark = get_spark("time-ops", input_bytes=input_bytes)
     spark.sparkContext.setLogLevel("ERROR")
     reg = registry()
-    for t in (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ):
+    for t in TABLES:
         table_path(sf_dir, t)
     # untimed session warmup (the sf10 runner discipline)
     from pyspark.sql import functions as F
@@ -50,43 +48,13 @@ def main() -> None:
         .write.format("noop").mode("overwrite").save()
     )
 
-    # r12 measurement hygiene (bench._release_checkpoint_blocks discipline):
-    # release leftover localCheckpoint blocks OUTSIDE every timer so reps
-    # and successive ops never read under earlier blocks' memory pressure
-    def _release() -> None:
-        try:
-            for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                jrdd.unpersist(True)
-        except Exception:
-            pass
-
-    def timed(run) -> float:
-        _release()
-        t0 = time.perf_counter()
-        run()
-        warm = time.perf_counter() - t0
-        if warm >= 60:
-            return warm
-        n = 1 if warm >= 10 else 3 if warm >= 2 else 5
-        if n == 1:
-            _release()
-            t0 = time.perf_counter()
-            run()
-            return min(warm, time.perf_counter() - t0)
-        times = []
-        for _ in range(n):
-            _release()
-            t0 = time.perf_counter()
-            run()
-            times.append(time.perf_counter() - t0)
-        return sorted(times)[n // 2]
-
     for label, op, kwargs in specs:
         spec = reg[op]
         spark.sparkContext.setJobDescription(label)
-        sec = timed(
+        sec = measure(
             lambda: spec.fn(spark, sf_dir, **kwargs)
-            .write.format("noop").mode("overwrite").save()
+            .write.format("noop").mode("overwrite").save(),
+            before=lambda: release_checkpoint_blocks(spark),
         )
         gc.collect()
         spark.sparkContext._jvm.System.gc()
