@@ -23,10 +23,9 @@ The leg is wall-clock-budgeted (``SF1_BUDGET_S``; SPARK_GRAFT_SF1=0
 disables) and failure-isolated, so the primary sf0.1 output line is never
 at risk.
 
-A third leg embeds sf10 (~1.7 GiB) under "sf10" with three sub-blocks:
+A third leg embeds sf10 (~1.7 GiB) under "sf10" with two sub-blocks:
 "breadth" (~8 scale-safe ops spanning merge/agg/window/graph/text — the
-~1× amortization story), "levers" (the registered blocking='lsh' 100 TB
-routes, Spark-only rows), and "tail" (the heaviest exact shapes: job
+~1× amortization story) and "tail" (the heaviest exact shapes: job
 floors amortize, the set-similarity ops go superlinear as their blocking
 keys densify — their certifier oracles are infeasible at this SF, so Spark
 completing them at all is the measurement).  Each block has its own
@@ -121,7 +120,7 @@ SF1_SKIP = {
 # FIRST, ordered by the last-known committed sf1 seconds (the r12
 # quiet-host BENCH_LOCAL.json cut at the r13 HEAD), so a loaded host that exhausts the
 # budget skips only the few most expensive rows — which all have receipts
-# elsewhere (sf10 tail/levers, SCALING.md) — instead of whatever happens
+# elsewhere (sf10 tail, SCALING.md) — instead of whatever happens
 # to be last in HEADLINE registration order (the r12 driver leg silently
 # dropped its two last-ordered ops that way).  Values from the r13
 # canonical 32-core quiet-host cut (the r12-committed file turned out
@@ -173,7 +172,7 @@ _SF1_LAST_KNOWN_SEC = {
 SF1_BUDGET_S = 540.0
 SF1_RECEIPT_BUDGET_S = 200.0
 SF1_RECEIPT_ORACLE_BUDGET_S = 420.0
-SF10_BUDGET_S = {"breadth": 360.0, "levers": 300.0, "tail": 1800.0}
+SF10_BUDGET_S = {"breadth": 360.0, "tail": 1800.0}
 
 # Spark-only single-run receipts appended to the sf1 leg AFTER the main
 # loop, under their own budget extension (SF1_RECEIPT_BUDGET_S): ops too
@@ -594,7 +593,7 @@ def _sf10_leg(spark, reg) -> dict:
                 # sf10 gen measures ~2 min, so 900 s is headroom
                 timeout=900,
             )
-    # the runner budgets each of its three blocks separately (r9 verdict
+    # the runner budgets each of its blocks separately (r9 verdict
     # ask #2 — protected tail slice); the backstop here covers their sum
     # plus last-admitted-op overruns
     budget = sum(SF10_BUDGET_S.values())

@@ -1,15 +1,15 @@
 """Deduplication operators: exact, MinHash-LSH, SimHash, n-gram Jaccard.
 
-All four are built from native Spark functions (xxhash64, explode, windowed
-ranking, array ops) — no Python UDFs — so they whole-stage-codegen and scale
-linearly.  Pairwise comparisons only ever happen inside LSH/banding buckets,
-never across the full corpus.
+All four are built from native Spark functions (explode, windowed ranking,
+array ops, higher-order folds) — no Python UDFs — so no row leaves the JVM
+and they scale linearly.  Pairwise comparisons only ever happen inside
+banding or prefix buckets, never across the full corpus.
 
 Scale notes:
 - ``exact_dedup`` is one shuffle on the dedup key (same machinery as the
   reference's @badKey ranking, sp_SimpleMerge.sql:209-241).
 - ``minhash_signatures`` is shingle-explode (map-side) + one groupBy(doc);
-  banding joins shuffle on (band_id, band_hash) — small, uniform keys.
+  the banding join shuffles on (band index, band slice) — one key per band.
 - SimHash candidates use the 4×16-bit block trick: hamming(a,b) ≤ 3 ⟹ at
   least one of 4 blocks equal, so a 4-way band join finds all close pairs.
 """
@@ -109,11 +109,9 @@ def _poly_hash31(col: Column, mult: int = 31) -> Column:
 
     Deliberately SQL-expressible — DuckDB replays the identical fold
     (list_reduce over ascii(substring(...)) — see queries/ext_dedup.py), so
-    MinHash/SimHash outputs become hash-checkable against the oracle.
-    ``xxhash64`` (JVM-native, ~1 integer op/byte) remains the default base
-    hash for the scale path; the fold costs one lambda step per character,
-    which only matters on the exploded shingle/token stream.  Folding over
-    the 1..len index sequence (not the chars) keeps substring() positional —
+    MinHash/SimHash outputs are hash-checkable against the oracle.  It is
+    the one base hash of both signature pipelines.  Folding over the
+    1..len index sequence (not the chars) keeps substring() positional —
     ascii(substring(s, i, 1)) is the cross-engine character-code idiom."""
     return F.aggregate(
         F.sequence(F.lit(1), F.greatest(F.length(col), F.lit(1))),
@@ -126,16 +124,6 @@ def _poly_hash31(col: Column, mult: int = 31) -> Column:
     )
 
 
-def base_hash31(col: Column, method: str = "xxhash64") -> Column:
-    """Base string hash into [0, 2^31-1).  ``xxhash64`` (default, fastest) or
-    ``poly31`` (SQL-expressible, used by the oracle-checked registry ops)."""
-    if method == "xxhash64":
-        return F.pmod(F.xxhash64(col), F.lit(_MH_PRIME))
-    if method == "poly31":
-        return _poly_hash31(col, 31)
-    raise ValueError(f"unknown base hash {method!r}")
-
-
 def minhash_signatures(
     df: DataFrame,
     id_col: str,
@@ -143,15 +131,14 @@ def minhash_signatures(
     *,
     num_hashes: int = 32,
     shingle_n: int = 5,
-    base_hash: str = "xxhash64",
 ) -> DataFrame:
-    """doc → MinHash signature.  Each shingle is hashed ONCE (xxhash64 by
-    default; ``base_hash='poly31'`` for the oracle-checkable variant); the
-    ``num_hashes`` component functions are linear permutations
-    ``(a_i·h + b_i) mod 2^31-1`` of that base hash — the standard trick that
-    turns k string hashes per shingle into 1 string hash + k integer ops
-    (~k× less CPU on the exploded shingle stream, the dominant cost at scale).
-    One explode + one groupBy(doc)."""
+    """doc → MinHash signature.  Each shingle is hashed ONCE by the
+    SQL-expressible :func:`_poly_hash31` (so the DuckDB oracle replays the
+    whole pipeline); the ``num_hashes`` component functions are linear
+    permutations ``(a_i·h + b_i) mod 2^31-1`` of that base hash — the
+    standard trick that turns k string hashes per shingle into 1 string
+    hash + k integer ops (~k× less CPU on the exploded shingle stream, the
+    dominant cost at scale).  One explode + one groupBy(doc)."""
     # Materialize the normalized text BEFORE the higher-order shingle
     # transform — expressions referenced inside a lambda are re-evaluated per
     # array element, so inlining the regexp would cost O(len) regex runs/doc.
@@ -167,7 +154,7 @@ def minhash_signatures(
             F.array_distinct(F.transform(idx, lambda i: F.substring(F.col("_norm"), i, shingle_n)))
         ).alias("_sh"),
     )
-    h31 = base_hash31(F.col("_sh"), base_hash)
+    h31 = _poly_hash31(F.col("_sh"), 31)
     aggs = []
     for i in range(num_hashes):
         a, b = _mh_params(i)
@@ -181,47 +168,29 @@ def minhash_lsh_pairs(
     *,
     num_hashes: int = 32,
     bands: int = 8,
-    band_key: str = "hash",
-    carry_sig: bool = True,
 ) -> DataFrame:
-    """LSH banding: hash each band of the signature into a bucket; docs
-    sharing any (band, bucket) become a candidate pair (a_id < b_id).
-    Returns candidates with their estimated Jaccard (fraction of matching
-    minhash components).
+    """LSH banding: docs sharing any band — the band's raw minhash slice,
+    joined by array<long> equality, as the DuckDB oracle joins its lists —
+    become a candidate pair (a_id < b_id).  Returns candidates with their
+    estimated Jaccard (fraction of matching minhash components).
 
     One ``posexplode`` over the band array feeds a single self-join keyed on
-    (band index, bucket) — ONE shuffle for all bands, versus the naive
+    (band index, band slice) — ONE shuffle for all bands, versus the naive
     per-band join which costs ``bands`` shuffles (and ``bands``× the task
     overhead).
 
-    ``carry_sig=True`` (default) rides the signatures through the band rows
-    so the estimated Jaccard needs no rejoin — fastest when the signature
-    (num_hashes longs) is small next to the rest of the row, which holds at
-    the local SFs.  ``carry_sig=False`` ships only (band, bucket, id)
-    through the candidate shuffle — ``num_hashes``× less shuffle payload —
-    and rejoins the signature table on a_id/b_id after the pair dedup: the
-    shape to pick when pairs ≪ banded rows and the signature dominates the
-    row, i.e. a 100 TB corpus.  Identical output by construction
-    (tests/test_ext.py::test_minhash_carry_sig_modes_identical).
-
-    ``band_key='hash'`` (default) buckets each band through xxhash64 — a
-    fixed-width shuffle key.  ``band_key='slice'`` joins on the band's raw
-    minhash slice (array<long> equality): identical pair set, engine-neutral
-    (the DuckDB oracle joins on the same lists), slightly wider shuffle rows."""
+    The signatures ride through the band rows, so the estimate needs no
+    rejoin.  Shipping only (band, slice, id) and rejoining the signatures
+    after the pair dedup gives the same output but took ``dedup_minhash``
+    from 7.1 to 10.1 s at sf0.1 on 4 cores (medians of 4 interleaved
+    pairs; the rejoin lost every pair)."""
     rows_per_band = num_hashes // bands
     sig = F.array(*[F.col(f"mh_{i}") for i in range(num_hashes)])
     sig_arr = sig_df.select(F.col(id_col), sig.alias("_sig"))
-    if band_key == "hash":
-        bucket_of = lambda b: F.xxhash64(  # noqa: E731
-            F.slice(F.col("_sig"), b * rows_per_band + 1, rows_per_band)
-        )
-    elif band_key == "slice":
-        bucket_of = lambda b: F.slice(  # noqa: E731
-            F.col("_sig"), b * rows_per_band + 1, rows_per_band
-        )
-    else:
-        raise ValueError(f"unknown band_key {band_key!r}")
-    bands_arr = F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), bucket_of)
+    bands_arr = F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda b: F.slice(F.col("_sig"), b * rows_per_band + 1, rows_per_band),
+    )
     matches = F.size(
         F.filter(
             F.zip_with(F.col("_a_sig"), F.col("_b_sig"), lambda x, y: x == y),
@@ -229,64 +198,39 @@ def minhash_lsh_pairs(
         )
     )
     est = (matches / float(num_hashes)).alias("est_jaccard")
-    if carry_sig:
-        banded = sig_arr.select(
-            id_col, "_sig", F.posexplode(bands_arr).alias("_band", "_bucket")
-        )
-        left = banded.select(
-            "_band", "_bucket", F.col(id_col).alias("a_id"), F.col("_sig").alias("_a_sig")
-        )
-        right = banded.select(
-            "_band", "_bucket", F.col(id_col).alias("b_id"), F.col("_sig").alias("_b_sig")
-        )
-        # r12 (guide §2.3): est is computed map-side on the band-join output
-        # so the pair-dedup exchange ships (a_id, b_id, est) instead of two
-        # num_hashes-long signature arrays per candidate row.  est is
-        # identical for every banded copy of a pair, so the output is
-        # unchanged.
-        return (
-            left.join(right, ["_band", "_bucket"])
-            .filter(F.col("a_id") < F.col("b_id"))
-            .select("a_id", "b_id", est)
-            .dropDuplicates(["a_id", "b_id"])
-        )
-    banded = sig_arr.select(id_col, F.posexplode(bands_arr).alias("_band", "_bucket"))
-    left = banded.select("_band", "_bucket", F.col(id_col).alias("a_id"))
-    right = banded.select("_band", "_bucket", F.col(id_col).alias("b_id"))
-    pairs = (
+    banded = sig_arr.select(
+        id_col, "_sig", F.posexplode(bands_arr).alias("_band", "_bucket")
+    )
+    left = banded.select(
+        "_band", "_bucket", F.col(id_col).alias("a_id"), F.col("_sig").alias("_a_sig")
+    )
+    right = banded.select(
+        "_band", "_bucket", F.col(id_col).alias("b_id"), F.col("_sig").alias("_b_sig")
+    )
+    # r12: est is computed map-side on the band-join output so the
+    # pair-dedup exchange ships (a_id, b_id, est) instead of two
+    # num_hashes-long signature arrays per candidate row.  est is identical
+    # for every banded copy of a pair, so the output is unchanged.
+    return (
         left.join(right, ["_band", "_bucket"])
         .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
+        .select("a_id", "b_id", est)
         .dropDuplicates(["a_id", "b_id"])
     )
-    a_sig = sig_arr.select(F.col(id_col).alias("a_id"), F.col("_sig").alias("_a_sig"))
-    b_sig = sig_arr.select(F.col(id_col).alias("b_id"), F.col("_sig").alias("_b_sig"))
-    return (
-        pairs.join(a_sig, "a_id").join(b_sig, "b_id").select("a_id", "b_id", est)
-    )
 
 
-def simhash(
-    df: DataFrame, id_col: str, text_col: str, *, base_hash: str = "xxhash64"
-) -> DataFrame:
+def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """64-bit SimHash over word tokens: per bit b, sum ±1 weighted by token
     hash bit b; sign → bit.  Emitted as four 16-bit blocks (for the
     hamming≤3 ⟹ one-block-equal candidate join).
 
-    ``base_hash='poly31'`` uses two independent polynomial folds (multipliers
-    31 and 37) packed as ``h_a | (h_b << 31)`` — 62 usable bits, and exactly
+    The token hash packs two independent polynomial folds (multipliers 31
+    and 37) as ``h_a | (h_b << 31)`` — 62 usable bits, and exactly
     reproducible in DuckDB SQL for the oracle check."""
     toks = _spread(df.select(id_col, F.col(text_col))).select(
         id_col, F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("_tok")
     ).filter(F.col("_tok") != "")
-    if base_hash == "xxhash64":
-        h = F.xxhash64(F.col("_tok"))
-    elif base_hash == "poly31":
-        h = _poly_hash31(F.col("_tok"), 31) + _poly_hash31(F.col("_tok"), 37) * F.lit(
-            2147483648
-        )
-    else:
-        raise ValueError(f"unknown base hash {base_hash!r}")
+    h = _poly_hash31(F.col("_tok"), 31) + _poly_hash31(F.col("_tok"), 37) * F.lit(2147483648)
     bit_aggs = [
         # unsigned shift + mask (1<<63 would overflow a signed-64 literal)
         F.sum(
@@ -464,109 +408,16 @@ def _token_classes(base: DataFrame) -> DataFrame:
     pipeline runs before pairwise work: similarity depends only on the
     SET, so |classes|² work + member expansion replaces |docs|² work.
     On a replicated corpus the collapse is dramatic (sf10: 500k docs →
-    81k classes, identical-copy multiplicity up to 930 → banding
-    candidate rows 16.1B → 241M, 67×); on a dup-free corpus it is one
-    cheap aggregation that changes nothing.  Eagerly checkpointed: three
-    consumers (representative base, within-class expansion, member
-    re-attach) would otherwise re-run the corpus-wide tokenize+agg."""
+    81k classes, identical-copy multiplicity up to 930, so the prefix
+    buckets lose their within-copy quadratic blowup); on a dup-free corpus
+    it is one cheap aggregation that changes nothing.  Eagerly
+    checkpointed: three consumers (representative base, within-class
+    expansion, member re-attach) would otherwise re-run the corpus-wide
+    tokenize+agg."""
     return (
         base.groupBy("_grp", "_toks")
         .agg(F.sort_array(F.collect_list("_id")).alias("_ids"))
         .localCheckpoint(eager=True)
-    )
-
-
-def _token_lsh_candidates(
-    base: DataFrame,
-    *,
-    num_hashes: int = 64,
-    bands: int = 16,
-    probed: bool = False,
-) -> DataFrame:
-    """Candidate ``(a_id, b_id)`` pairs from TOKEN-SET MinHash banding — the
-    approximate candidate router behind ``blocking='lsh'`` (see
-    :func:`ngram_jaccard_pairs`).
-
-    Same machinery as :func:`minhash_lsh_pairs` but (a) signatures are
-    computed over the already-tokenized ``_toks`` set column (the EXACT
-    similarity space the verify stage measures — word tokens, not character
-    shingles), and (b) the group column rides the band join key, so
-    candidates never cross groups.  xxhash64 base hash (JVM-native — no
-    oracle mirrors this path; the exact verify stage downstream produces
-    the surfaced values, so cross-engine hash parity is not needed, only
-    determinism).  16 bands × 4 rows over 64 hashes: collision P at the
-    corpus's weakest true pair (token J ≈ 0.5) is 1−(1−0.5⁴)^16 ≈ 0.64,
-    ≥ 0.96 at the median pair (J ≈ 0.76), ~2·10⁻³ at the background
-    overlap (J ≈ 0.1) — recall is corpus-measured, never assumed
-    (tests/test_r9_levers.py; the dedup_lsh_recall_eval discipline).
-
-    Two deliberate shuffle-shape choices, both measured (a first cut that
-    carried the 64-long signature through the band join to pre-filter on
-    estimated Jaccard ran 4× SLOWER than the exact path at sf1 — the est
-    join payload cost more than the verify it was saving):
-
-    - the band join ships ONLY (group, band, bucket, id) — the
-      ``carry_sig=False`` discipline of :func:`minhash_lsh_pairs`; the
-      exact verify downstream needs no estimate, so the signatures never
-      cross the wire;
-    - pair orientation is a plain conjunctive filter on the self-join
-      (``a_id < b_id``; the asymmetric containment caller re-expands both
-      orientations AFTER the dedup, sharing the intersection) so every
-      heavy stage runs on undirected pairs once.
-
-    Scale shape: one explode + one groupBy(doc) for signatures, ONE
-    posexplode band join — the pipeline dedup_minhash completes in ~79 s
-    on the sf10 corpus whose exact prefix join needs 250+ s.
-
-    ``probed=True`` (r12): ``base`` carries a boolean ``_probe`` column and
-    only pairs with at least one probe-side member matter downstream (the
-    registered ops sample their surfaced pairs) — the band self-join's LEFT
-    side keeps only probe rows and pairs are normalized to (least, greatest)
-    after the join, so every pair with a probe endpoint is still generated
-    (from its probe side) while the join's output shrinks by the probe
-    fraction.  ``probed=False`` keeps the plain a<b self-join."""
-    ex = base.select("_id", "_grp", F.explode("_toks").alias("_tok"))
-    h31 = base_hash31(F.col("_tok"), "xxhash64")
-    aggs = []
-    for i in range(num_hashes):
-        a, b = _mh_params(i)
-        aggs.append(
-            F.min((h31 * F.lit(a) + F.lit(b)) % F.lit(_MH_PRIME)).alias(f"mh_{i}")
-        )
-    sig = ex.groupBy("_id", "_grp").agg(*aggs)
-    rows_per_band = num_hashes // bands
-    sig_arr = sig.select(
-        "_id", "_grp", F.array(*[F.col(f"mh_{i}") for i in range(num_hashes)]).alias("_sig")
-    )
-    bands_arr = F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.xxhash64(F.slice(F.col("_sig"), b * rows_per_band + 1, rows_per_band)),
-    )
-    banded = sig_arr.select(
-        "_id", "_grp", F.posexplode(bands_arr).alias("_band", "_bucket")
-    )
-    left = banded.select("_grp", "_band", "_bucket", F.col("_id").alias("a_id"))
-    if probed:
-        # no broadcast hint: class-rep id sets are dimension-sized on every
-        # local SF (planner broadcasts them) but grow with the corpus — at
-        # 100 TB AQE must stay free to pick a shuffled semi join
-        probe_ids = base.filter(F.col("_probe")).select(F.col("_id").alias("a_id"))
-        left = left.join(probe_ids, "a_id", "left_semi")
-    right = banded.select("_grp", "_band", "_bucket", F.col("_id").alias("b_id"))
-    joined = left.join(right, ["_grp", "_band", "_bucket"])
-    if probed:
-        return (
-            joined.filter(F.col("a_id") != F.col("b_id"))
-            .select(
-                F.least("a_id", "b_id").alias("a_id"),
-                F.greatest("a_id", "b_id").alias("b_id"),
-            )
-            .dropDuplicates(["a_id", "b_id"])
-        )
-    return (
-        joined.filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .dropDuplicates(["a_id", "b_id"])
     )
 
 
@@ -722,7 +573,6 @@ def ngram_jaccard_pairs(
     group_col: str,
     *,
     threshold: float,
-    blocking: str = "prefix",
     probe=None,
 ) -> DataFrame:
     """Exact token-set Jaccard join — NOT all-pairs, and (r12) never
@@ -733,35 +583,26 @@ def ngram_jaccard_pairs(
     (within-class pairs are Jaccard 1.0 by identity; cross-class pairs
     inherit the verified class value, which IS the exact doc-pair value
     since J depends only on the sets).  Output is therefore IDENTICAL to
-    the doc-grain formulation for every ``blocking`` — the quadratic work
-    just runs on |classes|², not |docs|² (sf10 corpus: 500k docs → 81k
-    classes).  Before r12 only the lsh lever collapsed classes; the exact
-    prefix path paid doc-grain candidate buckets (its measured 5.4 s@sf1 →
-    252 s@sf10 superlinearity was exactly the identical-copy multiplicity
-    this removes).
+    the doc-grain formulation — the quadratic work just runs on
+    |classes|², not |docs|² (sf10 corpus: 500k docs → 81k classes).  Before
+    r12 the prefix path paid doc-grain candidate buckets (its measured
+    5.4 s@sf1 → 252 s@sf10 superlinearity was exactly the identical-copy
+    multiplicity this removes).
 
-    ``blocking`` selects the candidate router over class representatives:
-
-    - ``'prefix'`` (default, the oracle surface): POSITIONAL PREFIX
-      FILTERING (Chaudhuri/Vernica/PPJoin).  Order each set's tokens by a
-      global rarest-first total order; with prefix length
-      ``|A| − ⌈t·|A|⌉ + 1``, any pair with J(A,B) ≥ t shares at least one
-      PREFIX token (the globally-smallest shared token cannot sit in
-      either suffix).  Candidates come from an equi-join on (group,
-      xxhash64(prefix token)) — hash collisions only ADD candidates the
-      verify removes — pruned by the length filter
-      (t·|A| ≤ |B| ≤ |A|/t) AND the PPJoin positional filter: for the
-      matched token at 0-based positions (i, j) of the two full orders,
-      |A∩B| ≤ 1 + min(|A|−i−1, |B|−j−1), so a match with
-      that bound < ⌈t/(1+t)·(|A|+|B|)⌉ cannot reach the threshold.  The
-      pair survives if ANY shared prefix token passes (the first shared
-      token always does when J ≥ t — tokens before it in either order are
-      unshared — so recall stays EXACT).
-    - ``'lsh'``: token-set MinHash banding (:func:`_token_lsh_candidates`,
-      64 hashes / 16 bands) — approximate recall, corpus-MEASURED
-      (tests/test_r9_levers.py), each surfaced pair still carrying its
-      EXACT Jaccard from the shared verify stage (lever output ⊆ exact
-      output by construction).
+    Candidates over class representatives come from POSITIONAL PREFIX
+    FILTERING (Chaudhuri/Vernica/PPJoin).  Order each set's tokens by a
+    global rarest-first total order; with prefix length
+    ``|A| − ⌈t·|A|⌉ + 1``, any pair with J(A,B) ≥ t shares at least one
+    PREFIX token (the globally-smallest shared token cannot sit in either
+    suffix).  Candidates come from an equi-join on (group,
+    xxhash64(prefix token)) — hash collisions only ADD candidates the
+    verify removes — pruned by the length filter (t·|A| ≤ |B| ≤ |A|/t) AND
+    the PPJoin positional filter: for the matched token at 0-based
+    positions (i, j) of the two full orders, |A∩B| ≤ 1 + min(|A|−i−1,
+    |B|−j−1), so a match with that bound < ⌈t/(1+t)·(|A|+|B|)⌉ cannot
+    reach the threshold.  The pair survives if ANY shared prefix token
+    passes (the first shared token always does when J ≥ t — tokens before
+    it in either order are unshared — so recall stays EXACT).
 
     ``probe`` (r12, optional): a ``Column -> Column`` predicate over member
     ids.  Callers that sample surfaced pairs on ``a_id`` (= the LESSER
@@ -781,61 +622,56 @@ def ngram_jaccard_pairs(
     to re-expand — each a bounded shuffle; nothing is quadratic in an
     unbounded block."""
     classes, cbase = _class_base(df, id_col, text_col, group_col, probe)
-    if blocking == "lsh":
-        cands = _token_lsh_candidates(cbase, probed=probe is not None)
-    elif blocking == "prefix":
-        ordered = _ordered_tokens(cbase)
-        n = F.size("_ord")
-        # ceil(t·n) with a downward epsilon: FP error can only LENGTHEN the
-        # prefix (never shortens it below the safe bound), preserving recall.
-        prefix_len = n - F.ceil(F.lit(threshold) * n - F.lit(1e-9)).cast("int") + 1
-        pre = _hashed_prefix(ordered, prefix_len)
-        a = pre.select(
-            "_grp", "_th", "_probe",
-            F.col("_id").alias("a_id"), F.col("_n").alias("_an"), F.col("_pos").alias("_ap"),
-        )
-        b = pre.select(
-            "_grp", "_th",
-            F.col("_id").alias("b_id"), F.col("_n").alias("_bn"), F.col("_pos").alias("_bp"),
-        )
-        # PPJoin positional upper bound on |A∩B| for THIS matched token;
-        # the required-intersection floor gets the same downward epsilon
-        # (an undershoot only keeps extra candidates — recall-safe)
-        ub = F.lit(1) + F.least(
-            F.col("_an") - F.col("_ap") - 1, F.col("_bn") - F.col("_bp") - 1
-        )
-        alpha = F.ceil(
-            F.lit(threshold / (1.0 + threshold))
-            * (F.col("_an") + F.col("_bn")).cast("double")
-            - F.lit(1e-9)
-        )
-        orient = (
-            (F.col("a_id") != F.col("b_id"))
-            if probe is not None
-            else (F.col("a_id") < F.col("b_id"))
-        )
-        joined = (
-            a.filter(F.col("_probe")).join(b, ["_grp", "_th"])
-            .filter(
-                orient
-                # length filter: J ≥ t ⟹ min(|A|,|B|) ≥ t·max(|A|,|B|)
-                & (
-                    F.least("_an", "_bn").cast("double")
-                    >= F.lit(threshold) * F.greatest("_an", "_bn").cast("double")
-                )
-                & (ub >= alpha)
+    ordered = _ordered_tokens(cbase)
+    n = F.size("_ord")
+    # ceil(t·n) with a downward epsilon: FP error can only LENGTHEN the
+    # prefix (never shortens it below the safe bound), preserving recall.
+    prefix_len = n - F.ceil(F.lit(threshold) * n - F.lit(1e-9)).cast("int") + 1
+    pre = _hashed_prefix(ordered, prefix_len)
+    a = pre.select(
+        "_grp", "_th", "_probe",
+        F.col("_id").alias("a_id"), F.col("_n").alias("_an"), F.col("_pos").alias("_ap"),
+    )
+    b = pre.select(
+        "_grp", "_th",
+        F.col("_id").alias("b_id"), F.col("_n").alias("_bn"), F.col("_pos").alias("_bp"),
+    )
+    # PPJoin positional upper bound on |A∩B| for THIS matched token;
+    # the required-intersection floor gets the same downward epsilon
+    # (an undershoot only keeps extra candidates — recall-safe)
+    ub = F.lit(1) + F.least(
+        F.col("_an") - F.col("_ap") - 1, F.col("_bn") - F.col("_bp") - 1
+    )
+    alpha = F.ceil(
+        F.lit(threshold / (1.0 + threshold))
+        * (F.col("_an") + F.col("_bn")).cast("double")
+        - F.lit(1e-9)
+    )
+    orient = (
+        (F.col("a_id") != F.col("b_id"))
+        if probe is not None
+        else (F.col("a_id") < F.col("b_id"))
+    )
+    joined = (
+        a.filter(F.col("_probe")).join(b, ["_grp", "_th"])
+        .filter(
+            orient
+            # length filter: J ≥ t ⟹ min(|A|,|B|) ≥ t·max(|A|,|B|)
+            & (
+                F.least("_an", "_bn").cast("double")
+                >= F.lit(threshold) * F.greatest("_an", "_bn").cast("double")
             )
+            & (ub >= alpha)
         )
-        cands = (
-            joined.select(
-                F.least("a_id", "b_id").alias("a_id"),
-                F.greatest("a_id", "b_id").alias("b_id"),
-            )
-            if probe is not None
-            else joined.select("a_id", "b_id")
-        ).dropDuplicates(["a_id", "b_id"])
-    else:
-        raise ValueError(f"unknown blocking {blocking!r}")
+    )
+    cands = (
+        joined.select(
+            F.least("a_id", "b_id").alias("a_id"),
+            F.greatest("a_id", "b_id").alias("b_id"),
+        )
+        if probe is not None
+        else joined.select("a_id", "b_id")
+    ).dropDuplicates(["a_id", "b_id"])
     verified = _verify_jaccard(cbase, cands, threshold)
     return _expand_pairs(classes, verified, "jaccard", directed=False)
 
@@ -864,7 +700,6 @@ def containment_pairs(
     group_col: str,
     *,
     threshold: float,
-    blocking: str = "prefix",
     probe=None,
 ) -> DataFrame:
     """Exact token-set CONTAINMENT join (doc-in-doc detection): emit
@@ -873,7 +708,7 @@ def containment_pairs(
     document quoted or embedded inside a larger one (Jaccard misses those:
     a small doc inside a big one has low |A∩B|/|A∪B| but containment 1).
 
-    Like :func:`ngram_jaccard_pairs` (r12), BOTH routes run class-grain:
+    Like :func:`ngram_jaccard_pairs` (r12), it runs class-grain:
     documents collapse to distinct token-set classes first, the pairwise
     machinery runs on class representatives, members re-expand map-side
     (within-class ordered pairs are containment 1.0 by identity;
@@ -881,116 +716,54 @@ def containment_pairs(
     depends only on the sets) — output identical to the doc-grain
     formulation, quadratic work on |classes|² not |docs|².
 
-    Prefix rule (asymmetric, the oracle surface): order tokens by the
-    global rarest-first total order; ``C(A,B) ≥ t`` means A misses at most
-    ``⌊(1−t)·|A|⌋`` of its tokens from B, so among the first
-    ``⌊(1−t)·|A|⌋ + 1`` rarest tokens of A at least one is in B.  Only the
-    PROBE side (A) is prefix-truncated; the indexed side (B) must carry
-    all its tokens because a shared token can sit anywhere in B's order.
-    Candidates = equi-join (group, xxhash64(token)) of A-prefixes against
-    B-full — hash collisions only ADD candidates the verify removes —
-    pruned by the length filter ``|B| ≥ t·|A|`` (implied by C ≥ t since
-    |A∩B| ≤ |B|) AND the positional filter (r12): for the matched token at
-    0-based positions (i, j) of the two FULL orders,
-    |A∩B| ≤ 1 + min(|A|−i−1, |B|−j−1), so a match with that bound
-    < ⌈t·|A|⌉ cannot reach the threshold; the first shared token always
-    passes when C ≥ t (tokens before it in either order are unshared), so
-    recall stays EXACT and the all-pairs DuckDB oracle hash-matches.
-
-    ``blocking='lsh'`` mirrors the Jaccard lever: band the class
-    representatives UNDIRECTED (band collision is symmetric and
-    C(A,B)/C(B,A) share the intersection cardinality — a first cut that
-    banded directed ran 2× every heavy stage and measured 114 s vs the
-    exact path's 110 s at sf10, erasing the lever's win), verify both
-    orientations in one pass with a map-side 2-struct explode.  Honest
-    recall caveat, documented not hidden: MinHash collision probability
-    tracks JACCARD, and a small doc contained in a much larger one has low
-    Jaccard (J = C·|A|/(|A|+|B|−C·|A|)), so the LSH route structurally
-    under-recalls extreme small-in-big pairs (|B|≫|A|); on this corpus
-    the containment pairs' size ratio is ≤ 1.9 (J ≥ 0.5 → band collision
-    ≥ 0.64, ≥ 0.96 at the median ratio), and recall is MEASURED per SF in
-    tests/test_r9_levers.py — a deployment with true small-in-big
-    duplication keeps the exact prefix path or adds a size-stratified
-    pass.
+    Prefix rule (asymmetric): order tokens by the global rarest-first
+    total order; ``C(A,B) ≥ t`` means A misses at most ``⌊(1−t)·|A|⌋`` of
+    its tokens from B, so among the first ``⌊(1−t)·|A|⌋ + 1`` rarest
+    tokens of A at least one is in B.  Only the PROBE side (A) is
+    prefix-truncated; the indexed side (B) must carry all its tokens
+    because a shared token can sit anywhere in B's order.  Candidates =
+    equi-join (group, xxhash64(token)) of A-prefixes against B-full — hash
+    collisions only ADD candidates the verify removes — pruned by the
+    length filter ``|B| ≥ t·|A|`` (implied by C ≥ t since |A∩B| ≤ |B|) AND
+    the positional filter (r12): for the matched token at 0-based
+    positions (i, j) of the two FULL orders, |A∩B| ≤ 1 + min(|A|−i−1,
+    |B|−j−1), so a match with that bound < ⌈t·|A|⌉ cannot reach the
+    threshold; the first shared token always passes when C ≥ t (tokens
+    before it in either order are unshared), so recall stays EXACT and the
+    all-pairs DuckDB oracle hash-matches.
 
     ``probe`` (r12): as in :func:`ngram_jaccard_pairs`, but containment is
     directed and callers sample on ``a_id`` = the CONTAINED side, so the
-    prefix route simply keeps probe classes on the A side (no
-    re-orientation needed); the lsh route prunes its undirected band join
-    to pairs with a probe endpoint.  A pruning hint only — the caller
-    still applies its own filter on the expanded pairs."""
+    candidate join simply keeps probe classes on the A side (no
+    re-orientation needed).  A pruning hint only — the caller still
+    applies its own filter on the expanded pairs."""
     classes, cbase = _class_base(df, id_col, text_col, group_col, probe)
-    if blocking == "lsh":
-        und = _token_lsh_candidates(cbase, probed=probe is not None)
-        a_toks = cbase.select(F.col("_id").alias("a_id"), F.col("_toks").alias("_a_toks"))
-        b_toks = cbase.select(F.col("_id").alias("b_id"), F.col("_toks").alias("_b_toks"))
-        inter = F.size(F.array_intersect(F.col("_a_toks"), F.col("_b_toks")))
-        both = (
-            und.join(a_toks, "a_id")
-            .join(b_toks, "b_id")
-            .select(
-                "a_id",
-                "b_id",
-                inter.alias("_i"),
-                F.size("_a_toks").alias("_na"),
-                F.size("_b_toks").alias("_nb"),
-            )
+    ordered = _ordered_tokens(cbase)
+    n = F.size("_ord")
+    # ⌊(1−t)·n⌋ + 1 == n − ⌈t·n⌉ + 1; epsilon only ever lengthens the prefix
+    prefix_len = n - F.ceil(F.lit(threshold) * n - F.lit(1e-9)).cast("int") + 1
+    a = _hashed_prefix(ordered, prefix_len)
+    a = a.filter(F.col("_probe")).select(
+        "_grp", "_th",
+        F.col("_id").alias("a_id"), F.col("_n").alias("_an"), F.col("_pos").alias("_ap"),
+    )
+    b = _hashed_prefix(ordered, n).select(
+        "_grp", "_th",
+        F.col("_id").alias("b_id"), F.col("_n").alias("_bn"), F.col("_pos").alias("_bp"),
+    )
+    ub = F.lit(1) + F.least(
+        F.col("_an") - F.col("_ap") - 1, F.col("_bn") - F.col("_bp") - 1
+    )
+    alpha = F.ceil(F.lit(threshold) * F.col("_an").cast("double") - F.lit(1e-9))
+    cands = (
+        a.join(b, ["_grp", "_th"])
+        .filter(
+            (F.col("a_id") != F.col("b_id"))
+            & (F.col("_bn").cast("double") >= F.lit(threshold) * F.col("_an").cast("double"))
+            & (ub >= alpha)
         )
-        # the same single-IEEE-division expression as the exact verify, so
-        # surfaced values are bit-identical to the prefix path's
-        verified = (
-            both.select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.col("a_id").alias("a_id"),
-                            F.col("b_id").alias("b_id"),
-                            (F.col("_i").cast("double") / F.col("_na").cast("double")).alias(
-                                "containment"
-                            ),
-                        ),
-                        F.struct(
-                            F.col("b_id").alias("a_id"),
-                            F.col("a_id").alias("b_id"),
-                            (F.col("_i").cast("double") / F.col("_nb").cast("double")).alias(
-                                "containment"
-                            ),
-                        ),
-                    )
-                ).alias("_p")
-            )
-            .select("_p.*")
-            .filter(F.col("containment") >= threshold)
-        )
-    elif blocking == "prefix":
-        ordered = _ordered_tokens(cbase)
-        n = F.size("_ord")
-        # ⌊(1−t)·n⌋ + 1 == n − ⌈t·n⌉ + 1; epsilon only ever lengthens the prefix
-        prefix_len = n - F.ceil(F.lit(threshold) * n - F.lit(1e-9)).cast("int") + 1
-        a = _hashed_prefix(ordered, prefix_len)
-        a = a.filter(F.col("_probe")).select(
-            "_grp", "_th",
-            F.col("_id").alias("a_id"), F.col("_n").alias("_an"), F.col("_pos").alias("_ap"),
-        )
-        b = _hashed_prefix(ordered, n).select(
-            "_grp", "_th",
-            F.col("_id").alias("b_id"), F.col("_n").alias("_bn"), F.col("_pos").alias("_bp"),
-        )
-        ub = F.lit(1) + F.least(
-            F.col("_an") - F.col("_ap") - 1, F.col("_bn") - F.col("_bp") - 1
-        )
-        alpha = F.ceil(F.lit(threshold) * F.col("_an").cast("double") - F.lit(1e-9))
-        cands = (
-            a.join(b, ["_grp", "_th"])
-            .filter(
-                (F.col("a_id") != F.col("b_id"))
-                & (F.col("_bn").cast("double") >= F.lit(threshold) * F.col("_an").cast("double"))
-                & (ub >= alpha)
-            )
-            .select("a_id", "b_id")
-            .dropDuplicates(["a_id", "b_id"])
-        )
-        verified = _verify_containment(cbase, cands, threshold)
-    else:
-        raise ValueError(f"unknown blocking {blocking!r}")
+        .select("a_id", "b_id")
+        .dropDuplicates(["a_id", "b_id"])
+    )
+    verified = _verify_containment(cbase, cands, threshold)
     return _expand_pairs(classes, verified, "containment", directed=True)

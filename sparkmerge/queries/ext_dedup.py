@@ -1,13 +1,10 @@
 """[EXT] dedup operators over the documents/embeddings corpus (SURVEY.md §2.D).
 
-Oracle strategy for the hash-based pipelines (MinHash, SimHash): the library
-default base hash is ``xxhash64`` (JVM-native — the 100 TB hot path), which no
-other engine reproduces.  The REGISTERED variants therefore run with
-``base_hash='poly31'`` — a polynomial character fold both engines express
-exactly (Spark: ``F.aggregate`` over index sequence; DuckDB: ``list_reduce``)
-— and band-join on raw signature slices instead of hashed buckets.  Same
-algorithm, same banding, same pair semantics; every stage is integer
-arithmetic, so the DuckDB reimplementation below is bit-exact and the driver
+Oracle strategy for the hash-based pipelines (MinHash, SimHash): their base
+hash is ``poly31`` — a polynomial character fold both engines express exactly
+(Spark: ``F.aggregate`` over index sequence; DuckDB: ``list_reduce``) — and
+the MinHash band join keys on raw signature slices.  Every stage is integer
+arithmetic, so the DuckDB reimplementation below is bit-exact and the oracle
 hash-check is a REAL verification of the whole shingle→minhash→band→join
 pipeline (not just a row count).
 """
@@ -70,8 +67,7 @@ def _poly31_sql(col: str, mult: int = 31) -> str:
 def _minhash_oracle_sql(*, num_hashes: int = 32, bands: int = 8, min_matches: int = 16) -> str:
     """Full DuckDB reimplementation of the MinHash+LSH pipeline
     (normalize → 5-gram shingles → poly31 → 32 permutations → 8-band
-    slice-join → est_jaccard), mirroring minhash_signatures/minhash_lsh_pairs
-    with base_hash='poly31', band_key='slice'."""
+    slice-join → est_jaccard), mirroring minhash_signatures/minhash_lsh_pairs."""
     ctes, final = _minhash_oracle_parts(
         num_hashes=num_hashes, bands=bands, min_matches=min_matches
     )
@@ -211,10 +207,8 @@ def _minhash_pairs(spark, sf_dir):
         .localCheckpoint(eager=True)
     )
     reps = classes.select(F.col("_ids")[0].alias("doc_id"), F.col("_norm").alias("text"))
-    sigs = minhash_signatures(
-        reps, "doc_id", "text", num_hashes=32, shingle_n=5, base_hash="poly31"
-    )
-    pairs = minhash_lsh_pairs(sigs, "doc_id", num_hashes=32, bands=8, band_key="slice")
+    sigs = minhash_signatures(reps, "doc_id", "text", num_hashes=32, shingle_n=5)
+    pairs = minhash_lsh_pairs(sigs, "doc_id", num_hashes=32, bands=8)
     expanded = _expand_pairs(classes, pairs, "est_jaccard", directed=False)
     return expanded.filter(F.col("est_jaccard") >= 0.5)
 
@@ -224,8 +218,7 @@ def _minhash_pairs(spark, sf_dir):
     oracle=_minhash_oracle_sql(),
     description="MinHash(32 hashes)+LSH(8 bands) near-dup candidate pairs, est. "
     "Jaccard >= 0.5 — poly31 base hash + slice band keys so the full pipeline "
-    "is hash-checked against a DuckDB reimplementation (xxhash64 variant is "
-    "the library default for the scale path)",
+    "is hash-checked against a DuckDB reimplementation",
 )
 def dedup_minhash(spark, sf_dir):
     return _minhash_pairs(spark, sf_dir)
@@ -278,7 +271,7 @@ def dedup_simhash(spark, sf_dir):
     )
     reps = classes.select(F.col("_ids")[0].alias("doc_id"), F.col("_norm").alias("text"))
     pairs = simhash_pairs(
-        simhash(reps, "doc_id", "text", base_hash="poly31"), "doc_id", max_hamming=3
+        simhash(reps, "doc_id", "text"), "doc_id", max_hamming=3
     )
     return _expand_pairs(
         classes, pairs, "hamming", directed=False, within_value=F.lit(0).cast("int")
@@ -346,21 +339,18 @@ SELECT a.doc_id AS a_id, b.doc_id AS b_id,
          / CAST(len(list_distinct(a.t || b.t)) AS DOUBLE) >= 0.6
 """,
     description="exact n-gram/token-set Jaccard near-dups for sampled query "
-    "docs, blocked by lang; blocking='lsh' is the REGISTERED 100 TB lever "
-    "(token-set MinHash banding routes candidates, the SAME exact verify "
-    "surfaces true-Jaccard pairs — output ⊆ exact by construction, recall "
-    "corpus-measured in tests/test_r9_levers.py; the exact prefix path "
-    "stays the oracle surface)",
+    "docs, blocked by lang; PPJoin-style positional prefix filtering over "
+    "distinct token-set classes routes candidates, an exact verify surfaces "
+    "true-Jaccard pairs",
 )
-def dedup_ngram_jaccard(spark, sf_dir, blocking="prefix"):
+def dedup_ngram_jaccard(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
     # probe = the sampling predicate applied below: a pruning HINT to the
     # candidate router (only class pairs with a sampled member can survive
     # the filter), never a semantic change — the filter itself remains the
     # op's output contract (r12, guide §2.3: shuffle fewer bytes)
     pairs = ngram_jaccard_pairs(
-        d, "doc_id", "text", "lang", threshold=0.6, blocking=blocking,
-        probe=lambda c: c % 20 == 0,
+        d, "doc_id", "text", "lang", threshold=0.6, probe=lambda c: c % 20 == 0,
     )
     return pairs.filter(F.col("a_id") % 20 == 0)
 
@@ -424,18 +414,13 @@ SELECT a.doc_id AS a_id, b.doc_id AS b_id,
     description="asymmetric containment near-dups (|A∩B|/|A| ≥ 0.95) for "
     "sampled probe docs: catches a document quoted inside a larger one, "
     "which Jaccard structurally misses; exact recall via asymmetric prefix "
-    "filtering (probe prefixes × full index), never Θ(block²); "
-    "blocking='lsh' is the REGISTERED 100 TB lever (token-set MinHash "
-    "banding + inclusion-exclusion containment estimate + the SAME exact "
-    "verify — output ⊆ exact, recall corpus-measured; small-in-big caveat "
-    "documented in containment_pairs)",
+    "filtering (probe prefixes × full index), never Θ(block²)",
 )
-def dedup_containment(spark, sf_dir, blocking="prefix"):
+def dedup_containment(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
     # probe: same pruning-hint discipline as dedup_ngram_jaccard (r12)
     pairs = containment_pairs(
-        d, "doc_id", "text", "lang", threshold=0.95, blocking=blocking,
-        probe=lambda c: c % 20 == 0,
+        d, "doc_id", "text", "lang", threshold=0.95, probe=lambda c: c % 20 == 0,
     )
     return pairs.filter(F.col("a_id") % 20 == 0)
 

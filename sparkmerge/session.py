@@ -3,8 +3,9 @@
 Sized to the host it runs on (``host_cpus``, ``driver_memory``), with
 settings that carry to a real cluster: AQE on (runtime partition coalescing +
 skew-join splitting — matters for badkey_rank windows over skewed keys),
-shuffle partitions sized to the parallelism, Arrow enabled for the few
-pandas_udf paths (MinHash).
+shuffle partitions sized to the parallelism, Arrow enabled for the
+``mapInPandas``/``applyInPandasWithState`` paths (multimodal, streaming) and
+``toPandas``.
 """
 
 from __future__ import annotations

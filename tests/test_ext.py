@@ -47,23 +47,6 @@ def test_minhash_finds_planted_near_dups(spark):
     assert recall >= 0.9, f"minhash recall {recall} over {len(planted)} planted pairs"
 
 
-def test_minhash_carry_sig_modes_identical(spark):
-    """carry_sig=False ships (band, bucket, id)-only through the candidate
-    shuffle and rejoins signatures after pair dedup — the 100 TB shape.  It
-    must produce the exact pair set and est_jaccard of the default mode."""
-    docs = _docs_with_near_dups(spark)
-    sigs = minhash_signatures(docs, "doc_id", "text")
-    wide = {
-        (r.a_id, r.b_id, round(r.est_jaccard, 9))
-        for r in minhash_lsh_pairs(sigs, "doc_id", carry_sig=True).collect()
-    }
-    lean = {
-        (r.a_id, r.b_id, round(r.est_jaccard, 9))
-        for r in minhash_lsh_pairs(sigs, "doc_id", carry_sig=False).collect()
-    }
-    assert wide == lean and len(wide) > 0
-
-
 def test_simhash_finds_exact_copies(spark):
     d = load(spark, SF_DIR, "documents").limit(100)
     copies = d.select((F.col("doc_id") + 100000).alias("doc_id"), "text", "lang", "source", "n_chars")

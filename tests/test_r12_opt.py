@@ -141,27 +141,6 @@ def test_probe_hint_is_output_identical_after_sampling_filter(spark):
         assert plain, f"{fn.__name__} sampled fixture surfaced no pairs"
 
 
-def test_lsh_blocking_still_subset_of_exact(spark):
-    """Lever contract after the class-grain refactor: lsh output ⊆ exact
-    output with identical values on the shared pairs (the candidate router
-    is the only difference)."""
-    docs = _corpus(spark)
-    exact = {
-        (r.a_id, r.b_id): r.jaccard
-        for r in ngram_jaccard_pairs(
-            docs, "doc_id", "text", "lang", threshold=0.5
-        ).collect()
-    }
-    lever = {
-        (r.a_id, r.b_id): r.jaccard
-        for r in ngram_jaccard_pairs(
-            docs, "doc_id", "text", "lang", threshold=0.5, blocking="lsh"
-        ).collect()
-    }
-    assert set(lever) <= set(exact)
-    assert all(exact[k] == v for k, v in lever.items())
-
-
 # --- round-12 optimization pass 2: simhash / minhash / similarity internals --
 
 
@@ -244,7 +223,7 @@ def test_simhash_filter_before_dedup_is_output_identical(spark):
         for i in range(30)
     ]
     df = spark.createDataFrame(rows)
-    sigs = simhash(df, "doc_id", "text", base_hash="poly31")
+    sigs = simhash(df, "doc_id", "text")
     sig_map = {
         r.doc_id: sum(r[f"blk_{i}"] << (16 * i) for i in range(4))
         for r in sigs.collect()

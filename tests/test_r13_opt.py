@@ -113,7 +113,7 @@ def test_sf1_leg_runs_cheapest_first():
         bench.HEADLINE, key=lambda op: bench._SF1_LAST_KNOWN_SEC.get(op, 0.0)
     )
     # budget exhaustion must drop the most expensive rows first — they are
-    # the ones with receipts elsewhere (sf10 tail/levers, SCALING.md)
+    # the ones with receipts elsewhere (sf10 tail, SCALING.md)
     assert order[-1] == "dedup_minhash"
     assert order[-2] == "orders_basket_lift"
 

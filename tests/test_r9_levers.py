@@ -1,114 +1,33 @@
-"""Round-9 lever tests: ``blocking='lsh'`` on the two exact set-similarity
-joins (r8 verdict ask #2).
+"""Round-9 lever tests: the registry's lever parameters and the class-grain
+shape of the two exact set-similarity joins.
 
-Contract being certified:
-
-- **Subset**: every lever pair passes the SAME exact verification as the
-  default path, so lever output ⊆ exact output with IDENTICAL values on
-  the common pairs (not approximately — the similarity column comes from
-  the exact token sets either way).
-- **Measured recall**: the LSH router's recall against the exact pair set
-  is measured per SF, never assumed (the dedup_lsh_recall_eval
-  discipline).  The floor asserted here (0.9) is what the corpus
-  delivers with margin; determinism makes the measurement stable.
-- **Plan shape**: the registered ops' probe sample (``a_id % 20``) must
-  push through the pair dedup into the band self-join's left input —
-  the pushdown that keeps the verify stage 20× lean.  A regression that
-  re-anchors the filter above the join would silently multiply the
-  shuffle volume.
+- **Class grain**: ``dedup_ngram_jaccard`` and ``dedup_containment`` run
+  their quadratic candidate work on distinct token-set classes, read from
+  the checkpointed class collapse, never on the raw documents scan.
+- **Levers**: ``gap_unit_s`` on ``events_user_cadence_cv`` agrees with the
+  exact path within its quantization bound; ``tables`` on
+  ``bitext_margin_mine`` keeps its structural invariants.
 """
-
-from pyspark.sql import functions as F
 
 from sparkmerge.queries import registry
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _rows(df):
-    return {tuple(r) for r in df.collect()}
-
-
-def test_ngram_lsh_subset_and_recall(spark):
-    reg = registry()
-    exact = _rows(reg["dedup_ngram_jaccard"].fn(spark, SF_DIR))
-    lsh = _rows(reg["dedup_ngram_jaccard"].fn(spark, SF_DIR, blocking="lsh"))
-    assert lsh <= exact, "lever surfaced a pair the exact path rejects"
-    assert exact, "exact path found no pairs — corpus fixture changed?"
-    recall = len(lsh & exact) / len(exact)
-    assert recall >= 0.9, f"measured recall {recall:.4f} under the corpus floor"
-
-
-def test_containment_lsh_subset_and_recall(spark):
-    reg = registry()
-    exact = _rows(reg["dedup_containment"].fn(spark, SF_DIR))
-    lsh = _rows(reg["dedup_containment"].fn(spark, SF_DIR, blocking="lsh"))
-    assert lsh <= exact, "lever surfaced a pair the exact path rejects"
-    assert exact
-    recall = len(lsh & exact) / len(exact)
-    assert recall >= 0.9, f"measured recall {recall:.4f} under the corpus floor"
-
-
-def test_unknown_blocking_rejected(spark):
-    import pytest
-
-    reg = registry()
-    for op in ("dedup_ngram_jaccard", "dedup_containment"):
-        with pytest.raises(ValueError, match="blocking"):
-            reg[op].fn(spark, SF_DIR, blocking="bogus").collect()
-
-
 def test_lsh_runs_at_class_grain(spark):
-    """The lever's quadratic core must run on DISTINCT TOKEN SETS, not
-    docs: the plan below the band join has to read from the checkpointed
-    class collapse (an ExistingRDD from _token_classes' localCheckpoint),
-    never the raw documents scan — the collapse is what cut the sf10
-    banding candidate space 16.1B → 241M rows (67×)."""
+    """The prefix join's quadratic core must run on DISTINCT TOKEN SETS,
+    not docs: the plan below the candidate join has to read from the
+    checkpointed class collapse (an ExistingRDD from _token_classes'
+    localCheckpoint), never the raw documents scan.  (The id dates from
+    the deleted token-set LSH lever, whose plan it first checked.)"""
     for op in ("dedup_ngram_jaccard", "dedup_containment"):
-        df = registry()[op].fn(spark, SF_DIR, blocking="lsh")
+        df = registry()[op].fn(spark, SF_DIR)
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         # the checkpointed class relation feeds every consumer; the raw
         # parquet scan must NOT appear (tokenization happened once,
         # before the checkpoint)
         assert "LogicalRDD" in plan, f"{op}: class collapse not checkpointed"
         assert "parquet" not in plan.lower(), f"{op}: raw scan above the class collapse"
-
-
-def _band_join_child_outputs(node, found):
-    """Collect the child OUTPUT attribute lists of every Join whose
-    condition references the band columns (walks the JVM logical-plan
-    tree — py4j, same objects the .toString() renders)."""
-    if node.nodeName() == "Join":
-        cond = node.condition()
-        cond_s = cond.get().toString() if cond.isDefined() else ""
-        if "_band" in cond_s and "_bucket" in cond_s:
-            for i in range(node.children().size()):
-                found.append(node.children().apply(i).output().toString())
-    for i in range(node.children().size()):
-        _band_join_child_outputs(node.children().apply(i), found)
-
-
-def test_lsh_band_join_ships_no_signatures(spark):
-    """The band self-join must ship only (group, band, bucket, id) — a
-    regression that re-carries the 64-long signature through the join was
-    measured 4× slower than the exact path at sf1.  Asserted on the band
-    join NODE's child outputs, not the plan text above the topmost join
-    (the r9 version of this test inspected plan.split("Join")[0], where
-    `_sig` could never appear — vacuously true; ADVICE r9)."""
-    df = registry()["dedup_ngram_jaccard"].fn(spark, SF_DIR, blocking="lsh")
-    plan = df._jdf.queryExecution().optimizedPlan()
-    outputs = []
-    _band_join_child_outputs(plan, outputs)
-    assert outputs, "band join (_band/_bucket condition) not found in plan"
-    for out in outputs:
-        assert "_sig" not in out, f"signature array shipped through the band join: {out}"
-
-
-def test_lsh_deterministic(spark):
-    reg = registry()
-    a = _rows(reg["dedup_ngram_jaccard"].fn(spark, SF_DIR, blocking="lsh"))
-    b = _rows(reg["dedup_ngram_jaccard"].fn(spark, SF_DIR, blocking="lsh"))
-    assert a == b
 
 
 def test_cadence_cv_prescaled_div_agreement(spark):

@@ -9,16 +9,12 @@ fresh SCALE-profile session (no input hint: AQE on, compression on,
 32 shuffle partitions) and runs the same budgeted protocol, so the
 committed artifact measures the posture a real sf10 job would run.
 
-Three sub-blocks (r8 verdict ask #4 made breadth a committed BENCH
+Two sub-blocks (r8 verdict ask #4 made breadth a committed BENCH
 artifact, not a SCALING.md-only story), ordered cheap-first so budget
 exhaustion only ever costs the heavy tail's later rows:
 
 - ``breadth``: ~8 scale-safe ops spanning merge/agg/window/graph/text —
   the ~1× amortization story;
-- ``levers``: the registered 100 TB parameter surfaces (the two
-  ``blocking='lsh'`` set-similarity routes) — Spark-only rows (the lever
-  paths are xxhash64-based; their DEFAULT paths remain the oracle
-  surface, measured in the tail);
 - ``tail``: the heavy exact shapes (SF10_OPS), budget-guarded entry.
 
 Usage: PYTHONPATH=/root/repo python tools/bench_sf10_runner.py [sf10_dir]
@@ -46,7 +42,7 @@ def main() -> None:
     sf10_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sparkmerge_sf10"
     # Per-BLOCK budgets (bench.SF10_BUDGET_S), each measured from its own
     # block start (r9 verdict ask #2: the r9 global budget spent itself on
-    # throttled breadth+levers runs and silently dropped 8 tail ops
+    # throttled breadth runs and silently dropped 8 tail ops
     # including merge_full/tpch_q5 — the merge-at-scale evidence.  A
     # protected tail slice means a bad host day costs breadth rows, never
     # the headline merge story).
@@ -94,10 +90,8 @@ def main() -> None:
     reg = registry()
 
     def run_block(entries, block_budget: float) -> dict:
-        """One leg block.  ``entries``: list of (label, op_id, fn_kwargs);
-        oracle runs for kwargs-free entries only (a kwargs variant is a
-        Spark-side lever whose default path carries the oracle).  The
-        budget window is BLOCK-LOCAL (guards entry, not duration)."""
+        """One leg block over the op ids ``entries``.  The budget window
+        is BLOCK-LOCAL (guards entry, not duration)."""
         t_start = time.perf_counter()
 
         def over_budget() -> bool:
@@ -108,9 +102,9 @@ def main() -> None:
         skipped: list[str] = []
         oracle_skipped: list[str] = []
         errors: dict[str, str] = {}
-        for label, op_id, kwargs in entries:
+        for op_id in entries:
             if over_budget():
-                skipped.append(label)
+                skipped.append(op_id)
                 continue
             spec = reg[op_id]
             # failure-isolated per op AND per side: one runaway query costs
@@ -118,9 +112,9 @@ def main() -> None:
             # ops releases checkpoint blocks only asynchronously (through
             # the ContextCleaner), so each run also releases them first.
             try:
-                spark_times[label] = round(
+                spark_times[op_id] = round(
                     measure(
-                        lambda: spec.fn(spark, sf10_dir, **kwargs)
+                        lambda: spec.fn(spark, sf10_dir)
                         .write.format("noop")
                         .mode("overwrite")
                         .save(),
@@ -129,19 +123,19 @@ def main() -> None:
                     4,
                 )
             except Exception as e:  # noqa: BLE001 — recorded, not hidden
-                errors[label] = f"spark: {type(e).__name__}: {e}"[:200]
+                errors[op_id] = f"spark: {type(e).__name__}: {e}"[:200]
                 continue
             gc.collect()
             spark.sparkContext._jvm.System.gc()
-            if kwargs or op_id in bench.SF10_ORACLE_SKIP:
-                oracle_skipped.append(label)
+            if op_id in bench.SF10_ORACLE_SKIP:
+                oracle_skipped.append(op_id)
             elif spec.oracle is not None and not over_budget():
                 try:
-                    duck_times[label] = round(
+                    duck_times[op_id] = round(
                         measure(lambda: con.sql(spec.oracle).arrow()), 4
                     )
                 except Exception as e:  # noqa: BLE001
-                    errors[label] = f"duckdb: {type(e).__name__}: {e}"[:200]
+                    errors[op_id] = f"duckdb: {type(e).__name__}: {e}"[:200]
         comparable = sum(spark_times[k] for k in duck_times)
         duck_total = sum(duck_times.values())
         block = {
@@ -160,17 +154,10 @@ def main() -> None:
         "sf": 10,
         "budget_sec": budget,
         # cheap-first ordering retained, but every block now has its OWN
-        # protected budget window — breadth/levers overruns can no longer
-        # starve the tail (the merge-at-scale evidence)
-        "breadth": run_block([(op, op, {}) for op in bench.SF10_BREADTH], budget["breadth"]),
-        "levers": run_block(
-            [
-                (f"{op}[lsh]", op, {"blocking": "lsh"})
-                for op in ("dedup_ngram_jaccard", "dedup_containment")
-            ],
-            budget["levers"],
-        ),
-        "tail": run_block([(op, op, {}) for op in bench.SF10_OPS], budget["tail"]),
+        # protected budget window — breadth overruns can no longer starve
+        # the tail (the merge-at-scale evidence)
+        "breadth": run_block(bench.SF10_BREADTH, budget["breadth"]),
+        "tail": run_block(bench.SF10_OPS, budget["tail"]),
     }
     print(json.dumps(out))
 

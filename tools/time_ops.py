@@ -3,7 +3,7 @@ write by ``sparkmerge.profile.measure`` (bench.py's protocol), in a fresh
 session with the profile bench would use for that dir.
 
 Usage: python tools/time_ops.py <sf_dir> op[:kwarg=val,...] [op ...]
-   e.g. python tools/time_ops.py /tmp/sparkmerge_sf10 dedup_ngram_jaccard:blocking=lsh
+   e.g. python tools/time_ops.py /tmp/sparkmerge_sf10 dedup_cross_source_matrix:shingle_key=hash
 """
 
 from __future__ import annotations
