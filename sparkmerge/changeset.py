@@ -433,11 +433,12 @@ def build_changeset(
             .distinct()
         )
         inserts = s_df.join(F.broadcast(matched_keys), join_cond, "left_anti")
-        t_fields = {f.name: f.dataType for f in target_df.schema.fields}
-        insert_rows = inserts.select(
-            *[F.lit(None).cast(t_fields[c]).alias(c) for c in target_df.columns],
-            F.lit(None).cast("boolean").alias("__t_present"),
-            *[F.col(c) for c in s_df.columns],
+        # one selectExpr, like the source rename above
+        insert_rows = inserts.selectExpr(
+            *[f"CAST(NULL AS {f.dataType.simpleString()}) AS {_qi(f.name)}"
+              for f in target_df.schema.fields],
+            "CAST(NULL AS BOOLEAN) AS `__t_present`",
+            *map(_qi, s_df.columns),
         )
         joined = t_df.join(F.broadcast(s_df), join_cond, "left_outer").unionByName(
             insert_rows

@@ -18,16 +18,25 @@ report | stage snapshot → threshold guard → commit/abort → stamp lastUpdat
 bracketed tail (``_commit``).
 
 Efficiency: the threshold guard needs (a) the pre-merge in-scope target count
-(:141-150) and (b) the number of changed rows (:472-473).  Both ride as
-``Observation`` metrics on the SAME job that writes the staged snapshot —
-zero extra passes over the data.  Only an actual audit request adds a second
-pass (and persists the changeset so badKey's arbitrary pairing stays
-consistent between the two outputs).
+(:141-150) and (b) the number of changed rows (:472-473).  In both merges
+they ride as ``Observation`` metrics on the SAME job that writes the staged
+version (``_observe``) — zero extra passes over the data — and the guard runs
+after that write, before the commit, in the reference's order (:470-479): a
+trip discards the write.  A scan-pruned partitioned merge observes its
+changed partitions on that job too: it writes the source's partitions and
+then carries the unchanged ones forward, so an idempotent merge or a
+threshold trip retains zero data.  A full-scan partitioned merge has no such
+bound, so it learns its changed partitions and counts from one aggregation
+and checks the guard before it writes.  Only a second pass over the
+changeset (that aggregation, an audit, unordered badKey) persists it
+(``_pinned``), so badKey's arbitrary pairing stays consistent between the
+outputs.
 """
 
 from __future__ import annotations
 
 import contextlib
+import functools
 import io
 import re
 from dataclasses import dataclass
@@ -253,6 +262,66 @@ def _check_threshold(changed: int, before: int, thr: float | None) -> float | No
     return variance
 
 
+def _observe(cs: Changeset, pcol: str | None = None) -> tuple[Changeset, Callable[[], dict]]:
+    """Observe a merge's counts on the changeset: they materialize during
+    the first job that reads it, which is the write of the staged version
+    (or the full-scan partitioned merge's aggregation), at zero extra passes.
+
+    Returns the observed changeset (the one to read) and a function to call
+    once that job ran.  It returns ``changed`` (non-KEEP rows) and
+    ``before``.  Every in-scope target row appears exactly once in the
+    changeset, with a non-null ``_old`` image (also under badKey), so
+    ``count(_old)`` IS the reference's pre-merge count (sp_SimpleMerge.sql:
+    141-150).  With a partition column ``pcol`` it also returns ``parts``,
+    the canonical values of the partitions a non-KEEP row has under its old
+    or its new image."""
+    from sparkmerge.ptable import canon_col
+
+    non_keep = F.col("_action") != ACTION_KEEP
+    stats = [F.count(F.when(non_keep, 1)).alias("changed"), F.count(F.col("_old")).alias("before")]
+    if pcol is not None:
+        stats += [F.collect_set(F.when(non_keep & F.col(side).isNotNull(),
+                                       canon_col(f"{side}.{pcol}"))).alias(side)
+                  for side in ("_old", "_new")]
+    obs = Observation("sparkmerge_changeset")
+    observed = Changeset(df=cs.df.observe(obs, *stats), plan=cs.plan, delete_mode=cs.delete_mode)
+
+    @functools.cache
+    def metrics() -> dict:
+        try:
+            m = obs.get
+        except Exception:
+            # Catalyst can prune the CollectMetrics node entirely when a side
+            # of the join is a provably-empty relation (PropagateEmptyRelation)
+            # — fall back to one explicit aggregation job.
+            m = observed.df.agg(*stats).first().asDict()
+        out = {"changed": int(m["changed"]), "before": int(m["before"])}
+        if pcol is not None:
+            out["parts"] = set(m["_old"]) | set(m["_new"])
+        return out
+
+    return observed, metrics
+
+
+@contextlib.contextmanager
+def _pinned(cs: Changeset, audit_path: str | None, bad_key: bool,
+            bad_key_order: list[str] | None, *, reread: bool = False):
+    """Persist the changeset for the merge's duration when a second pass
+    reads it: an audit (``audit_path``), another pass the caller runs
+    (``reread``), or the observation fallback under nondeterministic badKey
+    pairing (monotonically_increasing_id is only stable within a
+    materialization, so a re-executed pass could see a different pairing
+    than the staged one).  Otherwise the write is its only reader."""
+    pin = reread or audit_path is not None or (bad_key and not bad_key_order)
+    if pin:
+        cs.df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield
+    finally:
+        if pin:
+            cs.df.unpersist()
+
+
 def _commit(
     target: SnapshotTable,
     base: int,
@@ -319,10 +388,13 @@ def merge_partitioned(
 
     Two independent prunings:
 
-    - **Write pruning** (always on, always semantics-preserving): after the
-      changeset is classified, only partitions containing a non-KEEP row —
-      under their old OR new partition value — are rewritten; every other
-      partition is carried forward by manifest reference, zero bytes moved.
+    - **Write pruning** (always on, always semantics-preserving): only
+      partitions containing a non-KEEP row — under their old OR new
+      partition value — get new data in the committed version; every other
+      partition is carried forward by manifest reference, zero bytes
+      retained.  A full-scan merge finds those partitions first and writes
+      only them; a scan-pruned one writes the source's partitions and
+      discards the unchanged ones after the write.
     - **Scan pruning** (``prune_scan=True``): the target scan itself is
       pruned to the partitions present in the source.  Sound only when the
       partition column is part of the join key (then a source row can never
@@ -336,7 +408,9 @@ def merge_partitioned(
 
     The threshold variance (sp_SimpleMerge.sql:473-477) is computed over the
     scanned scope, mirroring how ``@targetFilter`` scopes the reference's
-    pre-count (:141-150).
+    pre-count (:141-150).  A full-scan merge checks it before it writes; a
+    scan-pruned one after its write and before the commit, as the reference
+    does (:470-479), discarding the write on a trip.
     """
     from sparkmerge.ptable import MAX_PARTITION_VALUES, canon_col, canon_sql
 
@@ -397,57 +471,71 @@ def merge_partitioned(
         return _report(cs, scope_note + "\n" + render_merge_sql(cs.plan, delete=delete),
                        thr, in_scope)
 
-    # The changeset feeds two jobs (the aggregation below, the snapshot
-    # write) plus the audit write; persist so badKey's arbitrary pairing —
-    # and the join itself — happen once.
-    cs.df.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        # ONE job returns all the commit needs: the threshold counts and the
-        # changed partitions under their OLD value (updates/deletes in place)
-        # and NEW value (inserts, or updates that move a row across
-        # partitions).  `_old`/`_new` struct nullity distinguishes "no row on
-        # that side" from "partition value is NULL".  A row adds an entry per
-        # side keyed by its changed partition (NULL: none), the first with its
-        # counts; the groups are the changed partitions plus NULL, so the limit
-        # bounds memory as above and drops a group only past the ceiling.
-        non_keep = F.col("_action") != ACTION_KEEP
-        entries = [
-            F.struct(F.when(non_keep & F.col(side).isNotNull(), canon_col(f"{side}.{pcol}"))
-                     .alias("p"), c.cast("long").alias("c"), b.cast("long").alias("b"))
-            for side, c, b in [("_old", non_keep, F.col("_old").isNotNull()),
-                               ("_new", F.lit(0), F.lit(0))]
-        ]
-        changed, before, vals = (
-            cs.df.select(F.inline(F.array(*entries)))
-            .groupBy("p").agg(F.sum("c").alias("c"), F.sum("b").alias("b"))
-            .coalesce(1)
-            .limit(MAX_PARTITION_VALUES + 2)
-            .agg(F.sum("c"), F.sum("b"), F.collect_list("p"))
-            .first()
-        )
-        # the sums are NULL when the changeset has no rows
-        changed, before, changed_vals = changed or 0, before or 0, set(vals)
-        if len(changed_vals) > MAX_PARTITION_VALUES:
-            raise MergeValidationError(
-                f"Changeset touches >{MAX_PARTITION_VALUES} distinct partitions "
-                f"of {pcol!r}; partition by a coarser key."
-            )
-
-        # the counts are known before anything is written, so a threshold
-        # trip stages nothing
-        _check_threshold(changed, before, thr)
+    # The candidate partitions the write covers: scan-pruned, the source's
+    # (the partition column is in the key, so no changed partition lies
+    # outside them); full scan, the changed ones, found by one aggregation
+    # before the write (a second pass, hence the pin).  After the write, a
+    # candidate its observation did not see change is carried forward.
+    cs, metrics = _observe(cs, pcol)
+    with _pinned(cs, audit_path, bad_key, bad_key_order, reread=not prune_scan):
         new_state = cs.apply_changes()
-        if changed_vals:
-            # one SQL-text IN-list, which the optimizer turns into a hash-set
-            # lookup (InSet) at any partition count
-            in_list = ", ".join(map(_qs, sorted(changed_vals)))
-            changed_state = new_state.filter(f"{canon_sql(pcol)} IN ({in_list})")
+        if prune_scan:
+            candidates = set(src_vals)
         else:
-            changed_state = new_state.limit(0)
-        return _commit(target, base, cs, lambda: target.stage_merge(changed_state, changed_vals),
-                       lambda: (changed, before), thr, audit_path)
-    finally:
-        cs.df.unpersist()
+            candidates = _changed_partitions(cs, pcol)
+            _check_threshold(metrics()["changed"], metrics()["before"], thr)
+            if candidates:
+                # one SQL-text IN-list, which the optimizer turns into a
+                # hash-set lookup (InSet) at any partition count
+                in_list = ", ".join(map(_qs, sorted(candidates)))
+                new_state = new_state.filter(f"{canon_sql(pcol)} IN ({in_list})")
+
+        def stage() -> Staged:
+            staged = target.stage_merge(new_state, candidates)
+            if not candidates:  # nothing written, nothing to carry
+                return staged
+            try:
+                return target.carry_forward(staged, candidates - metrics()["parts"])
+            except BaseException:
+                target.abort(staged)
+                raise
+
+        def counts() -> tuple[int, int]:
+            if prune_scan and not candidates:
+                return 0, 0  # an empty source scans no partition
+            return metrics()["changed"], metrics()["before"]
+
+        return _commit(target, base, cs, stage, counts, thr, audit_path)
+
+
+def _changed_partitions(cs: Changeset, pcol: str) -> set[str]:
+    """The partitions the changeset changes, under their OLD value (updates
+    and deletes in place) or their NEW value (inserts, or updates that move
+    a row across partitions), in ONE job, whose pass also fills the
+    changeset's observation.  `_old`/`_new` struct nullity distinguishes "no
+    row on that side" from "partition value is NULL".  Each row adds one
+    value per side (NULL: unchanged), so the groups are the changed
+    partitions plus NULL; the limit bounds driver memory and drops a group
+    only past the ceiling."""
+    from sparkmerge.ptable import MAX_PARTITION_VALUES, canon_col
+
+    non_keep = F.col("_action") != ACTION_KEEP
+    vals = (
+        cs.df.select(F.explode(F.array(*(
+            F.when(non_keep & F.col(side).isNotNull(), canon_col(f"{side}.{pcol}"))
+            for side in ("_old", "_new")))).alias("p"))
+        .distinct()
+        .coalesce(1)
+        .limit(MAX_PARTITION_VALUES + 2)
+        .agg(F.collect_list("p"))
+        .first()[0]
+    )
+    if len(vals) > MAX_PARTITION_VALUES:
+        raise MergeValidationError(
+            f"Changeset touches >{MAX_PARTITION_VALUES} distinct partitions "
+            f"of {pcol!r}; partition by a coarser key."
+        )
+    return set(vals)
 
 
 def default_audit_path(target: SnapshotTable) -> str:
@@ -506,45 +594,13 @@ def simple_merge(
         sql = render_merge_sql(cs.plan, delete=delete, target_filter=target_filter)
         return _report(cs, sql, thr, in_scope)
 
-    # Observe the merge stats on the changeset — they materialize during the
-    # ONE job that writes the staged snapshot.  Every in-scope target row
-    # appears exactly once in the changeset (with a non-null _old image, also
-    # under badKey), so count(_old) IS the reference's pre-merge count
-    # (sp_SimpleMerge.sql:141-150) at zero extra cost.
-    stats = [
-        F.count(F.when(F.col("_action") != ACTION_KEEP, 1)).alias("changed"),
-        F.count(F.col("_old")).alias("before"),
-    ]
-    cs_obs = Observation("sparkmerge_changeset")
-    cs = Changeset(df=cs.df.observe(cs_obs, *stats), plan=cs.plan, delete_mode=cs.delete_mode)
-
-    def counts() -> tuple[int, int]:
-        try:
-            metrics = cs_obs.get
-            return int(metrics["changed"]), int(metrics["before"])
-        except Exception:
-            # Catalyst can prune the CollectMetrics node entirely when a side
-            # of the join is a provably-empty relation (PropagateEmptyRelation)
-            # — fall back to one explicit aggregation job.
-            row = cs.df.agg(*stats).first()
-            return int(row["changed"]), int(row["before"])
-
-    # Persist when a second pass could observe the changeset: the audit read,
-    # or the Observation-fallback aggregation under nondeterministic badKey
-    # pairing (monotonically_increasing_id is only stable within a
-    # materialization — a re-executed agg could count a different pairing
-    # than the one that was staged).
-    pin_changeset = audit_path is not None or (bad_key and not bad_key_order)
-    if pin_changeset:
-        cs.df.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    cs, metrics = _observe(cs)
+    with _pinned(cs, audit_path, bad_key, bad_key_order):
         new_state = cs.apply_changes()
         if out_scope is not None:
             new_state = new_state.unionByName(out_scope)
-        return _commit(target, base, cs, lambda: target.stage(new_state), counts, thr, audit_path)
-    finally:
-        if pin_changeset:
-            cs.df.unpersist()
+        return _commit(target, base, cs, lambda: target.stage(new_state),
+                       lambda: (metrics()["changed"], metrics()["before"]), thr, audit_path)
 
 
 def scd2_merge(

@@ -29,8 +29,10 @@ the version record: stage writes the changed partitions into the writer's
 own ``files/<token>/`` (invisible: no manifest names it), commit links the
 manifest to ``v=<base+1>.json`` if no writer did first, abort removes the
 token directory.  Carried-forward partitions are referenced, never copied:
-an idempotent merge (empty changeset) commits a new version by writing one
-manifest file and zero data.
+an idempotent merge (empty changeset) commits a new version as one manifest
+file and retains zero data.  A scan-pruned merge writes every partition its
+source covers, then carries the unchanged ones forward and removes their
+staged copies (``carry_forward``), so it retains zero data too.
 
 Physical encoding: changed partitions are written in ONE Spark job via
 ``partitionBy`` on a duplicated string column ``__part`` (so the real
@@ -93,16 +95,17 @@ def canon_col(name: str) -> Column:
     return F.expr(canon_sql(name))
 
 
-def _cast_strict(name: str, have: str | None, to: DataType) -> Column:
-    """Column ``name`` (of type ``have``) cast to ``to``; a non-NULL value the
-    cast makes NULL (overflow, bad string) raises whatever the ANSI mode.
-    A column already of type ``to`` passes through: the guard would not fold."""
-    c = F.col(name)
-    if have == to.simpleString():
+def _cast_strict(name: str, have: str | None, to: DataType) -> str:
+    """SQL text: column ``name`` (of type ``have``) cast to ``to``; a non-NULL
+    value the cast makes NULL (overflow, bad string) raises whatever the ANSI
+    mode.  A column already of type ``to`` passes through: the guard would
+    not fold.  Text, so a whole row of casts is one ``selectExpr``."""
+    c, t = _qi(name), to.simpleString()
+    if have == t:
         return c
-    msg = F.lit(f"column {name!r}: a value does not fit the table's type {to.simpleString()}")
-    return F.when(c.isNotNull() & c.try_cast(to).isNull(), F.raise_error(msg)).otherwise(
-        c.cast(to)).alias(name)
+    msg = _qs(f"column {name!r}: a value does not fit the table's type {t}")
+    return (f"CASE WHEN ({c} IS NOT NULL AND try_cast({c} AS {t}) IS NULL)"
+            f" THEN raise_error({msg}) ELSE CAST({c} AS {t}) END AS {c}")
 
 
 class PartitionedSnapshotTable(SnapshotTable):
@@ -188,10 +191,10 @@ class PartitionedSnapshotTable(SnapshotTable):
         raise MergeError("PartitionedSnapshotTable stages via stage_merge()")
 
     def stage_merge(self, changed_df: DataFrame, changed_values: set[str]) -> Staged:
-        """Stage a version on the current one: write ONLY the changed
+        """Stage a version on the current one: write ONLY the given
         partitions' new data (one ``partitionBy`` job into this writer's own
         directory), carry every other partition forward by reference.  A
-        changed partition that comes back empty (all rows deleted) is dropped
+        given partition that comes back empty (all rows deleted) is dropped
         from the manifest.  Invisible until commit.  The frame is cast by
         name to the manifest's schema (the read schema), so a wider source
         type cannot make the committed version unreadable."""
@@ -200,7 +203,7 @@ class PartitionedSnapshotTable(SnapshotTable):
         data, written = None, {}
         if changed_values:
             have = dict(changed_df.dtypes)
-            changed_df = changed_df.select(
+            changed_df = changed_df.selectExpr(
                 *(_cast_strict(f.name, have.get(f.name), f.dataType) for f in schema))
             data, written = self._write_partitions(changed_df, pcol)
             unexpected = set(written) - set(changed_values)
@@ -217,6 +220,29 @@ class PartitionedSnapshotTable(SnapshotTable):
                 parts.pop(val, None)  # partition emptied by the merge
         return Staged(m["version"], data, {"partition_by": pcol, "schema": m["schema"],
                                            "partitions": parts})
+
+    def carry_forward(self, staged: Staged, values: set[str]) -> Staged:
+        """``staged`` (a :meth:`stage_merge` result) with the partitions
+        ``values``, which it staged, carried forward from its base instead:
+        their base manifest entries restored (or left out, if the base had
+        none) and their staged directories removed.  When no staged
+        partition remains, the writer's token directory goes too, so the
+        version writes no data."""
+        if not values:
+            return staged
+        base = self.manifest(staged.base)["partitions"]
+        parts = dict(staged.record["partitions"])
+        for val in values:
+            written = parts.pop(val, None)  # None: the staged partition came back empty
+            if written is not None:
+                shutil.rmtree(os.path.join(self.path, written))
+            if val in base:
+                parts[val] = base[val]
+        data = staged.data_dir
+        if data is not None and all(os.path.dirname(d) != data for d in parts.values()):
+            shutil.rmtree(os.path.join(self.path, data))
+            data = None
+        return Staged(staged.base, data, {**staged.record, "partitions": parts})
 
     def _write_partitions(self, df: DataFrame, pcol: str) -> tuple[str, dict[str, str]]:
         """One job: write ``df`` under ``files/<token>/__part=<val>/``,

@@ -5,7 +5,7 @@ The load-bearing claims under test:
    inputs (row-for-row);
 2. untouched partitions are carried forward BY REFERENCE (same manifest
    paths, files physically untouched), not rewritten;
-3. an idempotent merge is a metadata-only commit (zero data written);
+3. an idempotent merge is a metadata-only commit (zero data retained);
 4. scan pruning with the partition column in the key ≡ partition-scoped
    merge semantics;
 5. threshold abort never publishes the staged version.
@@ -150,6 +150,80 @@ def test_threshold_abort_leaves_table_untouched(spark, orders, tmp_path, monkeyp
     assert not os.path.exists(str(tmp_path / "t" / "v=2.json"))
     assert same_rows(t.read(spark), orders)
     assert "lastUpdate" not in t.properties()
+
+
+def test_prune_scan_threshold_trip_leaves_table_unchanged(spark, orders, tmp_path):
+    """A scan-pruned merge writes its candidate partitions before it knows
+    its counts; a threshold trip then discards that write: no new version
+    record, the same writer directories, no lastUpdate."""
+    t = PartitionedSnapshotTable.create(spark, str(tmp_path / "t"), orders, "o_orderstatus")
+    dirs, v1 = data_dirs(t), t.partitions()
+    src = mutated(orders.filter("o_orderstatus = 'O'"))
+    with pytest.raises(MergeThresholdExceeded):
+        merge_partitioned(spark, t, src, ["o_orderkey", "o_orderstatus"],
+                          prune_scan=True, threshold="1%")
+    assert t.versions() == [1]
+    assert sorted(os.listdir(tmp_path / "t")) == ["files", "v=1.json"]
+    assert data_dirs(t) == dirs and t.partitions() == v1
+    assert "lastUpdate" not in t.properties()
+    assert same_rows(t.read(spark), orders)
+
+
+def test_prune_scan_carries_unchanged_candidate_forward(spark, orders, tmp_path):
+    """A source that covers 'O' and 'F' but changes only 'O' rewrites 'O';
+    'F' keeps its parent's manifest entry, and its staged copy is gone."""
+    t = PartitionedSnapshotTable.create(spark, str(tmp_path / "t"), orders, "o_orderstatus")
+    v1 = t.partitions()
+    bump = F.when(F.col("o_orderstatus") == "O", F.col("o_totalprice") + 1.0)
+    src = orders.filter("o_orderstatus IN ('O', 'F')").withColumn(
+        "o_totalprice", bump.otherwise(F.col("o_totalprice")))
+    res = merge_partitioned(spark, t, src, ["o_orderkey", "o_orderstatus"], prune_scan=True)
+    assert res.changed_rows == orders.filter("o_orderstatus = 'O'").count()
+    v2 = t.partitions()
+    assert v2["F"] == v1["F"] and v2["P"] == v1["P"] and v2["O"] != v1["O"]
+    written = os.listdir(tmp_path / "t" / os.path.dirname(v2["O"]))
+    assert [e for e in written if e.startswith("__part=")] == ["__part=O"]
+    assert data_dirs(t) == named_dirs(t)
+    assert same_rows(t.read(spark), merge_preview(orders, src, "o_orderkey", delete="NO"))
+
+
+def test_prune_scan_into_new_partitions(spark, tmp_path, monkeypatch):
+    """A source whose partitions are all new to the table scans nothing:
+    every row is an INSERT, counted by the write's observation, or by the
+    fallback aggregation where Catalyst drops the observation (simulated by
+    making ``Observation.get`` raise)."""
+    from pyspark.sql import Observation
+
+    t, df = _ints_table(spark, str(tmp_path / "t"))
+    v1 = t.partitions()
+    src = spark.createDataFrame([(5, "D", 50), (6, "E", 60), (7, "E", 70)], "k int, p string, v int")
+    res = merge_partitioned(spark, t, src, ["k", "p"], prune_scan=True)
+    assert (res.changed_rows, res.target_rows_before) == (3, 0)
+
+    def pruned(self):
+        raise RuntimeError("observed metrics dropped")
+
+    monkeypatch.setattr(Observation, "get", property(pruned))
+    src2 = spark.createDataFrame([(8, "F", 80), (9, "G", 90)], "k int, p string, v int")
+    res = merge_partitioned(spark, t, src2, ["k", "p"], prune_scan=True)
+    assert (res.changed_rows, res.target_rows_before) == (2, 0)
+    parts = t.partitions()
+    assert sorted(parts) == ["A", "B", "C", "D", "E", "F", "G"]
+    assert all(parts[p] == v1[p] for p in v1)
+    assert same_rows(t.read(spark), df.unionByName(src).unionByName(src2))
+
+
+def test_prune_scan_soft_delete_into_unscanned_partition_fails(spark, tmp_path):
+    """A soft-delete SET that moves a scanned row into a partition the merge
+    did not scan would replace that partition with the moved rows alone; the
+    merge raises and commits nothing instead."""
+    t, df = _ints_table(spark, str(tmp_path / "t"))
+    dirs = data_dirs(t)
+    src = spark.createDataFrame([(1, "A", 11)], "k int, p string, v int")
+    with pytest.raises(MergeError, match="'C'"):
+        merge_partitioned(spark, t, src, ["k", "p"], prune_scan=True, delete="set p = 'C'")
+    assert t.versions() == [1] and data_dirs(t) == dirs
+    assert same_rows(t.read(spark), df)
 
 
 def test_prune_scan_requires_partition_col_in_key(spark, orders, tmp_path):
@@ -515,7 +589,7 @@ def _jobs(spark, tag, fn):
 
 def test_job_counts_per_call(spark, orders, tmp_path):
     """A read opens with the version record's schema (no footer-inference
-    job), and a pruned merge finds its changed partitions in one aggregation."""
+    job), and a pruned merge finds its changed partitions on its write."""
     from sparkmerge.table import SnapshotTable
 
     t = PartitionedSnapshotTable.create(spark, str(tmp_path / "t"), orders, "o_orderstatus")
@@ -538,9 +612,10 @@ def test_job_counts_per_call(spark, orders, tmp_path):
         merge_partitioned(spark, t, delta, keys, prune_scan=True, strategy="auto")
 
     merge(1.0)  # warm-up
-    # 14 jobs before the source probe and the changed-partition discovery
-    # became one aggregation each (two `limit` cascades and a count job)
-    assert _jobs(spark, "ptable-merge", lambda: merge(2.0)) == 10
+    # the source probe, then the changeset's one pass: the write of the
+    # source's partitions, which observes the counts and the changed
+    # partitions (10 jobs while a separate aggregation found them first)
+    assert _jobs(spark, "ptable-merge", lambda: merge(2.0)) == 7
 
 
 def test_changed_partition_discovery(spark, tmp_path, monkeypatch):

@@ -1,10 +1,15 @@
 """Render OPERATORS.md — the live operator inventory, generated from the
 registry so it can never drift from the code.
 
-Usage: PYTHONPATH=/root/repo python tools/op_inventory.py
+Usage, from the checkout root: PYTHONPATH=. python tools/op_inventory.py
+(writes the OPERATORS.md of the checkout the script lives in).
 """
 
 from __future__ import annotations
+
+import os
+
+OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "OPERATORS.md")
 
 SECTIONS = [
     ("Core merge dataflow (SURVEY §2.A)", [
@@ -193,6 +198,10 @@ SECTIONS = [
         "part_brand_price_position", "customer_segment_nation_matrix",
         "embedding_label_centroid_spread", "text_cross_lang_length_ratio",
     ]),
+    ("Size-type price matrix, quantile bands, balance mix & quality curve (r12 batch 1)", [
+        "part_size_type_price_matrix", "events_value_type_quantile_bands",
+        "supplier_balance_band_mix", "documents_quality_length_curve",
+    ]),
     ("Multimodal (SURVEY §2.D)", [
         "multimodal_columns", "multimodal_array_sim", "multimodal_binary",
         "multimodal_resize", "multimodal_frame_sample",
@@ -237,7 +246,7 @@ def main() -> None:
     if missing:
         lines += ["## Unsectioned (add to SECTIONS)", ""]
         lines += [f"- `{op}`" for op in missing]
-    with open("/root/repo/OPERATORS.md", "w", encoding="utf-8") as f:
+    with open(OUT, "w", encoding="utf-8") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote OPERATORS.md: {len(reg)} ops, {n_oracle} hash-checked; "
           f"missing from sections: {missing or 'none'}")
