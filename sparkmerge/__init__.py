@@ -12,12 +12,13 @@ This package re-expresses that as idiomatic Spark dataflow:
   (replaces the ``#columnList`` catalog IR, sp_SimpleMerge.sql:151-201)
 - ``changeset``            — ONE full-outer join producing a typed changeset
   (replaces the generated MERGE text, sp_SimpleMerge.sql:202-412)
-- ``table.SnapshotTable``  — versioned-parquet snapshots committed by
-  put-if-absent version records (replaces begin/commit/rollback,
-  sp_SimpleMerge.sql:470-479)
-- ``ptable.PartitionedSnapshotTable`` — manifest-based partitioned snapshots:
-  merges rewrite only touched partitions, the rest carry forward by
-  reference (the 100 TB layout, SURVEY.md §7.2)
+- ``table.SnapshotTable``  — versioned parquet tables, whole or partitioned:
+  each version is one put-if-absent record (``v=N.json``) naming its data
+  directories and carrying the table properties (replaces begin/commit/
+  rollback and the lastUpdate extended property, sp_SimpleMerge.sql:
+  470-491); merges into a partitioned table rewrite only touched
+  partitions, the rest carry forward by reference (the 100 TB layout,
+  SURVEY.md §7.2).  ``PartitionedSnapshotTable`` is an alias of it
 - ``merge.simple_merge``   — orchestration: threshold guard, audit append,
   debug dry-run, lastUpdate property (sp_SimpleMerge.sql:57-67 surface)
 - ``merge.merge_partitioned`` — the same orchestration over a partitioned

@@ -13,9 +13,9 @@ Parameter surface mirrors ``sp_SimpleMerge`` (sp_SimpleMerge.sql:57-67):
     @debug        → debug (dry-run report, :66)
 
 Lifecycle (SURVEY.md §3.1): validate → plan → changeset (lazy) → [debug
-report | stage snapshot → threshold guard → commit/abort → stamp lastUpdate
-→ audit append].  ``simple_merge`` and ``merge_partitioned`` share the
-bracketed tail (``_commit``).
+report | stage snapshot → threshold guard → commit with lastUpdate in the
+version record, or abort → audit append].  ``simple_merge`` and
+``merge_partitioned`` share the bracketed tail (``_commit``).
 
 Efficiency: the threshold guard needs (a) the pre-merge in-scope target count
 (:141-150) and (b) the number of changed rows (:472-473).  In both merges
@@ -28,9 +28,8 @@ then carries the unchanged ones forward, so an idempotent merge or a
 threshold trip retains zero data.  A full-scan partitioned merge has no such
 bound, so it learns its changed partitions and counts from one aggregation
 and checks the guard before it writes.  Only a second pass over the
-changeset (that aggregation, an audit, unordered badKey) persists it
-(``_pinned``), so badKey's arbitrary pairing stays consistent between the
-outputs.
+changeset (that aggregation, an audit) persists it (``_pinned``), so
+badKey's arbitrary pairing stays consistent between the outputs.
 """
 
 from __future__ import annotations
@@ -57,7 +56,13 @@ from sparkmerge.changeset import (
 )
 from sparkmerge.errors import MergeThresholdExceeded, MergeValidationError
 from sparkmerge.plan import MergePlan, split_csv
-from sparkmerge.table import SnapshotTable, Staged
+from sparkmerge.table import SnapshotTable, Staged, canon_col, canon_sql
+
+# Distinct-partition ceiling for driver-side value sets (merge_partitioned
+# collects partition VALUES, never rows).  100k string values is a few MB of
+# driver memory; a table with more distinct partitions than this is
+# mis-partitioned and every metadata operation on it would crawl — fail fast.
+MAX_PARTITION_VALUES = 100_000
 
 
 @dataclass(frozen=True)
@@ -274,9 +279,8 @@ def _observe(cs: Changeset, pcol: str | None = None) -> tuple[Changeset, Callabl
     ``count(_old)`` IS the reference's pre-merge count (sp_SimpleMerge.sql:
     141-150).  With a partition column ``pcol`` it also returns ``parts``,
     the canonical values of the partitions a non-KEEP row has under its old
-    or its new image."""
-    from sparkmerge.ptable import canon_col
-
+    or its new image.  Catalyst keeps the observation on relations it can
+    prove empty, so it always arrives once that job ran."""
     non_keep = F.col("_action") != ACTION_KEEP
     stats = [F.count(F.when(non_keep, 1)).alias("changed"), F.count(F.col("_old")).alias("before")]
     if pcol is not None:
@@ -288,13 +292,7 @@ def _observe(cs: Changeset, pcol: str | None = None) -> tuple[Changeset, Callabl
 
     @functools.cache
     def metrics() -> dict:
-        try:
-            m = obs.get
-        except Exception:
-            # Catalyst can prune the CollectMetrics node entirely when a side
-            # of the join is a provably-empty relation (PropagateEmptyRelation)
-            # — fall back to one explicit aggregation job.
-            m = observed.df.agg(*stats).first().asDict()
+        m = obs.get
         out = {"changed": int(m["changed"]), "before": int(m["before"])}
         if pcol is not None:
             out["parts"] = set(m["_old"]) | set(m["_new"])
@@ -304,15 +302,14 @@ def _observe(cs: Changeset, pcol: str | None = None) -> tuple[Changeset, Callabl
 
 
 @contextlib.contextmanager
-def _pinned(cs: Changeset, audit_path: str | None, bad_key: bool,
-            bad_key_order: list[str] | None, *, reread: bool = False):
+def _pinned(cs: Changeset, audit_path: str | None, *, reread: bool = False):
     """Persist the changeset for the merge's duration when a second pass
-    reads it: an audit (``audit_path``), another pass the caller runs
-    (``reread``), or the observation fallback under nondeterministic badKey
-    pairing (monotonically_increasing_id is only stable within a
-    materialization, so a re-executed pass could see a different pairing
-    than the staged one).  Otherwise the write is its only reader."""
-    pin = reread or audit_path is not None or (bad_key and not bad_key_order)
+    reads it: an audit (``audit_path``) or another pass the caller runs
+    (``reread``).  Both then see the staged rows, also under unordered badKey
+    (monotonically_increasing_id is only stable within a materialization, so
+    a re-executed pass could see a different pairing).  Otherwise the write
+    is its only reader."""
+    pin = reread or audit_path is not None
     if pin:
         cs.df.persist(StorageLevel.MEMORY_AND_DISK)
     try:
@@ -331,25 +328,25 @@ def _commit(
     thr: float | None,
     audit_path: str | None,
 ) -> MergeResult:
-    """The tail both merges share: stage → threshold guard → commit → stamp
+    """The tail both merges share: stage → threshold guard → commit with
     lastUpdate → audit append (sp_SimpleMerge.sql:470-491).
 
     ``stage()`` writes the new version; ``counts()`` then returns (changed
     rows, pre-merge in-scope rows).  It commits only on ``base``, the version
-    the merge read.  Any failure before the commit lands removes the
-    writer's staged files."""
+    the merge read.  ``lastUpdate`` is a property in the committed record, so
+    it lands with the version or not at all: a threshold trip, a conflict or
+    a debug run stamps nothing (SURVEY.md §7.4 quirk fix).  Any failure
+    before the commit lands removes the writer's staged files."""
     staged = stage()
     try:
         changed, before = counts()
         variance = _check_threshold(changed, before, thr)
-        version = target._commit_on(base, staged)
+        # ODBC-canonical style timestamp, like convert(varchar, sysdatetime(), 121) (:488)
+        now = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M:%S.%f")[:-3]
+        version = target._commit_on(base, staged.stamped("lastUpdate", now))
     except BaseException:
         target.abort(staged)
         raise
-    # ODBC-canonical style timestamp, like convert(varchar, sysdatetime(), 121)
-    # (:488) — but only on successful commit (SURVEY.md §7.4 quirk fix).
-    now = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M:%S.%f")[:-3]
-    target.set_property("lastUpdate", now)
     audit_rows = None
     if audit_path is not None:
         cs.audit().write.mode("append").parquet(audit_path)
@@ -366,7 +363,7 @@ def _commit(
 
 def merge_partitioned(
     spark: SparkSession,
-    target: "PartitionedSnapshotTable",
+    target: SnapshotTable,
     source_df: DataFrame,
     join_columns: str | list[str],
     *,
@@ -381,7 +378,7 @@ def merge_partitioned(
     strategy: str = "shuffle",
     update_mode: str = "overwrite",
 ) -> MergeResult | MergeReport:
-    """Merge into a :class:`~sparkmerge.ptable.PartitionedSnapshotTable`,
+    """Merge into a partitioned :class:`~sparkmerge.table.SnapshotTable`,
     rewriting ONLY the partitions the changeset touches (SURVEY.md §7.2's
     100 TB design; the plain ``simple_merge`` rewrites the full snapshot,
     like the reference's in-place MERGE at sp_SimpleMerge.sql:471).
@@ -412,13 +409,15 @@ def merge_partitioned(
     scan-pruned one after its write and before the commit, as the reference
     does (:470-479), discarding the write on a trip.
     """
-    from sparkmerge.ptable import MAX_PARTITION_VALUES, canon_col, canon_sql
-
     if audit and audit_path is None:
         audit_path = default_audit_path(target)
     thr = _parse_threshold(threshold)
     m = target.manifest()
     pcol, base = m["partition_by"], m["version"]
+    if pcol is None:
+        raise MergeValidationError(
+            f"merge_partitioned needs a partitioned table; {target.path!r} is "
+            "unpartitioned (use simple_merge).")
     keys = split_csv(join_columns) if isinstance(join_columns, str) else list(join_columns)
 
     if prune_scan:
@@ -477,7 +476,7 @@ def merge_partitioned(
     # before the write (a second pass, hence the pin).  After the write, a
     # candidate its observation did not see change is carried forward.
     cs, metrics = _observe(cs, pcol)
-    with _pinned(cs, audit_path, bad_key, bad_key_order, reread=not prune_scan):
+    with _pinned(cs, audit_path, reread=not prune_scan):
         new_state = cs.apply_changes()
         if prune_scan:
             candidates = set(src_vals)
@@ -517,8 +516,6 @@ def _changed_partitions(cs: Changeset, pcol: str) -> set[str]:
     value per side (NULL: unchanged), so the groups are the changed
     partitions plus NULL; the limit bounds driver memory and drops a group
     only past the ceiling."""
-    from sparkmerge.ptable import MAX_PARTITION_VALUES, canon_col
-
     non_keep = F.col("_action") != ACTION_KEEP
     vals = (
         cs.df.select(F.explode(F.array(*(
@@ -595,7 +592,7 @@ def simple_merge(
         return _report(cs, sql, thr, in_scope)
 
     cs, metrics = _observe(cs)
-    with _pinned(cs, audit_path, bad_key, bad_key_order):
+    with _pinned(cs, audit_path):
         new_state = cs.apply_changes()
         if out_scope is not None:
             new_state = new_state.unionByName(out_scope)

@@ -260,12 +260,11 @@ SELECT * FROM src
 )
 def merge_partition_pruned(spark, sf_dir):
     from sparkmerge.merge import merge_partitioned
-    from sparkmerge.ptable import PartitionedSnapshotTable
 
     d = _scratch()
     try:
         orders = load(spark, sf_dir, "orders")
-        tbl = PartitionedSnapshotTable.create(
+        tbl = SnapshotTable.create(
             spark, os.path.join(d, "t"), orders, "o_orderstatus"
         )
         o_part = orders.filter(F.col("o_orderstatus") == "O")
@@ -315,13 +314,10 @@ SELECT * FROM (VALUES
     "add_columns() widens the schema NULL-filled — each verified by outcome",
 )
 def table_maintenance(spark, sf_dir):
-    from sparkmerge.ptable import PartitionedSnapshotTable
-    from sparkmerge.table import SnapshotTable
-
     d = _scratch()
     try:
         orders = load(spark, sf_dir, "orders").limit(2000)
-        pt = PartitionedSnapshotTable.create(
+        pt = SnapshotTable.create(
             spark, os.path.join(d, "pt"), orders.repartition(6), "o_orderstatus"
         )
         def n_files(val):

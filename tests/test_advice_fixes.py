@@ -20,7 +20,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-import sparkmerge.ptable as ptable_mod
+import sparkmerge.merge as merge_mod
 from sparkmerge.changeset import DeleteMode
 from sparkmerge.errors import MergeError, MergeValidationError
 from sparkmerge.ext.streaming import _await_or_raise
@@ -55,7 +55,7 @@ def test_prune_scan_boolean_partition_column(spark, tmp_path):
 
 
 def test_partition_value_ceiling(spark, tmp_path, monkeypatch):
-    monkeypatch.setattr(ptable_mod, "MAX_PARTITION_VALUES", 2)
+    monkeypatch.setattr(merge_mod, "MAX_PARTITION_VALUES", 2)
     orders = spark.read.parquet(f"{SF}/orders.parquet").limit(50)
     t = PartitionedSnapshotTable.create(
         spark, str(tmp_path / "t"), orders, "o_orderstatus"

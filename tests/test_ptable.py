@@ -18,8 +18,9 @@ from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 from sparkmerge.errors import MergeError, MergeThresholdExceeded, MergeValidationError
-from sparkmerge.merge import merge_partitioned, merge_preview
-from sparkmerge.ptable import HIVE_NULL, PartitionedSnapshotTable
+from sparkmerge.merge import merge_partitioned, merge_preview, simple_merge
+from sparkmerge.ptable import PartitionedSnapshotTable
+from sparkmerge.table import HIVE_NULL, SnapshotTable
 
 SF = "/root/testdata/sf0.001"
 
@@ -187,23 +188,15 @@ def test_prune_scan_carries_unchanged_candidate_forward(spark, orders, tmp_path)
     assert same_rows(t.read(spark), merge_preview(orders, src, "o_orderkey", delete="NO"))
 
 
-def test_prune_scan_into_new_partitions(spark, tmp_path, monkeypatch):
+def test_prune_scan_into_new_partitions(spark, tmp_path):
     """A source whose partitions are all new to the table scans nothing:
-    every row is an INSERT, counted by the write's observation, or by the
-    fallback aggregation where Catalyst drops the observation (simulated by
-    making ``Observation.get`` raise)."""
-    from pyspark.sql import Observation
-
+    every row is an INSERT, counted by the write's observation (Catalyst
+    keeps it over the empty scanned scope)."""
     t, df = _ints_table(spark, str(tmp_path / "t"))
     v1 = t.partitions()
     src = spark.createDataFrame([(5, "D", 50), (6, "E", 60), (7, "E", 70)], "k int, p string, v int")
     res = merge_partitioned(spark, t, src, ["k", "p"], prune_scan=True)
     assert (res.changed_rows, res.target_rows_before) == (3, 0)
-
-    def pruned(self):
-        raise RuntimeError("observed metrics dropped")
-
-    monkeypatch.setattr(Observation, "get", property(pruned))
     src2 = spark.createDataFrame([(8, "F", 80), (9, "G", 90)], "k int, p string, v int")
     res = merge_partitioned(spark, t, src2, ["k", "p"], prune_scan=True)
     assert (res.changed_rows, res.target_rows_before) == (2, 0)
@@ -347,14 +340,84 @@ def test_streaming_foreachbatch_into_partitioned_table(spark, orders, tmp_path):
     assert same_rows(final, expected)
 
 
-def test_full_stage_rejected(spark, orders, tmp_path):
+def test_full_stage_rewrites_every_partition(spark, orders, tmp_path):
+    """``stage`` on a partitioned table writes the whole next version: every
+    partition it holds comes from the one new writer directory, and a
+    partition it lacks is gone."""
     t = PartitionedSnapshotTable.create(spark, str(tmp_path / "t"), orders, "o_orderstatus")
-    with pytest.raises(MergeError):
-        t.stage(orders)
+    v1 = t.partitions()
+    rest = orders.filter("o_orderstatus <> 'P'")
+    staged = t.stage(rest)
+    assert t.commit(staged) == 2
+    v2 = t.partitions()
+    assert sorted(v2) == ["F", "O"]
+    assert {os.path.dirname(d) for d in v2.values()} == {staged.data_dir}
+    assert not set(v2.values()) & set(v1.values())
+    assert same_rows(t.read(spark), rest)
+
+
+def test_add_columns_on_partitioned_table(spark, tmp_path):
+    """Widening a partitioned table commits a NULL-filled version that keeps
+    its partitions; the previous version keeps the old schema."""
+    t, df = _ints_table(spark, str(tmp_path / "t"))
+    assert t.add_columns(spark, {"score": "double"}) == 2
+    got = t.read(spark)
+    assert got.columns == ["k", "p", "v", "score"]
+    assert same_rows(got, df.withColumn("score", F.lit(None).cast("double")))
+    assert sorted(t.partitions()) == ["A", "B", "C"]
+    assert t.read(spark, version=1).columns == ["k", "p", "v"]
+    res = merge_partitioned(spark, t, got.filter("p = 'A'").withColumn("score", F.lit(1.5)),
+                            ["k", "p"], prune_scan=True)
+    assert res.changed_rows == 2
+    assert sorted(r["score"] for r in t.read(spark).filter("p = 'A'").collect()) == [1.5, 1.5]
+
+
+@pytest.mark.parametrize("partition_by", [None, "p"])
+def test_one_record_shape_and_layout(spark, tmp_path, partition_by):
+    """Both kinds keep every version in one record shape, properties
+    included; after create, merge, threshold trip, set_property, compact and
+    vacuum the table directory holds only ``files/`` and the records.  A
+    merge stamps ``lastUpdate`` into its own version only."""
+    assert PartitionedSnapshotTable is SnapshotTable
+    path = str(tmp_path / "t")
+    rows = [(k, p, k * 10) for k, p in [(1, "A"), (2, "A"), (3, "B"), (4, "C")]]
+    df = spark.createDataFrame(rows, "k int, p string, v int")
+    t = SnapshotTable.create(spark, path, df, partition_by)
+    src = df.withColumn("v", F.col("v") + 1)
+
+    def merge(s, **kw):
+        if partition_by:
+            return merge_partitioned(spark, t, s, ["k", "p"], prune_scan=True, **kw)
+        return simple_merge(spark, t, s, "k", **kw)
+
+    assert merge(src).version == 2
+    assert "lastUpdate" in t.properties() and "lastUpdate" not in t.properties(version=1)
+    stamp = t.properties()["lastUpdate"]
+    with pytest.raises(MergeThresholdExceeded):
+        merge(src.withColumn("v", F.col("v") + 1), threshold="1%")
+    assert t.versions() == [1, 2] and t.properties()["lastUpdate"] == stamp
+    assert t.set_property("owner", "etl") == 3
+    assert t.properties() == {"lastUpdate": stamp, "owner": "etl"}
+    assert t.partitions() == t.partitions(version=2)
+    assert t.compact(spark) == 4 and t.properties()["owner"] == "etl"
+    records = [t.manifest(v) for v in t.versions()]
+    assert {frozenset(r) for r in records} == {
+        frozenset({"version", "schema", "partition_by", "partitions", "properties"})}
+    assert {r["partition_by"] for r in records} == {partition_by}
+    assert t.vacuum(keep=1) == [1, 2, 3]
+    assert sorted(os.listdir(path)) == ["files", "v=4.json"]
+    assert same_rows(t.read(spark), src)
+
+
+def test_merge_partitioned_needs_a_partitioned_table(spark, tmp_path):
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), spark.range(3).toDF("k"))
+    with pytest.raises(MergeValidationError, match="unpartitioned"):
+        merge_partitioned(spark, t, spark.range(2).toDF("k"), "k")
+    assert t.versions() == [1]
 
 
 def test_composite_partition_via_derived_column(spark, orders, tmp_path):
-    """The documented multi-column partitioning pattern (ptable.py module
+    """The documented multi-column partitioning pattern (table.py module
     docstring): partition by a derived composite column, include it in the
     join key, and scan/write pruning both apply per composite value."""
     base = orders.withColumn(
@@ -621,7 +684,7 @@ def test_job_counts_per_call(spark, orders, tmp_path):
 def test_changed_partition_discovery(spark, tmp_path, monkeypatch):
     """An update that moves a row from A to B rewrites both partitions and
     carries C forward; a changed set above the ceiling stages nothing."""
-    import sparkmerge.ptable as ptable_mod
+    import sparkmerge.merge as merge_mod
 
     t, df = _ints_table(spark, str(tmp_path / "t"))
     moved = df.withColumn("p", F.when(F.col("k") == 1, "B").otherwise(F.col("p")))
@@ -629,7 +692,7 @@ def test_changed_partition_discovery(spark, tmp_path, monkeypatch):
 
     # A and B change; then A, B and C, more groups than the limit keeps
     touch_all = moved.withColumn("v", F.when(F.col("k") == 4, 41).otherwise(F.col("v")))
-    monkeypatch.setattr(ptable_mod, "MAX_PARTITION_VALUES", 1)
+    monkeypatch.setattr(merge_mod, "MAX_PARTITION_VALUES", 1)
     dirs = data_dirs(t)
     for src in (moved, touch_all):
         with pytest.raises(MergeValidationError, match="touches >1 distinct partitions"):

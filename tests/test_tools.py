@@ -1,7 +1,9 @@
-"""Tests for the sf-scale corpus generator (tools/gen_scale.py)."""
+"""Tests for the sf-scale corpus generator (tools/gen_scale.py) and for the
+benchmark's tracer hooks (perfbench/tracing.py)."""
 
 from __future__ import annotations
 
+import importlib.util
 import os
 import subprocess
 import sys
@@ -117,3 +119,26 @@ def test_gen_scale_embedding_rotation_preserves_norms(scaled_dir):
            WHERE abs(a.n2 - b.n2) > 1e-6"""
     ).fetchone()[0]
     assert bad == 0, "cyclic shift must preserve vector norms exactly"
+
+
+def test_perfbench_tracer_wraps_engine_names(monkeypatch):
+    """perfbench's traced mode wraps engine functions by name from outside
+    (``tracing.install``, which reads each from its class or module body);
+    a renamed or inherited-only name breaks every traced benchmark run.
+    ``unwrap`` must then restore the engine exactly."""
+    import sparkmerge.merge as merge
+    from sparkmerge.table import SnapshotTable
+
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_tracing", os.path.join(REPO, "perfbench", "tracing.py"))
+    tracing = importlib.util.module_from_spec(spec)
+    monkeypatch.setitem(sys.modules, spec.name, tracing)  # its dataclasses look it up
+    spec.loader.exec_module(tracing)
+    before = dict(vars(SnapshotTable)), merge.simple_merge, merge.build_changeset
+    tracer = tracing.Tracer()
+    try:
+        tracing.install(tracer)
+        assert SnapshotTable.commit is not before[0]["commit"]
+    finally:
+        tracer.unwrap()
+    assert (dict(vars(SnapshotTable)), merge.simple_merge, merge.build_changeset) == before

@@ -7,7 +7,8 @@ commit wins and its rows read back; the other gets ``MergeConflictError``
 and leaves no staged directory behind; every retained version stays
 readable.  The writers interleave through the staging calls, through two
 merges in threads ordered stage A → stage B → commit A → commit B, and
-through two threads that meet at a barrier after staging.
+through two threads that meet at a barrier after staging.  A property
+change is a commit too, so it races a merge the same way.
 """
 
 import os
@@ -20,7 +21,6 @@ from pyspark.sql import functions as F
 
 from sparkmerge.errors import MergeConflictError
 from sparkmerge.merge import merge_partitioned, simple_merge
-from sparkmerge.ptable import PartitionedSnapshotTable
 from sparkmerge.table import SnapshotTable
 
 ROWS = [(1, "A", 10), (2, "A", 20), (3, "B", 30), (4, "C", 40)]
@@ -41,18 +41,12 @@ def rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def table_class(kind):
-    return PartitionedSnapshotTable if kind == "partitioned" else SnapshotTable
-
-
 def create(spark, kind, path, df):
-    if kind == "partitioned":
-        return PartitionedSnapshotTable.create(spark, path, df, "p")
-    return SnapshotTable.create(spark, path, df)
+    return SnapshotTable.create(spark, path, df, "p" if kind == "partitioned" else None)
 
 
 def merge(spark, table, src):
-    if isinstance(table, PartitionedSnapshotTable):
+    if table.manifest()["partition_by"] is not None:
         return merge_partitioned(spark, table, src.filter("p = 'A'"), ["k", "p"],
                                  prune_scan=True)
     return simple_merge(spark, table, src, "k")
@@ -97,7 +91,7 @@ def run_merges(spark, kind, path, srcs, before_stage, after_stage, done):
     outcome = {}
 
     def writer(name):
-        table = table_class(kind)(path)
+        table = SnapshotTable(path)
         stage = getattr(table, method)
 
         def hooked(*args):
@@ -145,7 +139,7 @@ def test_interleaved_merges(spark, base, tmp_path, kind):
     outcome = run_merges(spark, kind, path, srcs, before_stage, after_stage, done)
     assert isinstance(outcome["b"], MergeConflictError), outcome
     assert outcome["a"].version == 2
-    t = table_class(kind)(path)
+    t = SnapshotTable(path)
     assert t.versions() == [1, 2] and "lastUpdate" in t.properties()
     assert_intact(spark, t, {1: base, 2: srcs["a"]})
 
@@ -165,7 +159,7 @@ def test_threaded_merges(spark, base, tmp_path, kind):
     losers = [n for n, r in outcome.items() if isinstance(r, MergeConflictError)]
     assert len(winners) == 1 and len(losers) == 1, outcome
     assert outcome[winners[0]].version == 2
-    t = table_class(kind)(path)
+    t = SnapshotTable(path)
     assert t.versions() == [1, 2]
     assert_intact(spark, t, {1: base, 2: srcs[winners[0]]})
 
@@ -203,3 +197,43 @@ def test_many_committers_one_winner(spark, base, tmp_path):
     assert sum(isinstance(r, MergeConflictError) for r in outcome) == len(handles) - 1
     assert t.versions() == [1, 2]
     assert_intact(spark, t, {1: base, 2: srcs[winners[0]]})
+
+
+@pytest.mark.parametrize("first", ["set_property", "merge"])
+@pytest.mark.parametrize("kind", ["snapshot", "partitioned"])
+def test_set_property_races_a_merge(spark, base, tmp_path, kind, first):
+    """A property change and a merge both based on version 1: the one that
+    commits first wins, the other raises ``MergeConflictError``, and the
+    winner's properties are the table's."""
+    path = str(tmp_path / "t")
+    t = create(spark, kind, path, base)
+    other = SnapshotTable(path)  # the second writer's handle
+    src = bumped(base, 100)
+    if first == "set_property":
+        method = "stage_merge" if kind == "partitioned" else "stage"
+        stage = getattr(t, method)
+
+        def stage_then_set(*args):
+            staged = stage(*args)
+            assert other.set_property("owner", "ops") == 2
+            return staged
+
+        setattr(t, method, stage_then_set)
+        with pytest.raises(MergeConflictError):
+            merge(spark, t, src)
+        assert t.properties() == {"owner": "ops"}
+        expected = {1: base, 2: base}
+    else:
+        commit = other.commit
+
+        def merge_then_commit(staged):
+            assert merge(spark, t, src).version == 2
+            return commit(staged)
+
+        other.commit = merge_then_commit
+        with pytest.raises(MergeConflictError):
+            other.set_property("owner", "ops")
+        assert set(t.properties()) == {"lastUpdate"}
+        expected = {1: base, 2: src}
+    assert t.versions() == [1, 2] and t.properties(version=1) == {}
+    assert_intact(spark, t, expected)

@@ -39,8 +39,8 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from sparkmerge.merge import merge_partitioned, merge_preview
-    from sparkmerge.ptable import PartitionedSnapshotTable
     from sparkmerge.session import get_spark
+    from sparkmerge.table import SnapshotTable
 
     spark = get_spark("soak-incremental", input_bytes=100)
     spark.sparkContext.setLogLevel("ERROR")
@@ -74,7 +74,7 @@ def main() -> None:
     ok = True
     try:
         t0 = time.perf_counter()
-        tbl = PartitionedSnapshotTable.create(spark, os.path.join(d, "t"), orders, "ds")
+        tbl = SnapshotTable.create(spark, os.path.join(d, "t"), orders, "ds")
         expected = orders
         for i in range(days):
             before = tbl.partitions()
