@@ -19,10 +19,12 @@ This package re-expresses that as idiomatic Spark dataflow:
   470-491); merges into a partitioned table rewrite only touched
   partitions, the rest carry forward by reference (the 100 TB layout,
   SURVEY.md §7.2).  ``PartitionedSnapshotTable`` is an alias of it
-- ``merge.simple_merge``   — orchestration: threshold guard, audit append,
-  debug dry-run, lastUpdate property (sp_SimpleMerge.sql:57-67 surface)
-- ``merge.merge_partitioned`` — the same orchestration over a partitioned
-  table, with write pruning and optional key-sound scan pruning
+- ``merge.simple_merge``   — the one merge, into either table kind:
+  threshold guard, audit append, debug dry-run, lastUpdate property
+  (sp_SimpleMerge.sql:57-67 surface); the table's record picks the write
+  (whole, or only the changed partitions), and ``prune_scan`` prunes the
+  scan to the source's partitions.  ``merge.merge_partitioned`` is a second
+  name for it
 - ``ext/``                 — LLM-data-pipeline operators (dedup, similarity
   search, text analysis, multimodal columns, streaming) mandated by the
   build contract; designed for 100 TB scale.

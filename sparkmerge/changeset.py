@@ -304,10 +304,8 @@ def build_changeset(
     delete: str = "YES",
     bad_key: bool = False,
     bad_key_order: list[str] | None = None,
-    plan: MergePlan | None = None,
     strategy: str = "shuffle",
     update_mode: str = "overwrite",
-    source_latest_by: str | list[str] | None = None,
 ) -> Changeset:
     """Classify every row of ``target_df ⟗ source_df`` into a merge action.
 
@@ -336,37 +334,8 @@ def build_changeset(
     target value to keep).  Under 'patch' a NULL is a hole, not a value, so
     "set this column to NULL" is not expressible — that feed shape needs
     'overwrite'.
-
-    ``source_latest_by``: recency-dedup a multi-version feed to latest-per-
-    key by these source columns (descending, deterministic tiebreak) BEFORE
-    the join, dropping them afterwards — see :func:`latest_per_key`.  The
-    real-CDC upsert shape the reference's duplicate-key error rejects.
     """
-    if source_latest_by:
-        # recency-dedup the feed BEFORE plan construction: the ranking
-        # columns are dropped, so the plan never sees them (``plan`` callers
-        # must pass a plan built against the REDUCED source schema)
-        latest_cols = (
-            [source_latest_by]
-            if isinstance(source_latest_by, str)
-            else list(source_latest_by)
-        )
-        if plan is not None:
-            # enforce the reduced-schema contract instead of trusting the
-            # comment (ADVICE r7): a plan built against the UNREDUCED feed
-            # still carries the ranking columns and would reference columns
-            # that the reduction drops below.
-            stale = sorted(set(latest_cols) & set(plan.source_columns))
-            if stale:
-                raise MergeValidationError(
-                    "plan was built against the unreduced source schema: "
-                    f"source_latest_by columns {stale!r} appear in "
-                    "plan.source_columns — rebuild the plan from the "
-                    "latest_per_key-reduced source"
-                )
-        source_df = latest_per_key(source_df, join_columns, source_latest_by)
-    if plan is None:
-        plan = MergePlan.build(target_df.schema, source_df.schema, join_columns)
+    plan = MergePlan.build(target_df.schema, source_df.schema, join_columns)
     if update_mode not in ("overwrite", "patch"):
         raise MergeValidationError(f"Unknown update_mode: {update_mode!r}")
     clash = _RESERVED.intersection(plan.target_columns)

@@ -12,20 +12,26 @@ Parameter surface mirrors ``sp_SimpleMerge`` (sp_SimpleMerge.sql:57-67):
     @threshold    → threshold ('15%' or float, :65)
     @debug        → debug (dry-run report, :66)
 
-Lifecycle (SURVEY.md §3.1): validate → plan → changeset (lazy) → [debug
-report | stage snapshot → threshold guard → commit with lastUpdate in the
-version record, or abort → audit append].  ``simple_merge`` and
-``merge_partitioned`` share the bracketed tail (``_commit``).
+``@target`` may be either table kind: there is one merge, and
+``merge_partitioned`` is a second name for ``simple_merge``.
+
+Lifecycle (SURVEY.md §3.1): validate → read the base record → scan (the
+table, or the source's partitions under ``prune_scan``) → scope and
+changeset (lazy) → [debug report | stage → threshold guard → commit with
+lastUpdate in the version record, or abort → audit append].  The record
+picks the stage: a whole write for an unpartitioned table (or a merge that
+widens the schema), else a write of only the changed partitions, the rest
+carried forward by reference.
 
 Efficiency: the threshold guard needs (a) the pre-merge in-scope target count
-(:141-150) and (b) the number of changed rows (:472-473).  In both merges
-they ride as ``Observation`` metrics on the SAME job that writes the staged
-version (``_observe``) — zero extra passes over the data — and the guard runs
-after that write, before the commit, in the reference's order (:470-479): a
-trip discards the write.  A scan-pruned partitioned merge observes its
-changed partitions on that job too: it writes the source's partitions and
-then carries the unchanged ones forward, so an idempotent merge or a
-threshold trip retains zero data.  A full-scan partitioned merge has no such
+(:141-150) and (b) the number of changed rows (:472-473).  They ride as
+``Observation`` metrics on the SAME job that writes the staged version
+(``_observe``) — zero extra passes over the data — and the guard runs after
+that write, before the commit, in the reference's order (:470-479): a trip
+discards the write.  A scan-pruned partitioned merge observes its changed
+partitions on that job too: it writes the source's partitions and then
+carries the unchanged ones forward, so an idempotent merge or a threshold
+trip retains zero data.  A full scan of a partitioned table has no such
 bound, so it learns its changed partitions and counts from one aggregation
 and checks the guard before it writes.  Only a second pass over the
 changeset (that aggregation, an audit) persists it (``_pinned``), so
@@ -58,7 +64,7 @@ from sparkmerge.errors import MergeThresholdExceeded, MergeValidationError
 from sparkmerge.plan import MergePlan, split_csv
 from sparkmerge.table import SnapshotTable, Staged, canon_col, canon_sql
 
-# Distinct-partition ceiling for driver-side value sets (merge_partitioned
+# Distinct-partition ceiling for driver-side value sets (a partitioned merge
 # collects partition VALUES, never rows).  100k string values is a few MB of
 # driver memory; a table with more distinct partitions than this is
 # mis-partitioned and every metadata operation on it would crawl — fail fast.
@@ -210,16 +216,37 @@ def merge_preview(
     ``strategy='broadcast'`` (or ``'auto'``) selects the small-source fast
     path: no shuffle carries target rows (see changeset.py) — the right plan
     when a delta batch merges into a table orders of magnitude larger."""
+    cs, _, out_scope = _scoped_changeset(
+        target_df, source_df, join_columns, target_filter=target_filter,
+        schema_evolution=schema_evolution, delete=delete, bad_key=bad_key,
+        bad_key_order=bad_key_order, strategy=strategy, update_mode=update_mode)
+    return _new_state(cs, out_scope)
+
+
+def _scoped_changeset(
+    target_df: DataFrame,
+    source_df: DataFrame,
+    join_columns: str | list[str],
+    *,
+    target_filter: str | None,
+    schema_evolution: bool,
+    **options,
+) -> tuple[Changeset, DataFrame, DataFrame | None]:
+    """The scope-and-changeset step of ``merge_preview`` and ``simple_merge``:
+    widen the target (``schema_evolution``), split it by ``target_filter``
+    and classify the in-scope rows (``options`` go to ``build_changeset``).
+    Returns the changeset, the in-scope rows and the out-of-scope rows."""
     if schema_evolution:
         target_df = evolve_target_schema(target_df, source_df.schema)
     in_scope, out_scope = _scope_split(target_df, target_filter)
-    cs = build_changeset(in_scope, source_df, join_columns, delete=delete,
-                         bad_key=bad_key, bad_key_order=bad_key_order,
-                         strategy=strategy, update_mode=update_mode)
+    return build_changeset(in_scope, source_df, join_columns, **options), in_scope, out_scope
+
+
+def _new_state(cs: Changeset, out_scope: DataFrame | None) -> DataFrame:
+    """The merged state of the scanned rows: the changeset applied, plus the
+    out-of-scope rows as they were."""
     new_state = cs.apply_changes()
-    if out_scope is not None:
-        new_state = new_state.unionByName(out_scope)
-    return new_state
+    return new_state if out_scope is None else new_state.unionByName(out_scope)
 
 
 def diff_versions(
@@ -245,7 +272,7 @@ def diff_versions(
 
 
 def _report(cs: Changeset, merge_sql: str, thr: float | None, in_scope: DataFrame) -> MergeReport:
-    """The debug dry run of either merge: zero side effects."""
+    """The merge's debug dry run: zero side effects."""
     return MergeReport(
         merge_sql=merge_sql,
         physical_plan=_captured_explain(cs.df),
@@ -328,8 +355,8 @@ def _commit(
     thr: float | None,
     audit_path: str | None,
 ) -> MergeResult:
-    """The tail both merges share: stage → threshold guard → commit with
-    lastUpdate → audit append (sp_SimpleMerge.sql:470-491).
+    """The merge's tail: stage → threshold guard → commit with lastUpdate →
+    audit append (sp_SimpleMerge.sql:470-491).
 
     ``stage()`` writes the new version; ``counts()`` then returns (changed
     rows, pre-merge in-scope rows).  It commits only on ``base``, the version
@@ -359,152 +386,6 @@ def _commit(
         variance_pct=variance,
         audit_rows=audit_rows,
     )
-
-
-def merge_partitioned(
-    spark: SparkSession,
-    target: SnapshotTable,
-    source_df: DataFrame,
-    join_columns: str | list[str],
-    *,
-    delete: str = "YES",
-    prune_scan: bool = False,
-    bad_key: bool = False,
-    bad_key_order: list[str] | None = None,
-    audit: bool = False,
-    audit_path: str | None = None,
-    threshold: str | float | None = None,
-    debug: bool = False,
-    strategy: str = "shuffle",
-    update_mode: str = "overwrite",
-) -> MergeResult | MergeReport:
-    """Merge into a partitioned :class:`~sparkmerge.table.SnapshotTable`,
-    rewriting ONLY the partitions the changeset touches (SURVEY.md §7.2's
-    100 TB design; the plain ``simple_merge`` rewrites the full snapshot,
-    like the reference's in-place MERGE at sp_SimpleMerge.sql:471).
-
-    Two independent prunings:
-
-    - **Write pruning** (always on, always semantics-preserving): only
-      partitions containing a non-KEEP row — under their old OR new
-      partition value — get new data in the committed version; every other
-      partition is carried forward by manifest reference, zero bytes
-      retained.  A full-scan merge finds those partitions first and writes
-      only them; a scan-pruned one writes the source's partitions and
-      discards the unchanged ones after the write.
-    - **Scan pruning** (``prune_scan=True``): the target scan itself is
-      pruned to the partitions present in the source.  Sound only when the
-      partition column is part of the join key (then a source row can never
-      match a target row in another partition); rows in unscanned partitions
-      are implicitly out of scope — the partition-level analog of
-      ``@targetFilter`` (sp_SimpleMerge.sql:205-226), and the standard
-      incremental-merge contract on partitioned lakehouse tables.  With
-      ``delete='YES'`` this means unmatched rows are deleted only *within
-      scanned partitions* — exactly the behavior you want when a daily
-      source covers a date partition of a 100 TB table.
-
-    The threshold variance (sp_SimpleMerge.sql:473-477) is computed over the
-    scanned scope, mirroring how ``@targetFilter`` scopes the reference's
-    pre-count (:141-150).  A full-scan merge checks it before it writes; a
-    scan-pruned one after its write and before the commit, as the reference
-    does (:470-479), discarding the write on a trip.
-    """
-    if audit and audit_path is None:
-        audit_path = default_audit_path(target)
-    thr = _parse_threshold(threshold)
-    m = target.manifest()
-    pcol, base = m["partition_by"], m["version"]
-    if pcol is None:
-        raise MergeValidationError(
-            f"merge_partitioned needs a partitioned table; {target.path!r} is "
-            "unpartitioned (use simple_merge).")
-    keys = split_csv(join_columns) if isinstance(join_columns, str) else list(join_columns)
-
-    if prune_scan:
-        if pcol not in keys:
-            raise MergeValidationError(
-                f"prune_scan requires the partition column {pcol!r} in the join "
-                f"key {keys!r} — otherwise a source row could match a target row "
-                "in an unscanned partition."
-            )
-        # Canonicalize through Spark itself (canon_col = cast-to-string +
-        # NULL sentinel) so the collected values use the SAME cast semantics
-        # that produced the manifest keys — Python str() disagrees with
-        # Spark's rendering for booleans ('True' vs 'true') and some
-        # float/double values, which would silently prune every real
-        # partition.  The limit bounds memory: partition VALUES (not rows)
-        # cross the driver, and a table with >MAX_PARTITION_VALUES distinct
-        # partitions is mis-partitioned — fail fast.  Under the aggregate it
-        # is one job (a root limit would run Spark's executeTake cascade);
-        # coalesce(1) merges the distinct in the task that applies the limit,
-        # so it costs no extra stage.
-        src_vals = (
-            source_df.select(canon_col(pcol).alias("p"))
-            .distinct()
-            .coalesce(1)
-            .limit(MAX_PARTITION_VALUES + 1)
-            .agg(F.collect_list("p"))
-            .first()[0]
-        )
-        if len(src_vals) > MAX_PARTITION_VALUES:
-            raise MergeValidationError(
-                f"prune_scan: source has >{MAX_PARTITION_VALUES} distinct "
-                f"{pcol!r} values; partition by a coarser key."
-            )
-        in_scope = target.read_partitions(spark, src_vals, version=base)
-    else:
-        in_scope = target.read(spark, version=base)
-
-    cs = build_changeset(in_scope, source_df, join_columns, delete=delete,
-                         bad_key=bad_key, bad_key_order=bad_key_order,
-                         strategy=strategy, update_mode=update_mode)
-
-    if debug:
-        # like simple_merge(debug=True), plus the scan-pruning detail in the
-        # SQL comment header
-        scope_note = (
-            f"-- scan-pruned to source partitions of `{pcol}`"
-            if prune_scan
-            else f"-- full scan; write-pruned by `{pcol}`"
-        )
-        return _report(cs, scope_note + "\n" + render_merge_sql(cs.plan, delete=delete),
-                       thr, in_scope)
-
-    # The candidate partitions the write covers: scan-pruned, the source's
-    # (the partition column is in the key, so no changed partition lies
-    # outside them); full scan, the changed ones, found by one aggregation
-    # before the write (a second pass, hence the pin).  After the write, a
-    # candidate its observation did not see change is carried forward.
-    cs, metrics = _observe(cs, pcol)
-    with _pinned(cs, audit_path, reread=not prune_scan):
-        new_state = cs.apply_changes()
-        if prune_scan:
-            candidates = set(src_vals)
-        else:
-            candidates = _changed_partitions(cs, pcol)
-            _check_threshold(metrics()["changed"], metrics()["before"], thr)
-            if candidates:
-                # one SQL-text IN-list, which the optimizer turns into a
-                # hash-set lookup (InSet) at any partition count
-                in_list = ", ".join(map(_qs, sorted(candidates)))
-                new_state = new_state.filter(f"{canon_sql(pcol)} IN ({in_list})")
-
-        def stage() -> Staged:
-            staged = target.stage_merge(new_state, candidates)
-            if not candidates:  # nothing written, nothing to carry
-                return staged
-            try:
-                return target.carry_forward(staged, candidates - metrics()["parts"])
-            except BaseException:
-                target.abort(staged)
-                raise
-
-        def counts() -> tuple[int, int]:
-            if prune_scan and not candidates:
-                return 0, 0  # an empty source scans no partition
-            return metrics()["changed"], metrics()["before"]
-
-        return _commit(target, base, cs, stage, counts, thr, audit_path)
 
 
 def _changed_partitions(cs: Changeset, pcol: str) -> set[str]:
@@ -542,6 +423,44 @@ def default_audit_path(target: SnapshotTable) -> str:
     return target.path.rstrip("/") + "_SimpleMergeOutput"
 
 
+def _source_partitions(source_df: DataFrame, join_columns: str | list[str], pcol: str | None) -> list[str]:
+    """The canonical partition values present in ``source_df``: the scan of
+    a ``prune_scan`` merge.  Sound only with the partition column in the
+    join key, so a source row can never match a target row in an unscanned
+    partition; an unpartitioned table has no such column."""
+    keys = split_csv(join_columns) if isinstance(join_columns, str) else list(join_columns)
+    if pcol not in keys:
+        raise MergeValidationError(
+            f"prune_scan requires the table's partition column (partition_by="
+            f"{pcol!r}) in the join key {keys!r} — otherwise a source row could "
+            "match a target row in an unscanned partition."
+        )
+    # Canonicalize through Spark itself (canon_col = cast-to-string + NULL
+    # sentinel) so the collected values use the SAME cast semantics that
+    # produced the manifest keys — Python str() disagrees with Spark's
+    # rendering for booleans ('True' vs 'true') and some float/double
+    # values, which would silently prune every real partition.  The limit
+    # bounds memory: partition VALUES (not rows) cross the driver, and a
+    # table with >MAX_PARTITION_VALUES distinct partitions is
+    # mis-partitioned — fail fast.  Under the aggregate it is one job (a root
+    # limit would run Spark's executeTake cascade); coalesce(1) merges the
+    # distinct in the task that applies the limit, so it costs no extra stage.
+    vals = (
+        source_df.select(canon_col(pcol).alias("p"))
+        .distinct()
+        .coalesce(1)
+        .limit(MAX_PARTITION_VALUES + 1)
+        .agg(F.collect_list("p"))
+        .first()[0]
+    )
+    if len(vals) > MAX_PARTITION_VALUES:
+        raise MergeValidationError(
+            f"prune_scan: source has >{MAX_PARTITION_VALUES} distinct "
+            f"{pcol!r} values; partition by a coarser key."
+        )
+    return vals
+
+
 def simple_merge(
     spark: SparkSession,
     target: SnapshotTable,
@@ -560,18 +479,41 @@ def simple_merge(
     strategy: str = "shuffle",
     update_mode: str = "overwrite",
     source_latest_by: str | list[str] | None = None,
+    prune_scan: bool = False,
 ) -> MergeResult | MergeReport:
-    """Merge ``source_df`` into ``target`` — see module docstring.
+    """Merge ``source_df`` into ``target``, of either table kind — see the
+    module docstring.
 
     ``audit_path`` mirrors ``@output``; ``audit=True`` with no explicit path
     uses the reference's default name (``<target>_SimpleMergeOutput``).
     ``schema_evolution=True`` relaxes the source ⊆ target schema rule by
     widening the target with typed-NULL columns first (the committed
-    snapshot carries the evolved schema).  ``strategy='broadcast'``/
+    version carries the evolved schema).  ``strategy='broadcast'``/
     ``'auto'`` selects the broadcast small-source path (no target-row shuffle)
     (changeset.py); the merge result is identical under every strategy.
     ``source_latest_by`` recency-dedups a multi-version feed to latest-per-
-    key by those source columns before the merge (changeset.latest_per_key)."""
+    key by those source columns before the merge (changeset.latest_per_key).
+
+    The table's record picks the write.  An unpartitioned table, or a merge
+    that widens the schema, stages the whole next version.  A partitioned
+    table otherwise rewrites ONLY the partitions holding a non-KEEP row —
+    under their old OR new partition value — and carries every other one
+    forward by manifest reference, zero bytes retained (SURVEY.md §7.2's
+    100 TB design).  A full scan finds those partitions first and writes
+    only them; a scan-pruned merge writes the source's partitions and
+    carries the unchanged ones forward after the write.
+
+    ``prune_scan=True`` prunes the target scan itself to the partitions
+    present in the source.  Sound only when the partition column is part of
+    the join key (then a source row can never match a target row in another
+    partition), so it raises ``MergeValidationError`` otherwise, and on an
+    unpartitioned table.  Rows in unscanned partitions are implicitly out of
+    scope — the partition-level analog of ``@targetFilter``
+    (sp_SimpleMerge.sql:205-226): with ``delete='YES'`` unmatched rows are
+    deleted only within scanned partitions, which is what a daily source
+    covering a date partition of a 100 TB table wants.  The threshold
+    variance (:473-477) is computed over the scanned, in-scope rows, as
+    ``@targetFilter`` scopes the reference's pre-count (:141-150)."""
     if audit and audit_path is None:
         audit_path = default_audit_path(target)
     thr = _parse_threshold(threshold)
@@ -579,25 +521,76 @@ def simple_merge(
         # reduce the multi-version feed to latest-per-key BEFORE the plan is
         # built (the ranking columns are dropped from the reduced source)
         source_df = latest_per_key(source_df, join_columns, source_latest_by)
-    base = target.current_version()
-    target_df = target.read(spark, version=base)
-    if schema_evolution:
-        target_df = evolve_target_schema(target_df, source_df.schema)
-    in_scope, out_scope = _scope_split(target_df, target_filter)
-    cs = build_changeset(in_scope, source_df, join_columns, delete=delete,
-                         bad_key=bad_key, bad_key_order=bad_key_order,
-                         strategy=strategy, update_mode=update_mode)
+    m = target.manifest()
+    pcol, base = m["partition_by"], m["version"]
+    if prune_scan:
+        src_vals = _source_partitions(source_df, join_columns, pcol)
+        target_df = target.read_partitions(spark, src_vals, version=base)
+    else:
+        target_df = target.read(spark, version=base)
+    cs, in_scope, out_scope = _scoped_changeset(
+        target_df, source_df, join_columns, target_filter=target_filter,
+        schema_evolution=schema_evolution, delete=delete, bad_key=bad_key,
+        bad_key_order=bad_key_order, strategy=strategy, update_mode=update_mode)
+    # stage_merge casts to the record's schema, which would drop the columns
+    # a widening merge adds: such a merge rewrites the whole table
+    whole = pcol is None or len(cs.plan.target_columns) > len(m["schema"]["fields"])
     if debug:
         sql = render_merge_sql(cs.plan, delete=delete, target_filter=target_filter)
+        if pcol is not None:
+            scan = f"scan-pruned to source partitions of `{pcol}`" if prune_scan else "full scan"
+            write = "whole write" if whole else f"write-pruned by `{pcol}`"
+            sql = f"-- {scan}; {write}\n{sql}"
         return _report(cs, sql, thr, in_scope)
 
-    cs, metrics = _observe(cs)
-    with _pinned(cs, audit_path):
-        new_state = cs.apply_changes()
-        if out_scope is not None:
-            new_state = new_state.unionByName(out_scope)
-        return _commit(target, base, cs, lambda: target.stage(new_state),
-                       lambda: (metrics()["changed"], metrics()["before"]), thr, audit_path)
+    cs, metrics = _observe(cs, None if whole else pcol)
+    with _pinned(cs, audit_path, reread=not (whole or prune_scan)):
+        new_state = _new_state(cs, out_scope)
+        if whole:
+            if prune_scan:  # the unscanned partitions are out of scope: they stay
+                rest = sorted(set(m["partitions"]) - set(src_vals))
+                new_state = new_state.unionByName(evolve_target_schema(
+                    target.read_partitions(spark, rest, version=base), source_df.schema))
+            return _commit(target, base, cs, lambda: target.stage(new_state),
+                           lambda: (metrics()["changed"], metrics()["before"]), thr, audit_path)
+        # The write-pruned candidates: scan-pruned, the source's partitions
+        # (the partition column is in the key, so no changed partition lies
+        # outside them); full scan, the changed ones, found by one
+        # aggregation before the write (a second pass, hence the pin).  After
+        # the write, a candidate its observation did not see change is
+        # carried forward.
+        if prune_scan:
+            candidates = set(src_vals)
+        else:
+            candidates = _changed_partitions(cs, pcol)
+            _check_threshold(metrics()["changed"], metrics()["before"], thr)
+            if candidates:
+                # one SQL-text IN-list, which the optimizer turns into a
+                # hash-set lookup (InSet) at any partition count
+                in_list = ", ".join(map(_qs, sorted(candidates)))
+                new_state = new_state.filter(f"{canon_sql(pcol)} IN ({in_list})")
+
+        def stage() -> Staged:
+            staged = target.stage_merge(new_state, candidates)
+            if not candidates:  # nothing written, nothing to carry
+                return staged
+            try:
+                return target.carry_forward(staged, candidates - metrics()["parts"])
+            except BaseException:
+                target.abort(staged)
+                raise
+
+        def counts() -> tuple[int, int]:
+            if prune_scan and not candidates:
+                return 0, 0  # an empty source scans no partition
+            return metrics()["changed"], metrics()["before"]
+
+        return _commit(target, base, cs, stage, counts, thr, audit_path)
+
+
+# The second name callers of the partitioned merge use: the same function,
+# so a wrapper around either name never nests the other.
+merge_partitioned = simple_merge
 
 
 def scd2_merge(

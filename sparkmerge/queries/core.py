@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from sparkmerge.changeset import build_changeset
+from sparkmerge.changeset import build_changeset, latest_per_key
 from sparkmerge.merge import merge_preview
 from sparkmerge.queries import load, register
 from sparkmerge.queries.fixtures import (
@@ -881,7 +881,7 @@ SELECT coalesce(t.o_orderkey, s.o_orderkey) AS o_orderkey,
        CASE WHEN s.o_orderkey IS NULL THEN t.o_orderpriority ELSE s.o_orderpriority END AS o_orderpriority
   FROM orders t FULL OUTER JOIN latest s ON t.o_orderkey = s.o_orderkey
 """,
-    description="recency-dedup-then-merge (source_latest_by): a multi-"
+    description="recency-dedup-then-merge (latest_per_key): a multi-"
     "version CDC/upsert feed — several rows per key carrying a source "
     "sequence/timestamp — reduces to latest-per-key by ONE rank window "
     "BEFORE the changeset join, then merges with delete='NO' (upsert "
@@ -897,11 +897,6 @@ SELECT coalesce(t.o_orderkey, s.o_orderkey) AS o_orderkey,
     "state (apply_changes); sf10 profile 6.2-6.8 s warm ≈ 1.0-1.1× DuckDB",
 )
 def merge_upsert_latest(spark, sf_dir):
-    cs = build_changeset(
-        load(spark, sf_dir, "orders"),
-        orders_upsert_feed(spark, sf_dir),
-        "o_orderkey",
-        delete="NO",
-        source_latest_by="src_seq",
-    )
+    latest = latest_per_key(orders_upsert_feed(spark, sf_dir), "o_orderkey", "src_seq")
+    cs = build_changeset(load(spark, sf_dir, "orders"), latest, "o_orderkey", delete="NO")
     return cs.apply_changes()

@@ -273,9 +273,10 @@ class SnapshotTable:
         partitions' new data (one job into this writer's own directory),
         carry every other partition forward by reference.  A given partition
         that comes back empty (all rows deleted) is dropped from the
-        manifest.  Invisible until commit.  The frame is cast by name to the
-        record's schema (the read schema), so a wider source type cannot make
-        the committed version unreadable."""
+        manifest; when all do, the writer's directory goes too and the
+        version writes no data.  Invisible until commit.  The frame is cast
+        by name to the record's schema (the read schema), so a wider source
+        type cannot make the committed version unreadable."""
         m = self.manifest()
         pcol, schema = m["partition_by"], StructType.fromJson(m["schema"])
         data, written = None, {}
@@ -290,6 +291,9 @@ class SnapshotTable:
                 raise MergeError(
                     f"Staged data contains partitions not marked changed: {sorted(unexpected)!r}"
                 )
+            if not written:  # every partition came back empty: no data to name
+                shutil.rmtree(os.path.join(self.path, data))
+                data = None
         parts = dict(m["partitions"])
         for val in changed_values:
             if val in written:

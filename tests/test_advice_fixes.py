@@ -316,31 +316,3 @@ def test_prune_sweeps_legacy_dashless_dirs(tmp_path):
     assert not (base / legacy).exists()
     # a dash-bearing name of non-legacy shape is out of scope
     assert (base / unrelated).exists()
-
-
-def test_latest_by_plan_schema_contract(spark):
-    """build_changeset(plan=..., source_latest_by=...) must reject a plan
-    built against the UNREDUCED source schema — before ADVICE r7 the
-    contract lived only in a comment and the mismatch silently produced a
-    plan referencing columns the reduction drops."""
-    import pytest
-
-    from sparkmerge.changeset import build_changeset
-    from sparkmerge.errors import MergeValidationError
-    from sparkmerge.plan import MergePlan
-
-    target = spark.createDataFrame([(1, "a", 1)], "id int, v string, version int")
-    source = spark.createDataFrame(
-        [(1, "b", 2)], "id int, v string, version int"
-    )
-    bad_plan = MergePlan.build(target.schema, source.schema, ["id"])
-    with pytest.raises(MergeValidationError, match="unreduced source schema"):
-        build_changeset(target, source, ["id"], plan=bad_plan, source_latest_by="version")
-    # the reduced-schema plan is accepted
-    good_plan = MergePlan.build(
-        target.schema, source.drop("version").schema, ["id"]
-    )
-    cs = build_changeset(
-        target, source, ["id"], plan=good_plan, source_latest_by="version"
-    )
-    assert cs.df.count() >= 1

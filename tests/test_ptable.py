@@ -1,7 +1,8 @@
-"""PartitionedSnapshotTable + merge_partitioned (SURVEY.md §7.2 100 TB design).
+"""Merges into a partitioned SnapshotTable (SURVEY.md §7.2 100 TB design).
 
-The load-bearing claims under test:
-1. write pruning is invisible: merge_partitioned ≡ simple_merge on the same
+``merge_partitioned`` is a second name for ``simple_merge``; the table's
+record picks the write.  The load-bearing claims under test:
+1. write pruning is invisible: the merge ≡ ``merge_preview`` on the same
    inputs (row-for-row);
 2. untouched partitions are carried forward BY REFERENCE (same manifest
    paths, files physically untouched), not rewritten;
@@ -113,6 +114,8 @@ def test_emptied_partition_dropped_from_manifest(spark, orders, tmp_path):
     merge_partitioned(spark, t, src, "o_orderkey")
     assert sorted(t.partitions()) == ["F", "O"]
     assert t.read(spark).filter("o_orderstatus = 'P'").count() == 0
+    # the one rewritten partition came back empty: no writer dir was kept
+    assert data_dirs(t) == named_dirs(t)
 
 
 def test_null_partition_values(spark, orders, tmp_path):
@@ -384,17 +387,11 @@ def test_one_record_shape_and_layout(spark, tmp_path, partition_by):
     df = spark.createDataFrame(rows, "k int, p string, v int")
     t = SnapshotTable.create(spark, path, df, partition_by)
     src = df.withColumn("v", F.col("v") + 1)
-
-    def merge(s, **kw):
-        if partition_by:
-            return merge_partitioned(spark, t, s, ["k", "p"], prune_scan=True, **kw)
-        return simple_merge(spark, t, s, "k", **kw)
-
-    assert merge(src).version == 2
+    assert simple_merge(spark, t, src, ["k", "p"]).version == 2
     assert "lastUpdate" in t.properties() and "lastUpdate" not in t.properties(version=1)
     stamp = t.properties()["lastUpdate"]
     with pytest.raises(MergeThresholdExceeded):
-        merge(src.withColumn("v", F.col("v") + 1), threshold="1%")
+        simple_merge(spark, t, src.withColumn("v", F.col("v") + 1), ["k", "p"], threshold="1%")
     assert t.versions() == [1, 2] and t.properties()["lastUpdate"] == stamp
     assert t.set_property("owner", "etl") == 3
     assert t.properties() == {"lastUpdate": stamp, "owner": "etl"}
@@ -410,10 +407,55 @@ def test_one_record_shape_and_layout(spark, tmp_path, partition_by):
 
 
 def test_merge_partitioned_needs_a_partitioned_table(spark, tmp_path):
+    """Scan pruning needs the partition column in the key; an unpartitioned
+    table has none, so ``prune_scan`` raises there and stages nothing."""
     t = SnapshotTable.create(spark, str(tmp_path / "t"), spark.range(3).toDF("k"))
-    with pytest.raises(MergeValidationError, match="unpartitioned"):
-        merge_partitioned(spark, t, spark.range(2).toDF("k"), "k")
-    assert t.versions() == [1]
+    dirs = data_dirs(t)
+    assert merge_partitioned is simple_merge
+    with pytest.raises(MergeValidationError, match="partition_by=None"):
+        merge_partitioned(spark, t, spark.range(2).toDF("k"), "k", prune_scan=True)
+    assert t.versions() == [1] and data_dirs(t) == dirs
+
+
+@pytest.mark.parametrize("prune_scan", [False, True])
+def test_target_filter_on_partitioned_table(spark, orders, tmp_path, prune_scan):
+    """``target_filter`` on a partitioned table: the committed version equals
+    ``merge_preview`` of the scanned rows, plus any unscanned partition as it
+    was.  Out-of-scope rows survive inside a rewritten partition, and a
+    partition the merge does not change keeps its v1 directory."""
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), orders, "o_orderstatus")
+    v1 = t.partitions()
+    src = mutated(orders.filter("o_orderstatus = 'O'"))
+    keys, flt = ["o_orderkey", "o_orderstatus"], "o_custkey % 2 = 0 AND o_orderstatus <> 'P'"
+    simple_merge(spark, t, src, keys, target_filter=flt, prune_scan=prune_scan)
+    scanned = orders.filter("o_orderstatus = 'O'") if prune_scan else orders
+    expected = merge_preview(scanned, src, keys, target_filter=flt)
+    if prune_scan:
+        expected = expected.unionByName(orders.filter("o_orderstatus <> 'O'"))
+    assert same_rows(t.read(spark), expected)
+    # a full scan deletes F's in-scope rows; every 'P' row is out of scope
+    v2 = t.partitions()
+    assert {p for p in v2 if v2[p] != v1[p]} == ({"O"} if prune_scan else {"O", "F"})
+    assert data_dirs(t) == named_dirs(t)
+
+
+@pytest.mark.parametrize("prune_scan", [False, True])
+def test_schema_evolution_on_partitioned_table(spark, tmp_path, prune_scan):
+    """A merge that widens a partitioned table commits the whole widened
+    version: every row reads back, the old ones with NULL in the new column,
+    and the previous version keeps the old schema."""
+    t, df = _ints_table(spark, str(tmp_path / "t"))
+    src = spark.createDataFrame([(1, "A", 11, 1.5), (5, "D", 50, 2.5)],
+                                "k int, p string, v int, score double")
+    res = simple_merge(spark, t, src, ["k", "p"], delete="NO", schema_evolution=True,
+                       prune_scan=prune_scan)
+    assert (res.version, res.changed_rows) == (2, 2)
+    got = t.read(spark)
+    assert got.columns == ["k", "p", "v", "score"]
+    nulls = df.filter("k <> 1").withColumn("score", F.lit(None).cast("double"))
+    assert same_rows(got, nulls.unionByName(src))
+    assert sorted(t.partitions()) == ["A", "B", "C", "D"]
+    assert t.read(spark, version=1).columns == ["k", "p", "v"]
 
 
 def test_composite_partition_via_derived_column(spark, orders, tmp_path):
@@ -652,7 +694,8 @@ def _jobs(spark, tag, fn):
 
 def test_job_counts_per_call(spark, orders, tmp_path):
     """A read opens with the version record's schema (no footer-inference
-    job), and a pruned merge finds its changed partitions on its write."""
+    job), a pruned merge finds its changed partitions on its write, and the
+    one merge runs as many jobs as the table kind's write needs."""
     from sparkmerge.table import SnapshotTable
 
     t = PartitionedSnapshotTable.create(spark, str(tmp_path / "t"), orders, "o_orderstatus")
@@ -679,6 +722,18 @@ def test_job_counts_per_call(spark, orders, tmp_path):
     # source's partitions, which observes the counts and the changed
     # partitions (10 jobs while a separate aggregation found them first)
     assert _jobs(spark, "ptable-merge", lambda: merge(2.0)) == 7
+
+    def bumped(bump):
+        return orders.withColumn("o_totalprice", F.when(
+            F.col("o_orderkey") % 3 == 0, F.col("o_totalprice") + bump
+        ).otherwise(F.col("o_totalprice")))
+
+    # unpartitioned: the whole write, which observes the counts
+    assert _jobs(spark, "table-merge", lambda: simple_merge(spark, s, bumped(1.0), keys)) == 3
+    # partitioned, full scan: the changed-partition aggregation, then the
+    # write of only those partitions; under either name
+    for bump, fn in [(3.0, merge_partitioned), (4.0, simple_merge)]:
+        assert _jobs(spark, f"ptable-full-{bump}", lambda: fn(spark, t, bumped(bump), keys)) == 6
 
 
 def test_changed_partition_discovery(spark, tmp_path, monkeypatch):

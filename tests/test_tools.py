@@ -134,11 +134,14 @@ def test_perfbench_tracer_wraps_engine_names(monkeypatch):
     tracing = importlib.util.module_from_spec(spec)
     monkeypatch.setitem(sys.modules, spec.name, tracing)  # its dataclasses look it up
     spec.loader.exec_module(tracing)
-    before = dict(vars(SnapshotTable)), merge.simple_merge, merge.build_changeset
+    before = (dict(vars(SnapshotTable)), merge.simple_merge, merge.merge_partitioned,
+              merge.build_changeset)
     tracer = tracing.Tracer()
     try:
         tracing.install(tracer)
         assert SnapshotTable.commit is not before[0]["commit"]
+        assert merge.merge_partitioned is not before[2]
     finally:
         tracer.unwrap()
-    assert (dict(vars(SnapshotTable)), merge.simple_merge, merge.build_changeset) == before
+    assert (dict(vars(SnapshotTable)), merge.simple_merge, merge.merge_partitioned,
+            merge.build_changeset) == before

@@ -20,11 +20,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from sparkmerge.errors import MergeConflictError
-from sparkmerge.merge import merge_partitioned, simple_merge
+from sparkmerge.merge import simple_merge
 from sparkmerge.table import SnapshotTable
 
 ROWS = [(1, "A", 10), (2, "A", 20), (3, "B", 30), (4, "C", 40)]
 SCHEMA = "k int, p string, v int"
+KEYS = ["k", "p"]  # one merge call for both kinds; a partitioned table rewrites only 'A'
 
 
 @pytest.fixture()
@@ -43,13 +44,6 @@ def rows(df):
 
 def create(spark, kind, path, df):
     return SnapshotTable.create(spark, path, df, "p" if kind == "partitioned" else None)
-
-
-def merge(spark, table, src):
-    if table.manifest()["partition_by"] is not None:
-        return merge_partitioned(spark, table, src.filter("p = 'A'"), ["k", "p"],
-                                 prune_scan=True)
-    return simple_merge(spark, table, src, "k")
 
 
 def assert_intact(spark, table, expected):
@@ -102,7 +96,7 @@ def run_merges(spark, kind, path, srcs, before_stage, after_stage, done):
 
         setattr(table, method, hooked)
         try:
-            outcome[name] = merge(spark, table, srcs[name])
+            outcome[name] = simple_merge(spark, table, srcs[name], KEYS)
         except Exception as e:  # noqa: BLE001 — the caller inspects it
             outcome[name] = e
         finally:
@@ -220,14 +214,14 @@ def test_set_property_races_a_merge(spark, base, tmp_path, kind, first):
 
         setattr(t, method, stage_then_set)
         with pytest.raises(MergeConflictError):
-            merge(spark, t, src)
+            simple_merge(spark, t, src, KEYS)
         assert t.properties() == {"owner": "ops"}
         expected = {1: base, 2: base}
     else:
         commit = other.commit
 
         def merge_then_commit(staged):
-            assert merge(spark, t, src).version == 2
+            assert simple_merge(spark, t, src, KEYS).version == 2
             return commit(staged)
 
         other.commit = merge_then_commit

@@ -75,7 +75,7 @@ def test_upsert_latest_value_equal_winner_is_keep(spark):
     s = spark.createDataFrame(
         [(1, "changed", 1), (1, "v", 2)], "k int, v string, seq int"
     )
-    cs = build_changeset(t, s, "k", delete="NO", source_latest_by="seq")
+    cs = build_changeset(t, latest_per_key(s, "k", "seq"), "k", delete="NO")
     assert [r["_action"] for r in cs.df.collect()] == ["KEEP"]
 
 
@@ -84,17 +84,9 @@ def test_upsert_latest_composes_with_broadcast_strategy(spark):
     composes; broadcast must yield the identical changeset."""
     feed = orders_upsert_feed(spark, SF_DIR)
     orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    a = build_changeset(
-        orders, feed, "o_orderkey", delete="NO", source_latest_by="src_seq"
-    )
-    b = build_changeset(
-        orders,
-        feed,
-        "o_orderkey",
-        delete="NO",
-        source_latest_by="src_seq",
-        strategy="broadcast",
-    )
+    latest = latest_per_key(feed, "o_orderkey", "src_seq")
+    a = build_changeset(orders, latest, "o_orderkey", delete="NO")
+    b = build_changeset(orders, latest, "o_orderkey", delete="NO", strategy="broadcast")
     fa = a.df.select("o_orderkey", "_action", "_new.o_orderstatus", "_new.o_totalprice")
     fb = b.df.select("o_orderkey", "_action", "_new.o_orderstatus", "_new.o_totalprice")
     assert same_rows(fa, fb)
